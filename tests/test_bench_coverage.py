@@ -52,3 +52,37 @@ def test_section_owner_targets_are_real_bench_sections():
     assert not missing, (
         f"SECTION_OWNER points at nonexistent sections: {missing}"
     )
+
+
+def test_harness_imports_from_the_engine_exist():
+    """Every ``from zvdb_spark... import name`` in the harnesses that
+    the suite never imports (bench.py, scripts/, perfbench/) names
+    something the engine still has, so deleting a public operator
+    cannot silently break one of them."""
+    import ast
+    import importlib
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "bench.py", *sorted(root.glob("scripts/*.py")),
+             *sorted(root.glob("perfbench/*.py"))]
+    missing, checked = [], 0
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.ImportFrom) and node.module
+                    and node.module.split(".")[0] == "zvdb_spark"):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                checked += 1
+                if hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ModuleNotFoundError:
+                    missing.append(
+                        f"{path.name}:{node.lineno} "
+                        f"{node.module}.{alias.name}"
+                    )
+    assert checked, "no engine imports found — the scan is broken"
+    assert not missing, f"harness imports of missing names: {missing}"

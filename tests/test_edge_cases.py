@@ -4,7 +4,9 @@
   throw (INVALID_ARRAY_INDEX_IN_ELEMENT_AT from a descending
   sequence());
 - per-shard top-k must keep the smallest ids among distance ties
-  (duplicate vectors are distinct rows, src/test_hnsw.zig:104-119);
+  (duplicate vectors are distinct rows, src/test_hnsw.zig:104-119),
+  on both plans of the blocked operators;
+- an over-size probe side is never collected onto the driver;
 - salted_join rejects join types it cannot preserve.
 """
 
@@ -107,43 +109,121 @@ def test_declared_queries_never_collect_table_data():
     assert marked == 1, f"driver-bounded marker count drifted: {marked}"
 
 
-def test_blocked_search_matches_partitioned(spark):
-    """exact_search_blocked (DataFrame probe side) returns the same
-    top-k as exact_search_partitioned (numpy probe side)."""
+_GRIDS = {"broadcast": {}, "cogroup": {"n_shards": 4, "n_blocks": 3}}
+
+
+@pytest.fixture(scope="module")
+def dup_vectors(spark):
+    """200 random 8-d rows plus the first 40 again under shifted ids:
+    duplicate vectors are distinct rows (src/test_hnsw.zig:104-119),
+    so equal scores must fall back to the neighbor-id tie-break."""
+    rng = np.random.default_rng(3)
+    mat = rng.random((200, 8))
+    ids = np.concatenate([np.arange(200), 1000 + np.arange(40)])
+    mat = np.vstack([mat, mat[:40]])
+    df = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
+        "vec_id long, emb array<double>",
+    ).localCheckpoint(eager=True)
+    probes = df.select(df.vec_id.alias("query_id"), df.emb.alias("qemb"))
+    return df, probes, ids, mat
+
+
+def _pair_tau(scores, frac):
+    """A threshold between two observed pair scores, no pair within
+    1e-9 of it, with about ``frac`` of the pairs below it."""
+    u = np.unique(scores)
+    lo = int(frac * len(u))
+    gap = np.nonzero(np.diff(u[lo:]) > 2e-9)[0][0] + lo
+    return (u[gap] + u[gap + 1]) / 2
+
+
+@pytest.mark.parametrize("metric", ["l2_sq", "cosine"])
+@pytest.mark.parametrize("grid", sorted(_GRIDS))
+@pytest.mark.parametrize(
+    "op", ["exact_search_blocked", "threshold_join_blocked"]
+)
+def test_blocked_paths_match_reference(spark, dup_vectors, op, grid, metric):
+    """Both plans of both blocked operators against a reference: the
+    crossJoin knn_join for top-k (rank for rank, id tie-break
+    included), a numpy brute force for the threshold join."""
     import pandas as pd
 
-    from zvdb_spark.operators.knn import shard_vectors
-    from zvdb_spark.operators.knn import (
-        exact_search_blocked,
-        exact_search_partitioned,
-    )
+    from zvdb_spark.operators import knn
 
-    rng = np.random.default_rng(3)
-    n, dim, k = 200, 8, 5
-    mat = rng.random((n, dim))
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in mat[i]]) for i in range(n)],
-        "vec_id long, emb array<double>",
-    )
-    probes = df.select(
-        df.vec_id.alias("query_id"), df.emb.alias("qemb")
-    )
-    blocked = (
-        exact_search_blocked(df, probes, k=k, n_shards=4, n_blocks=3)
+    df, probes, ids, mat = dup_vectors
+    kw = _GRIDS[grid]
+    if op == "exact_search_blocked":
+        cols = ["query_id", "neighbor_id", "rn"]
+        got = knn.exact_search_blocked(df, probes, k=5, metric=metric, **kw)
+        ref = knn.knn_join(df, probes, k=5, metric=metric)
+        got, ref = (
+            f.toPandas().sort_values(cols, ignore_index=True)
+            for f in (got, ref)
+        )
+        pd.testing.assert_frame_equal(got[cols], ref[cols])
+        assert np.allclose(got["score"], ref["score"], atol=1e-9)
+        return
+
+    if metric == "l2_sq":
+        s = ((mat[:, None, :] - mat[None, :, :]) ** 2).sum(axis=2)
+        tau = _pair_tau(s, 0.02)
+        keep = s < tau
+    else:
+        norm = np.sqrt((mat * mat).sum(axis=1))
+        s = (mat @ mat.T) / np.outer(norm, norm)
+        tau = _pair_tau(s, 0.98)
+        keep = s >= tau
+    for upper_only in (False, True):
+        mask = keep & (ids[None, :] > ids[:, None]) if upper_only else keep
+        r, c = np.nonzero(mask)
+        ref = pd.DataFrame(
+            {"query_id": ids[r], "neighbor_id": ids[c], "score": s[r, c]}
+        ).sort_values(["query_id", "neighbor_id"], ignore_index=True)
+        got = (
+            knn.threshold_join_blocked(
+                df, probes, tau=tau, metric=metric, upper_only=upper_only,
+                **kw,
+            )
+            .toPandas()
+            .sort_values(["query_id", "neighbor_id"], ignore_index=True)
+        )
+        assert len(ref) > len(ids)  # more than the self pairs
+        pd.testing.assert_frame_equal(
+            got[["query_id", "neighbor_id"]], ref[["query_id", "neighbor_id"]]
+        )
+        assert np.allclose(got["score"], ref["score"], atol=1e-9)
+
+
+def test_oversize_probe_side_never_reaches_driver(spark, dup_vectors,
+                                                  monkeypatch):
+    """The byte gate (rows x dim x 8) runs before any collect: a probe
+    side over _BCAST_PROBE_BYTES takes the cogroup grid without ever
+    being pulled onto the driver, whether or not its count is
+    supplied, and still matches the crossJoin reference."""
+    import pandas as pd
+
+    from zvdb_spark.operators import knn
+
+    def _no_collect(*args, **kwargs):
+        raise AssertionError("probe side collected past the byte gate")
+
+    monkeypatch.setattr(knn, "_BCAST_PROBE_BYTES", 1)
+    monkeypatch.setattr(knn, "_collect_probe_matrix", _no_collect)
+    df, probes, ids, _ = dup_vectors
+    cols = ["query_id", "neighbor_id", "rn"]
+    ref = (
+        knn.knn_join(df, probes, k=5)
         .toPandas()
-        .sort_values(["query_id", "rn"], ignore_index=True)
+        .sort_values(cols, ignore_index=True)
     )
-    sharded = shard_vectors(df, 4)
-    part = (
-        exact_search_partitioned(sharded, mat, k=k, dtype="float64")
-        .toPandas()
-        .sort_values(["query_id", "rn"], ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(
-        blocked[["query_id", "neighbor_id", "rn"]],
-        part[["query_id", "neighbor_id", "rn"]],
-    )
-    assert np.allclose(blocked["score"], part["score"], atol=1e-9)
+    for n_probes in (None, len(ids)):
+        got = (
+            knn.exact_search_blocked(df, probes, k=5, n_probes=n_probes)
+            .toPandas()
+            .sort_values(cols, ignore_index=True)
+        )
+        pd.testing.assert_frame_equal(got[cols], ref[cols])
 
 
 def test_salted_join_rejects_right_full(spark):

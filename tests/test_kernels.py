@@ -70,7 +70,8 @@ def test_cosine_zero_norm_null(spark):
 def test_auto_grid_uses_supplied_counts_without_scanning():
     """When cardinalities are supplied, _auto_grid must not touch the
     DataFrames at all (None stands in: any access would raise) — the
-    count() fallback costs two full scans per call at 100 TB."""
+    count() fallback costs a full scan per side at 100 TB — and counts
+    only the sides whose value it uses."""
     from zvdb_spark.operators.knn import _auto_grid
 
     n_shards, n_blocks = _auto_grid(
@@ -79,6 +80,10 @@ def test_auto_grid_uses_supplied_counts_without_scanning():
     )
     assert n_blocks == 1  # small probe side: corpus crosses ONCE
     assert n_shards == 5  # ceil(5000/_MIN_CELL_ROWS)
+    # an explicit block count needs no probe count at all
+    assert _auto_grid(
+        None, None, None, 3, n_corpus=10_000, parallelism=32
+    ) == (10, 3)  # ceil(10_000/_MIN_CELL_ROWS)
 
 
 def test_auto_grid_minimizes_replication():

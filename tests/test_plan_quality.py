@@ -62,27 +62,32 @@ def test_explicit_broadcast_zero_shuffle_joins(spark, sf_dir):
     assert a["n_sortmerge_joins"] == 0
 
 
-def test_partitioned_knn_single_shuffle(spark, sf_dir):
-    """Batched exact kNN over a pre-partitioned checkpointed corpus:
-    the ONLY Exchange in the plan is the P*k-row merge window — the
-    corpus itself never re-shuffles per search (the round-2 fix for
-    AQE coalescing the shard fan-out into a few tasks)."""
+def test_knn_batch_probe_side_crosses_no_exchange(spark, sf_dir):
+    """Batched exact kNN at fixture size takes the broadcast-probe
+    plan: the probe matrix rides a broadcast, so the plan holds no
+    cogroup and no probe replication (Generate). The corpus crosses
+    one Exchange into the GEMM tasks and the k-row merge window one
+    more — which Spark drops when the corpus lands in one partition,
+    as q_knn_batch's fixture corpus does. The probe side crosses
+    none."""
     from pyspark.sql import functions as F
 
-    import numpy as np
+    from zvdb_spark.operators.knn import exact_search_blocked
+    from zvdb_spark.queries.vector import _emb
 
-    from zvdb_spark.functions.vector import as_double_array
-    from zvdb_spark.operators.knn import exact_search_partitioned, shard_vectors
-    from zvdb_spark.sources.tables import load
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array("embedding").alias("emb")
+    e = _emb(spark, sf_dir)
+    probes = e.select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
-    sharded = shard_vectors(emb, 8).localCheckpoint(eager=True)
-    q = np.zeros((4, len(emb.select("emb").head()[0])))
-    a = plan_audit(exact_search_partitioned(sharded, q, k=3, dtype="float64"))
-    assert a["n_exchanges"] == 1, a["plan"]
-    assert a["n_sortmerge_joins"] == 0
+    for df, n_exchanges in (
+        (all_queries()["q_knn_batch"].fn(spark, sf_dir), 1),
+        (exact_search_blocked(e, probes, k=5, n_shards=4), 2),
+    ):
+        a = plan_audit(df)
+        assert "MapInPandas" in a["plan"], a["plan"]
+        assert "FlatMapCoGroupsInPandas" not in a["plan"], a["plan"]
+        assert "Generate" not in a["plan"], a["plan"]
+        assert a["n_exchanges"] == n_exchanges, a["plan"]
 
 
 def test_graph_search_moves_no_index_data(spark, sf_dir):

@@ -1,12 +1,15 @@
-"""Reusable k-NN operators — the engine's public similarity-search
-API (the reference's ``search``, ``src/hnsw.zig:194-236``, as a
-DataFrame operator).
+"""Exact k-NN operators — the engine's public similarity-search API
+(the reference's ``search``, ``src/hnsw.zig:194-236``, as DataFrame
+operators).
 
-``knn_join`` is the general form: every row of ``queries`` matched to
-its k nearest ``corpus`` rows. The exact path is a crossJoin + window
-top-k (quadratic by contract); callers at scale pass a blocked/
-bucketed candidate pair frame instead (see operators/ann.py) — the
-ranking code is identical.
+``knn_join`` is the crossJoin + window reference: quadratic by
+contract, scored by the Catalyst kernels of functions/vector.py, and
+the oracle the scaled operators are tested against.
+``exact_search_blocked`` (top-k) and ``threshold_join_blocked`` (all
+pairs under a threshold) are the scaled operators. Both run one pair
+producer, ``_scored_pairs``: a shard-local numpy GEMM per task whose
+kept pairs are then (top-k only) merged k rows per query — the
+partition-then-merge shape of distributed top-k.
 """
 
 from __future__ import annotations
@@ -18,25 +21,6 @@ from pyspark.sql import functions as F
 from zvdb_spark.functions.vector import cosine_sim, dist_sq
 
 
-def shard_vectors(
-    emb: DataFrame, n_partitions: int, id_col: str = "vec_id", vec_col: str = "emb"
-) -> DataFrame:
-    """Deterministic hash-shard assignment for the exact search path
-    (replaces the reference's global id counter under mutex,
-    src/hnsw.zig:77): hash-mod on the id.
-
-    The output is EXPLICITLY round-robin repartitioned to exactly
-    n_partitions perfectly-balanced physical partitions: callers
-    checkpoint it, and the per-shard search (mapInPandas) then runs
-    one task per partition with no per-search shuffle — and no AQE
-    coalescing of a grouping shuffle into a handful of tasks (AQE
-    shrinks small implicit shuffles by byte size, which would
-    serialize the GEMM fan-out)."""
-    return emb.withColumn(
-        "pid", (F.crc32(F.col(id_col).cast("string")) % n_partitions).cast("int")
-    ).repartition(n_partitions)
-
-
 def _score(metric: str, a: str, b: str) -> tuple[Column, bool]:
     """Return (score column, ascending?) for a metric name."""
     if metric == "l2_sq":
@@ -44,6 +28,18 @@ def _score(metric: str, a: str, b: str) -> tuple[Column, bool]:
     if metric == "cosine":
         return cosine_sim(a, b), False
     raise ValueError(f"unknown metric {metric!r}; use 'l2_sq' or 'cosine'")
+
+
+def _rank_top_k(pairs: DataFrame, query_col: str, k: int,
+                asc: bool) -> DataFrame:
+    """Each query's k best pairs, numbered ``rn`` 1..k by score, ties
+    broken by neighbor id for determinism (src/test_hnsw.zig:275-316
+    consistency test)."""
+    score = F.col("score").asc() if asc else F.col("score").desc()
+    w = W.partitionBy(query_col).orderBy(score, F.col("neighbor_id").asc())
+    return pairs.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= k
+    )
 
 
 def knn_join(
@@ -65,39 +61,12 @@ def knn_join(
     (src/test_hnsw.zig:275-316 consistency test).
     """
     score, asc = _score(metric, corpus_vec, query_vec)
-    ordering = [F.col("score").asc() if asc else F.col("score").desc(),
-                F.col("neighbor_id").asc()]
-    w = W.partitionBy(query_id).orderBy(*ordering)
     pairs = queries.crossJoin(corpus).select(
         F.col(query_id),
         F.col(corpus_id).alias("neighbor_id"),
         score.alias("score"),
     )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-    )
-
-
-def knn_single(
-    corpus: DataFrame,
-    query_vec_lit: list[float],
-    k: int,
-    metric: str = "l2_sq",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "emb",
-) -> DataFrame:
-    """Single-probe k-NN (the reference's exact ``search`` signature):
-    one literal query vector against the corpus. Plan: scan ->
-    TakeOrderedAndProject; O(N) work, no shuffle."""
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec_lit]).cast("array<double>")
-    score, asc = _score(metric, corpus_vec, "q")
-    df = corpus.withColumn("q", qcol).select(
-        F.col(corpus_id).alias("neighbor_id"), score.alias("score")
-    )
-    ordering = [F.col("score").asc() if asc else F.col("score").desc(),
-                F.col("neighbor_id").asc()]
-    return df.orderBy(*ordering).limit(k)
+    return _rank_top_k(pairs, query_id, k, asc)
 
 
 def _topk_by_dist_id(d, ids, kk: int):
@@ -238,9 +207,10 @@ _MAX_SIDE_ROWS = 65536     # per-task matrix bound (64 MB at 128-d f64)
 _CELL_CHUNK_ELEMS = 1 << 24  # distance-matrix elements (128 MB f64)
 
 # Broadcast-probe gate (round 14): a probe side at or below this many
-# ROWS (and _BCAST_PROBE_BYTES of float64 payload, checked after the
-# Arrow collect) rides an executor BROADCAST instead of being
-# replicated through the exchange. At the 1M x 10k bench shape the
+# ROWS and _BCAST_PROBE_BYTES of float64 payload (rows x dim x 8,
+# checked BEFORE anything is collected) rides an executor BROADCAST
+# instead of being replicated through the exchange. At the 1M x 10k
+# bench shape the
 # exploded probe side was 245 copies x 10k rows x ~1.1 KB ≈ 2.7 GB of
 # shuffle write+read plus one Arrow decode + np.stack of the full
 # probe batch PER TASK; the same 10 MB probe matrix broadcasts once
@@ -251,21 +221,47 @@ _BCAST_PROBE_ROWS = 65536
 _BCAST_PROBE_BYTES = 1 << 27  # 128 MB of f64 probe matrix
 
 
+def _decode(pdf, id_col: str, vec_col: str):
+    """(int64 ids, C-contiguous float64 matrix) of one pandas batch —
+    the one place a vector column becomes a numpy matrix."""
+    import numpy as np
+
+    ids = pdf[id_col].to_numpy().astype(np.int64, copy=False)
+    if not len(ids):
+        return ids, np.empty((0, 0), dtype=np.float64)
+    return ids, np.ascontiguousarray(
+        np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    )
+
+
+def _score_chunks(qids, qarr, cpdf, metric: str, emit):
+    """The per-task kernel: decode one corpus batch, score it against
+    the probe matrix one query chunk at a time, and yield the
+    (query_id, neighbor_id, score) frame ``emit`` keeps from each
+    chunk. Chunking bounds the distance matrix to _CELL_CHUNK_ELEMS
+    however big the batch is; rows are independent, so it changes
+    nothing but peak memory."""
+    import pandas as pd
+
+    if not len(cpdf):
+        return
+    ids, mat = _decode(cpdf, "vec_id", "emb")
+    qchunk = max(256, _CELL_CHUNK_ELEMS // len(ids))
+    for lo in range(0, len(qarr), qchunk):
+        q, n, s = emit(
+            qids[lo : lo + qchunk], ids,
+            _pair_scores(qarr[lo : lo + qchunk], mat, metric),
+        )
+        yield pd.DataFrame({"query_id": q, "neighbor_id": n, "score": s})
+
+
 def _collect_probe_matrix(probes: DataFrame, query_id: str,
                           query_vec: str):
     """(ids, matrix) of a SMALL probe side via one Arrow ``toPandas``
     (guide: Arrow for driver transfers; the driver holds only the
     gate-bounded probe batch, never corpus rows)."""
-    import numpy as np
-
-    pdf = probes.select(query_id, query_vec).toPandas()
-    qids = pdf[query_id].to_numpy().astype(np.int64, copy=False)
-    if not len(qids):
-        return qids, np.empty((0, 0), dtype=np.float64)
-    qarr = np.ascontiguousarray(
-        np.stack(pdf[query_vec].to_numpy()).astype(np.float64)
-    )
-    return qids, qarr
+    return _decode(probes.select(query_id, query_vec).toPandas(),
+                   query_id, query_vec)
 
 
 def _bcast_probe_map(corpus: DataFrame, fn, n_shards: int,
@@ -291,6 +287,8 @@ def _bcast_probe_map(corpus: DataFrame, fn, n_shards: int,
     return c.repartition(n_shards, key).mapInPandas(fn, _PAIR_SCHEMA)
 
 
+
+
 def _auto_grid(corpus: DataFrame, probes: DataFrame,
                n_shards: int | None, n_blocks: int | None,
                n_corpus: int | None = None,
@@ -299,9 +297,11 @@ def _auto_grid(corpus: DataFrame, probes: DataFrame,
     """Pick the (shards x blocks) GEMM grid from row counts. Callers
     that know their cardinalities (e.g. from parquet footer metadata,
     sources/tables.py:table_row_count) pass them via
-    ``n_corpus``/``n_probes`` — the ``count()`` fallback costs two
-    extra Spark jobs per call, which at 100 TB means two extra full
-    scans before any real work.
+    ``n_corpus``/``n_probes`` — the ``count()`` fallback costs an
+    extra Spark job per side, which at 100 TB means a full scan before
+    any real work, so a side is counted only when its count is used:
+    the corpus whenever a value is picked, the probes only for
+    ``n_blocks``.
 
     Sizing: shuffle volume is C x B + Q x P rows. The block count is
     the replication-minimizing split under a task budget
@@ -322,9 +322,7 @@ def _auto_grid(corpus: DataFrame, probes: DataFrame,
     if parallelism is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
         parallelism = int(env) if env else (os.cpu_count() or 8)
-    rows_c = n_corpus if n_corpus is not None else corpus.count()
-    rows_q = n_probes if n_probes is not None else probes.count()
-    rows_c, rows_q = max(int(rows_c), 1), max(int(rows_q), 1)
+    rows_c = max(int(n_corpus if n_corpus is not None else corpus.count()), 1)
     t = 4 * max(int(parallelism), 1)
 
     def _clamp(v: int, rows: int) -> int:
@@ -332,12 +330,93 @@ def _auto_grid(corpus: DataFrame, probes: DataFrame,
         return max(v, min(_MAX_GRID, -(-rows // _MAX_SIDE_ROWS)))
 
     if n_blocks is None:
+        rows_q = max(int(n_probes if n_probes is not None
+                         else probes.count()), 1)
         b0 = int(round(math.sqrt(t * rows_q / rows_c))) or 1
         n_blocks = _clamp(b0, rows_q)
     if n_shards is None:
         p0 = max(-(-rows_c // _TARGET_CELL_ROWS), -(-t // n_blocks))
         n_shards = _clamp(p0, rows_c)
     return n_shards, n_blocks
+
+
+def _scored_pairs(corpus: DataFrame, probes: DataFrame, metric: str, emit,
+                  n_shards: int | None, n_blocks: int | None,
+                  corpus_id: str, corpus_vec: str, query_id: str,
+                  query_vec: str, n_corpus: int | None,
+                  n_probes: int | None) -> DataFrame:
+    """(query_id, neighbor_id, score) rows of every probe x corpus
+    pair that ``emit`` keeps, each task scoring its pairs with
+    ``_score_chunks``. ``emit(query_ids, corpus_ids, scores)`` maps
+    one chunk's score matrix to the three arrays it keeps.
+
+    The plan is picked by probe-side size. A probe side of at most
+    _BCAST_PROBE_ROWS rows and _BCAST_PROBE_BYTES of float64 payload
+    is collected once and broadcast, and the corpus crosses one hash
+    exchange (``_bcast_probe_map``). Anything larger — or a caller
+    asking for more than one probe block — takes the blocked cogroup
+    grid (``_replicated_cogroup``), whose task memory stays bounded at
+    any probe count. The probe count (and the vector width the byte
+    gate needs) is read before anything is collected: one job folds
+    both when ``n_probes`` is not supplied, one single-row job reads
+    the width when it is. A caller that pins the whole grid without
+    ``n_probes`` is never counted and goes straight to the grid.
+    """
+    import numpy as np
+    import pandas as pd
+
+    spark = corpus.sparkSession
+    parallelism = spark.sparkContext.defaultParallelism
+    if n_blocks is None or (
+        n_blocks == 1 and (n_shards is None or n_probes is not None)
+    ):
+        dim = None
+        if n_probes is None:
+            n_probes, dim = probes.agg(
+                F.count(F.lit(1)), F.max(F.size(query_vec))
+            ).head()
+        elif n_probes <= _BCAST_PROBE_ROWS:
+            row = probes.select(F.size(query_vec)).head()
+            dim = row[0] if row else None
+        if (n_probes <= _BCAST_PROBE_ROWS
+                and n_probes * (dim or 0) * 8 <= _BCAST_PROBE_BYTES):
+            qids, qarr = _collect_probe_matrix(probes, query_id, query_vec)
+            if not len(qids):
+                return spark.createDataFrame([], _PAIR_SCHEMA)
+            n_shards, _ = _auto_grid(corpus, probes, n_shards, 1, n_corpus,
+                                     len(qids), parallelism)
+            # Lifetime: the returned plan pins this broadcast (the task
+            # closure holds ``bq``) and every action on the lazy result
+            # re-reads it, so it is not unpersisted here. Once the caller
+            # drops the DataFrame and everything derived from it, Spark's
+            # ContextCleaner frees the driver and executor copies on the
+            # next JVM GC.
+            bq = spark.sparkContext.broadcast((qids, qarr))
+
+            def _task(batches):
+                qi, qa = bq.value
+                for cpdf in batches:
+                    yield from _score_chunks(qi, qa, cpdf, metric, emit)
+
+            return _bcast_probe_map(corpus, _task, n_shards, corpus_id,
+                                    corpus_vec)
+
+    n_shards, n_blocks = _auto_grid(corpus, probes, n_shards, n_blocks,
+                                    n_corpus, n_probes, parallelism)
+
+    def _cell(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
+        qi, qa = _decode(qpdf, "query_id", "qemb")
+        frames = list(_score_chunks(qi, qa, cpdf, metric, emit))
+        if frames:
+            return pd.concat(frames, ignore_index=True)
+        return pd.DataFrame({"query_id": np.empty(0, np.int64),
+                             "neighbor_id": np.empty(0, np.int64),
+                             "score": np.empty(0, np.float64)})
+
+    return _replicated_cogroup(
+        corpus, probes, _cell, _PAIR_SCHEMA, n_shards, n_blocks,
+        corpus_id, corpus_vec, query_id, query_vec,
+    )
 
 
 def exact_search_blocked(
@@ -355,142 +434,37 @@ def exact_search_blocked(
     n_probes: int | None = None,
 ) -> DataFrame:
     """Exact batched k-NN where the probe side is a DataFrame: each
-    (probe-block x corpus-shard) cell computes a GEMM top-k with exact
-    (distance, id) tie handling, then a global per-query top-k merge
-    carries only B*P*k candidate rows per query block — never the
-    corpus. Returns (query_id, neighbor_id, score, rn), rn in 1..k.
+    task computes a GEMM top-k with exact (distance, id) tie handling,
+    then a global per-query top-k merge carries only k candidate rows
+    per task and query — never the corpus. Returns (query_id,
+    neighbor_id, score, rn), rn in 1..k.
 
-    Probe sides at or below _BCAST_PROBE_ROWS take the broadcast-probe
-    path (round 14): the probe matrix is Arrow-collected once and
-    broadcast, the corpus crosses its single exchange as before, and
-    every per-pair distance / per-task top-k / global merge expression
-    is the SAME code — per-task top-k is lossless for the global top-k
-    under any partitioning (a row dropped past local rank k has k
-    better rows in its task), so the selected (query, neighbor, rn)
-    rows are identical to the blocked grid's. Scores carry the
-    standard GEMM-shape caveat every grid change here has had: BLAS
-    summation order varies with matrix shape, so a pair's f64 score
-    can move by ~1e-15 across partitionings (equal VECTORS still tie
-    exactly within a run — identical columns of one GEMM — so the id
-    tie-break is stable). Pinned by the oracled q_knn_batch hash and
-    test_blocked_search_matches_partitioned.
+    Small probe sides ride a broadcast, larger ones the blocked
+    cogroup grid (see ``_scored_pairs``). Per-task top-k is lossless
+    for the global top-k under any partitioning (a row dropped past
+    local rank k has k better rows in its task), so both plans select
+    the same (query, neighbor, rn) rows. Scores carry the standard
+    GEMM-shape caveat: BLAS summation order varies with matrix shape,
+    so a pair's f64 score can move by ~1e-15 across partitionings
+    (equal VECTORS still tie exactly within a run — identical columns
+    of one GEMM — so the id tie-break is stable). Pinned by the
+    oracled q_knn_batch hash and test_blocked_paths_match_reference.
     """
     import numpy as np
-    import pandas as pd
 
     asc = metric == "l2_sq"
-    rows_q = n_probes
-    if rows_q is None and not (n_shards is not None and n_blocks is not None):
-        rows_q = probes.count()  # _auto_grid would have run this count
-    if (
-        rows_q is not None
-        and rows_q <= _BCAST_PROBE_ROWS
-        and n_blocks in (None, 1)
-    ):
-        qids, qarr = _collect_probe_matrix(probes, query_id, query_vec)
-        if qarr.nbytes <= _BCAST_PROBE_BYTES:
-            spark = corpus.sparkSession
-            if not len(qids):
-                return spark.createDataFrame(
-                    [], f"{_PAIR_SCHEMA}, rn int"
-                )
-            n_shards, _ = _auto_grid(
-                corpus, probes, n_shards, 1, n_corpus, len(qids),
-                parallelism=spark.sparkContext.defaultParallelism,
-            )
-            bq = spark.sparkContext.broadcast((qids, qarr))
 
-            def _shard_topk(batches):
-                qi_all, qa = bq.value
-                for cpdf in batches:
-                    if not len(cpdf):
-                        continue
-                    ids = cpdf["vec_id"].to_numpy()
-                    mat = np.ascontiguousarray(
-                        np.stack(cpdf["emb"].to_numpy()).astype(np.float64)
-                    )
-                    kk = min(k, mat.shape[0])
-                    qchunk = max(
-                        256, _CELL_CHUNK_ELEMS // max(mat.shape[0], 1)
-                    )
-                    for lo in range(0, len(qa), qchunk):
-                        d = _pair_scores(qa[lo : lo + qchunk], mat, metric)
-                        rank_d = d if asc else -d
-                        part = _topk_by_dist_id(rank_d, ids, kk)
-                        yield pd.DataFrame(
-                            {
-                                "query_id": np.repeat(
-                                    qi_all[lo : lo + qchunk], kk
-                                ),
-                                "neighbor_id": ids[part.ravel()],
-                                "score": np.take_along_axis(
-                                    d, part, axis=1
-                                ).ravel(),
-                            }
-                        )
+    def _emit_topk(qi, ids, d):
+        kk = min(k, len(ids))
+        part = _topk_by_dist_id(d if asc else -d, ids, kk)
+        return (np.repeat(qi, kk), ids[part.ravel()],
+                np.take_along_axis(d, part, axis=1).ravel())
 
-            per_cell = _bcast_probe_map(
-                corpus, _shard_topk, n_shards, corpus_id, corpus_vec
-            )
-            ordering = [
-                F.col("score").asc() if asc else F.col("score").desc(),
-                F.col("neighbor_id").asc(),
-            ]
-            w = W.partitionBy("query_id").orderBy(*ordering)
-            return per_cell.withColumn(
-                "rn", F.row_number().over(w)
-            ).filter(F.col("rn") <= k)
-
-    n_shards, n_blocks = _auto_grid(
-        corpus, probes, n_shards, n_blocks, n_corpus, rows_q,
-        parallelism=corpus.sparkSession.sparkContext.defaultParallelism,
+    pairs = _scored_pairs(
+        corpus, probes, metric, _emit_topk, n_shards, n_blocks,
+        corpus_id, corpus_vec, query_id, query_vec, n_corpus, n_probes,
     )
-
-    def _cell(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(qpdf) or not len(cpdf):
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "score": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "score": "float64"})
-        qids = qpdf["query_id"].to_numpy()
-        qarr = np.ascontiguousarray(
-            np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
-        )
-        ids = cpdf["vec_id"].to_numpy()
-        mat = np.ascontiguousarray(
-            np.stack(cpdf["emb"].to_numpy()).astype(np.float64)
-        )
-        kk = min(k, mat.shape[0])
-        # query-chunked scoring bounds the distance matrix to
-        # _CELL_CHUNK_ELEMS no matter how big the cell is (cells got
-        # ~30x bigger in the round-13 grid; per-row results are
-        # independent, so chunking changes nothing but peak memory)
-        qchunk = max(256, _CELL_CHUNK_ELEMS // max(mat.shape[0], 1))
-        out_q, out_n, out_s = [], [], []
-        for lo in range(0, len(qarr), qchunk):
-            d = _pair_scores(qarr[lo : lo + qchunk], mat, metric)
-            rank_d = d if asc else -d
-            part = _topk_by_dist_id(rank_d, ids, kk)
-            out_q.append(np.repeat(qids[lo : lo + qchunk], kk))
-            out_n.append(ids[part.ravel()])
-            out_s.append(np.take_along_axis(d, part, axis=1).ravel())
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "score": np.concatenate(out_s),
-            }
-        )
-
-    per_cell = _replicated_cogroup(
-        corpus, probes, _cell, _PAIR_SCHEMA, n_shards, n_blocks,
-        corpus_id, corpus_vec, query_id, query_vec,
-    )
-    ordering = [F.col("score").asc() if asc else F.col("score").desc(),
-                F.col("neighbor_id").asc()]
-    w = W.partitionBy("query_id").orderBy(*ordering)
-    return per_cell.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
-    )
+    return _rank_top_k(pairs, "query_id", k, asc)
 
 
 def threshold_join_blocked(
@@ -509,272 +483,28 @@ def threshold_join_blocked(
     n_probes: int | None = None,
 ) -> DataFrame:
     """All-pairs similarity join under a threshold with the probe side
-    as a DataFrame (same block x shard fan-out as
-    exact_search_blocked). Pairs passing the threshold are emitted
-    directly from each cell — no candidate materialization, no merge
-    stage. l2_sq keeps score < tau; cosine keeps score >= tau;
-    upper_only emits only neighbor_id > query_id.
+    as a DataFrame (same plans as exact_search_blocked). Pairs passing
+    the threshold are emitted directly from each task — no candidate
+    materialization, no merge stage. l2_sq keeps score < tau; cosine
+    keeps score >= tau; upper_only emits only neighbor_id > query_id.
 
-    Small probe sides take the same broadcast-probe path as
-    exact_search_blocked (round 14) — identical per-pair mask with no
-    cross-pair dependence, so partition layout cannot change the
-    emitted pairs except for a pair whose f64 score sits within ~1e-15
-    of tau (the GEMM-shape caveat described in exact_search_blocked —
-    far below any sensible threshold margin; pinned by the oracled
-    q_sim_join_threshold / q_dedup_vectors / q_dedup_embedding
-    hashes).
+    The mask has no cross-pair dependence, so the plan cannot change
+    the emitted pairs except for a pair whose f64 score sits within
+    ~1e-15 of tau (the GEMM-shape caveat described in
+    exact_search_blocked — far below any sensible threshold margin;
+    pinned by the oracled q_sim_join_threshold / q_dedup_vectors /
+    q_dedup_embedding hashes).
     """
     import numpy as np
-    import pandas as pd
 
-    rows_q = n_probes
-    if rows_q is None and not (n_shards is not None and n_blocks is not None):
-        rows_q = probes.count()  # _auto_grid would have run this count
-    if (
-        rows_q is not None
-        and rows_q <= _BCAST_PROBE_ROWS
-        and n_blocks in (None, 1)
-    ):
-        qids_b, qarr_b = _collect_probe_matrix(probes, query_id, query_vec)
-        if qarr_b.nbytes <= _BCAST_PROBE_BYTES:
-            spark = corpus.sparkSession
-            if not len(qids_b):
-                return spark.createDataFrame([], _PAIR_SCHEMA)
-            n_shards, _ = _auto_grid(
-                corpus, probes, n_shards, 1, n_corpus, len(qids_b),
-                parallelism=spark.sparkContext.defaultParallelism,
-            )
-            bq = spark.sparkContext.broadcast((qids_b, qarr_b))
+    def _emit_pairs(qi, ids, s):
+        mask = s < tau if metric == "l2_sq" else s >= tau
+        if upper_only:
+            mask &= ids[None, :] > qi[:, None]
+        r, c = np.nonzero(mask)
+        return qi[r], ids[c], s[r, c]
 
-            def _shard_pairs(batches):
-                qi_all, qa = bq.value
-                for cpdf in batches:
-                    if not len(cpdf):
-                        continue
-                    ids = cpdf["vec_id"].to_numpy()
-                    mat = np.ascontiguousarray(
-                        np.stack(cpdf["emb"].to_numpy()).astype(np.float64)
-                    )
-                    qchunk = max(
-                        256, _CELL_CHUNK_ELEMS // max(mat.shape[0], 1)
-                    )
-                    for lo in range(0, len(qa), qchunk):
-                        qi = qi_all[lo : lo + qchunk]
-                        score = _pair_scores(
-                            qa[lo : lo + qchunk], mat, metric
-                        )
-                        mask = (
-                            score < tau if metric == "l2_sq"
-                            else score >= tau
-                        )
-                        if upper_only:
-                            mask &= ids[None, :] > qi[:, None]
-                        r, c = np.nonzero(mask)
-                        yield pd.DataFrame(
-                            {
-                                "query_id": qi[r],
-                                "neighbor_id": ids[c],
-                                "score": score[r, c],
-                            }
-                        )
-
-            return _bcast_probe_map(
-                corpus, _shard_pairs, n_shards, corpus_id, corpus_vec
-            )
-
-    n_shards, n_blocks = _auto_grid(
-        corpus, probes, n_shards, n_blocks, n_corpus, rows_q,
-        parallelism=corpus.sparkSession.sparkContext.defaultParallelism,
+    return _scored_pairs(
+        corpus, probes, metric, _emit_pairs, n_shards, n_blocks,
+        corpus_id, corpus_vec, query_id, query_vec, n_corpus, n_probes,
     )
-
-    def _cell(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(qpdf) or not len(cpdf):
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "score": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "score": "float64"})
-        qids = qpdf["query_id"].to_numpy()
-        qarr = np.ascontiguousarray(
-            np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
-        )
-        ids = cpdf["vec_id"].to_numpy()
-        mat = np.ascontiguousarray(
-            np.stack(cpdf["emb"].to_numpy()).astype(np.float64)
-        )
-        qchunk = max(256, _CELL_CHUNK_ELEMS // max(mat.shape[0], 1))
-        out_q, out_n, out_s = [], [], []
-        for lo in range(0, len(qarr), qchunk):
-            qi = qids[lo : lo + qchunk]
-            score = _pair_scores(qarr[lo : lo + qchunk], mat, metric)
-            mask = score < tau if metric == "l2_sq" else score >= tau
-            if upper_only:
-                mask &= ids[None, :] > qi[:, None]
-            r, c = np.nonzero(mask)
-            out_q.append(qi[r])
-            out_n.append(ids[c])
-            out_s.append(score[r, c])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "score": np.concatenate(out_s),
-            }
-        )
-
-    return _replicated_cogroup(
-        corpus, probes, _cell, _PAIR_SCHEMA, n_shards, n_blocks,
-        corpus_id, corpus_vec, query_id, query_vec,
-    )
-
-
-def exact_search_partitioned(
-    sharded: DataFrame,
-    queries,
-    k: int = 10,
-    query_ids=None,
-    dtype: str = "float32",
-    chunk: int = 2048,
-) -> DataFrame:
-    """Exact batched k-NN at scale: per-shard vectorized top-k
-    (numpy matmul over the Arrow batch — the columnar/SIMD execution
-    the reference lists as future work, benchmarks/benchmark.md:37-47)
-    followed by a global per-query top-k merge.
-
-    Work: each shard computes distances query-batch x shard-matrix in
-    one BLAS call and keeps only k rows per query, so the shuffle
-    carries P*k rows per query, never the corpus. This is the pattern
-    that holds at 100 TB: shard-local heaps + k-row merge, identical
-    to the reference's heap+merge (src/hnsw.zig:202) but shared-nothing.
-
-    Runs via mapInPandas over the corpus's EXISTING partitions (a
-    shard = a physical partition; Arrow batch splits within a
-    partition are harmless because the global merge re-ranks), so a
-    pre-partitioned checkpointed corpus is searched with zero corpus
-    shuffle and full task fan-out.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if query_ids is None:
-        query_ids = np.arange(len(queries))
-    np_dtype = np.dtype(dtype)  # f32 default: the reference's element
-    # type (benchmarks use f32 vectors) — half the memory traffic of f64
-    qarr = np.ascontiguousarray(np.asarray(queries, dtype=np_dtype))
-    qids = np.asarray(query_ids, dtype=np.int64)
-    qnorm = (qarr.astype(np.float64) ** 2).sum(axis=1).astype(np_dtype)
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def _shard_topk(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            mat = np.ascontiguousarray(
-                np.stack(pdf["emb"].to_numpy()).astype(np_dtype)
-            )
-            xnorm = (mat.astype(np.float64) ** 2).sum(axis=1).astype(np_dtype)
-            kk = min(k, mat.shape[0])
-            # chunked GEMM: bounds the distance-matrix working set to
-            # chunk x |shard| so it stays cache/memory friendly
-            for lo in range(0, len(qarr), chunk):
-                qc = qarr[lo : lo + chunk]
-                # ||q - x||^2 = ||q||^2 + ||x||^2 - 2 q.x (one GEMM)
-                d = (
-                    qnorm[lo : lo + chunk, None]
-                    + xnorm[None, :]
-                    - 2.0 * (qc @ mat.T)
-                )
-                part = _topk_by_dist_id(d, ids, kk)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids[lo : lo + chunk], kk),
-                        "neighbor_id": ids[part.ravel()],
-                        "score": np.take_along_axis(d, part, axis=1)
-                        .ravel()
-                        .astype(np.float64),
-                    }
-                )
-
-    per_shard = sharded.select("vec_id", "emb").mapInPandas(_shard_topk, schema)
-    w = W.partitionBy("query_id").orderBy("score", "neighbor_id")
-    return (
-        per_shard.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-    )
-
-
-def threshold_join_partitioned(
-    sharded: DataFrame,
-    queries,
-    query_ids,
-    tau: float,
-    metric: str = "l2_sq",
-    upper_only: bool = False,
-    chunk: int = 2048,
-) -> DataFrame:
-    """All-pairs similarity join under a threshold, vectorized: each
-    shard computes probe-block x shard distances in one GEMM and emits
-    only pairs passing the threshold — no candidate materialization,
-    no global merge stage (the filter is final).
-
-    metric 'l2_sq' keeps pairs with dist_sq < tau; 'cosine' keeps
-    pairs with cosine >= tau. upper_only emits only neighbor_id >
-    query_id (unordered-pair form). float64 GEMM: the 1e-15
-    accumulation difference vs the HOF kernel is far below any
-    sensible threshold margin.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    qarr = np.ascontiguousarray(np.asarray(queries, dtype=np.float64))
-    qids = np.asarray(query_ids, dtype=np.int64)
-    qnorm = (qarr * qarr).sum(axis=1)
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def _shard_pairs(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            mat = np.ascontiguousarray(
-                np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            )
-            xnorm = (mat * mat).sum(axis=1)
-            for lo in range(0, len(qarr), chunk):
-                qc, qn, qi = (
-                    qarr[lo : lo + chunk],
-                    qnorm[lo : lo + chunk],
-                    qids[lo : lo + chunk],
-                )
-                g = qc @ mat.T
-                if metric == "l2_sq":
-                    score = qn[:, None] + xnorm[None, :] - 2.0 * g
-                    mask = score < tau
-                else:  # cosine
-                    denom = np.sqrt(qn)[:, None] * np.sqrt(xnorm)[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        score = np.where(denom > 0, g / denom, np.nan)
-                    mask = score >= tau
-                if upper_only:
-                    mask &= ids[None, :] > qi[:, None]
-                r, c = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {"query_id": qi[r], "neighbor_id": ids[c], "score": score[r, c]}
-                )
-
-    return sharded.select("vec_id", "emb").mapInPandas(_shard_pairs, schema)

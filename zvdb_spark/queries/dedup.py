@@ -459,8 +459,8 @@ FROM p WHERE c >= {COSINE_TAU}
 @register("q_dedup_embedding", oracle=_EMB_ORACLE, tags=("dedup", "embedding"))
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (semantic dedup), via the
-    DataFrame-native block-matrix threshold join (cosine metric, both
-    sides DataFrames — no driver-side collect). Exact result contract;
+    DataFrame-native threshold join (cosine metric, both sides
+    DataFrames — no corpus data on the driver). Exact result contract;
     the candidate-pruned variant for scale composes the LSH band
     pattern with the same verifier."""
     from zvdb_spark.operators.knn import threshold_join_blocked

@@ -116,16 +116,18 @@ def q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched multi-query k-NN: every vector's top-k neighbors
     (self included, dist 0 — mirrors reference self-match semantics).
 
-    Implementation: block-matrix exact search with BOTH sides as
-    DataFrames (operators/knn.py:exact_search_blocked) — probes are
-    hash-blocked, the corpus hash-sharded, each (block x shard) cell
-    computes one GEMM top-k inside a cogrouped applyInPandas task, and
-    the global merge carries only k candidates per cell per query.
-    This is the columnar/SIMD execution the reference lists as future
-    work (benchmarks/benchmark.md:37-47), with no driver-side collect
-    of table data anywhere: task memory stays bounded at any corpus
-    size (float64 GEMM; the 1e-15 accumulation-order difference vs the
-    HOF kernel vanishes under round(4)).
+    Implementation: exact search with BOTH sides as DataFrames
+    (operators/knn.py:exact_search_blocked). At fixture sizes the
+    probe side is under the broadcast gate: its matrix is collected
+    once and broadcast, the corpus crosses one hash exchange into
+    mapInPandas tasks that each compute one GEMM top-k, and the global
+    merge carries only k candidates per task per query. Probe sides
+    over the gate take the blocked cogroup grid instead, with no
+    driver-side collect and task memory bounded at any size. This is
+    the columnar/SIMD execution the reference lists as future work
+    (benchmarks/benchmark.md:37-47); float64 GEMM, so the 1e-15
+    accumulation-order difference vs the HOF kernel vanishes under
+    round(4).
     """
     from zvdb_spark.operators.knn import exact_search_blocked
     from zvdb_spark.sources.tables import table_row_count
@@ -204,12 +206,13 @@ def q_sim_join_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity join: all unordered pairs with dist_sq < tau.
 
     This is the all-pairs generalization of the reference's single
-    probe. Block-matrix threshold join with both sides as DataFrames
-    (operators/knn.py:threshold_join_blocked): each (probe-block x
-    corpus-shard) cell evaluates one GEMM and emits only pairs passing
-    the threshold — pairs are emitted, never the cross product, and no
-    table data touches the driver. At 100 TB additionally pre-prune
-    candidates with the LSH band pattern (q_dedup_minhash).
+    probe. Threshold join with both sides as DataFrames
+    (operators/knn.py:threshold_join_blocked, same plans as
+    q_knn_batch): each task evaluates one GEMM and emits only pairs
+    passing the threshold — pairs are emitted, never the cross
+    product, and no corpus data touches the driver. At 100 TB
+    additionally pre-prune candidates with the LSH band pattern
+    (q_dedup_minhash).
     """
     from zvdb_spark.operators.knn import threshold_join_blocked
     from zvdb_spark.sources.tables import table_row_count
