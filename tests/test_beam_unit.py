@@ -143,11 +143,22 @@ def test_farthest_point_seeds_cover_merged_clusters(tmp_path):
 
 
 def test_group_seeds_by_pid_matches_dict_loop():
-    """_route's vectorized seed grouping (round 14) must reproduce the
-    per-row dict loop it replaced byte-for-byte: pid-ascending groups,
+    """The search task's vectorized seed grouping must reproduce the
+    per-row dict loop it replaced: pid-ascending groups,
     nearest-cell-first seed order within a pid, per-cell slot order,
-    empty rows and all-padding cells contributing nothing."""
+    empty rows and all-padding cells contributing nothing. The flat
+    (row, pid, seed) output is sorted by (pid, row)."""
     from zvdb_spark.operators.graph_ann import _group_seeds_by_pid
+
+    def as_dicts(rows, pids, seeds, nq):
+        assert np.all(np.diff(pids * (nq + 1) + rows) >= 0)  # (pid, row)
+        out = [[] for _ in range(nq)]
+        for r, p, s in zip(rows.tolist(), pids.tolist(), seeds.tolist()):
+            if out[r] and out[r][-1]["pid"] == p:
+                out[r][-1]["seeds"].append(s)
+            else:
+                out[r].append({"pid": p, "seeds": [s]})
+        return out
 
     def dict_loop(near, cell_shard, cell_seeds):
         out = []
@@ -177,6 +188,7 @@ def test_group_seeds_by_pid_matches_dict_loop():
                       for _ in range(nq)]).astype(np.int64)
             if nq else np.empty((0, ns), dtype=np.int64)
         )
-        assert _group_seeds_by_pid(near, cell_shard, cell_seeds) == (
+        rows, pids, seeds = _group_seeds_by_pid(near, cell_shard, cell_seeds)
+        assert as_dicts(rows, pids, seeds, nq) == (
             dict_loop(near, cell_shard, cell_seeds)
         ), f"trial {trial}"

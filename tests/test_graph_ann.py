@@ -255,6 +255,50 @@ def test_multi_shard_path(spark, sf_dir):
         assert set(grp.vec_id) == {qid - 1_000_000, qid}
 
 
+def test_answer_independent_of_query_batch(spark):
+    """A query's ANN rows must not depend on which other queries share
+    its task. The beam's width and step count derive from the width
+    of the seed matrix, so it must be the index's fixed nseed x
+    seeds_per_cell, never the widest row of the block. On a 4-shard
+    index, where rows route different seed counts to each shard,
+    n_qblocks=1 vs 4 and a query searched alone vs inside the batch
+    must give identical rows."""
+    rng = np.random.default_rng(2)
+    n, dim = 2000, 16
+    centers = rng.normal(size=(40, dim))
+    x = centers[rng.integers(0, 40, n)] + 0.5 * rng.normal(size=(n, dim))
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(x)],
+        "vec_id long, emb array<double>",
+    )
+    idx = GraphIndex(m=4, ef=64, cell_target_rows=50, n_shards=4).build(
+        emb, n_rows=n
+    )
+    qx = centers[rng.integers(0, 40, 200)] + rng.normal(size=(200, dim))
+    q = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(qx)],
+        "query_id long, qemb array<double>",
+    ).localCheckpoint(eager=True)
+
+    def run(df, nq, n_qblocks):
+        return (
+            idx.search(df, k=10, n_queries=nq, n_qblocks=n_qblocks)
+            .toPandas()
+            .sort_values(["query_id", "dist_sq", "vec_id"], ignore_index=True)
+        )
+
+    one = run(q, 200, 1)
+    assert len(idx._adj_meta) == 4
+    assert len(one) == 2000
+    assert one.equals(run(q, 200, 4))
+    for qid in range(0, 200, 20):
+        alone = run(q.filter(F.col("query_id") == qid), 1, 1)
+        assert alone.equals(
+            one[one.query_id == qid].reset_index(drop=True)
+        ), qid
+    idx.retire()
+
+
 def test_deterministic_multi_shard(spark, sf_dir):
     """Same data + seed => identical edges, independent of shard
     count context (src/test_hnsw.zig:275-316 consistency analog)."""

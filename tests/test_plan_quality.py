@@ -90,12 +90,25 @@ def test_knn_batch_probe_side_crosses_no_exchange(spark, sf_dir):
         assert a["n_exchanges"] == n_exchanges, a["plan"]
 
 
-def test_graph_search_moves_no_index_data(spark, sf_dir):
-    """Graph ANN search plan: index bytes live in mmap segments, so
-    the plan touches only the query DataFrame and the broadcast
-    metadata — exactly two Exchanges (query-block fan-out + final
-    top-k window), a broadcast join for the shard metadata, and no
-    sort-merge join of anything corpus-sized."""
+_MERGE_OPERATORS = (
+    "Window", "BroadcastHashJoin", "BroadcastNestedLoopJoin",
+    "ArrowEvalPython", "SortMergeJoin",
+)
+
+
+def _assert_one_task_per_query_plan(df):
+    """The plan of a search answered inside one task per query block:
+    the query side crosses one round-robin Exchange into a
+    MapInPandas, and nothing merges, joins or re-evaluates Python
+    afterwards."""
+    a = plan_audit(df)
+    assert "MapInPandas" in a["plan"], a["plan"]
+    assert a["n_exchanges"] == 1, a["plan"]
+    for op in _MERGE_OPERATORS:
+        assert op not in a["plan"], (op, a["plan"])
+
+
+def _graph_index_and_queries(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from zvdb_spark.functions.vector import as_double_array
@@ -108,11 +121,37 @@ def test_graph_search_moves_no_index_data(spark, sf_dir):
     idx = GraphIndex(m=8, ef=32, cell_target_rows=100).build(emb)
     q = emb.limit(4).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    a = plan_audit(idx.search(q, k=3, n_queries=4))
-    assert a["n_exchanges"] == 2, a["plan"]
-    assert a["n_broadcast_joins"] >= 1  # shard metadata rides broadcast
-    assert a["n_sortmerge_joins"] == 0
+    ).localCheckpoint(eager=True)
+    return idx, q
+
+
+def test_graph_search_moves_no_index_data(spark, sf_dir):
+    """Graph ANN search plan: index bytes live in mmap segments and
+    shard metadata rides the task closure, so the plan touches only
+    the query DataFrame — one Exchange fanning query blocks out, no
+    broadcast of the metadata, no routing UDF and no top-k window."""
+    idx, q = _graph_index_and_queries(spark, sf_dir)
+    _assert_one_task_per_query_plan(idx.search(q, k=3, n_queries=4))
+
+
+def test_vector_searches_run_two_jobs(spark, sf_dir):
+    """With n_queries supplied and the index state built, each search
+    collects in exactly 2 Spark jobs: the query-block exchange and the
+    result stage."""
+    idx, q = _graph_index_and_queries(spark, sf_dir)
+    idx.state()
+    sc = spark.sparkContext
+    for name, run in (
+        ("search", lambda: idx.search(q, k=3, n_queries=4)),
+        ("exact_search", lambda: idx.exact_search(q, k=3, n_queries=4)),
+    ):
+        group = f"test-jobs-{name}"
+        sc.setJobGroup(group, name, False)
+        try:
+            assert len(run().toPandas()) == 12
+        finally:
+            sc._jsc.clearJobGroup()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2, name
 
 
 def test_window_frame_runs_on_aggregate(spark, sf_dir):
@@ -134,11 +173,11 @@ def test_window_frame_runs_on_aggregate(spark, sf_dir):
 
 
 def test_segment_exact_search_moves_no_corpus(spark, sf_dir):
-    """Segment exact search plan: the corpus lives in mmap segments,
-    so the plan contains only the query side — one round-robin
-    Exchange fanning query blocks out, one hash Exchange for the
-    global top-k window, a broadcast of the group-id list, and no
-    join or scan of anything corpus-sized."""
+    """Segment exact search plan: the corpus lives in mmap segments
+    and every task scans all of them, so the plan contains only the
+    query side — one round-robin Exchange fanning query blocks out,
+    no group-id broadcast, no top-k window and no join or scan of
+    anything corpus-sized."""
     from pyspark.sql import functions as F
 
     from zvdb_spark.functions.vector import as_double_array
@@ -152,13 +191,7 @@ def test_segment_exact_search_moves_no_corpus(spark, sf_dir):
     q = emb.limit(4).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     ).localCheckpoint(eager=True)
-    a = plan_audit(corp.exact_search(q, k=3, n_queries=4))
-    # query-block fan-out, plus the top-k window's hash exchange when
-    # the fan-out spans >1 partition (a single partition already
-    # satisfies the window's distribution)
-    assert a["n_exchanges"] <= 2, a["plan"]
-    assert a["n_sortmerge_joins"] == 0
-    assert "BroadcastNestedLoopJoin" in a["plan"]  # gid list broadcast
+    _assert_one_task_per_query_plan(corp.exact_search(q, k=3, n_queries=4))
 
 
 def test_embedding_lsh_candidates_equi_join(spark, sf_dir):

@@ -70,6 +70,63 @@ def test_multi_shard_merge_exact(spark, corpus):
     )
 
 
+def test_cross_group_merge_exact(spark, corpus, monkeypatch):
+    """Each task scans every segment group for its queries and merges
+    their candidates itself. Force >= 3 groups, with 40 vectors
+    duplicated under shifted ids so exact (score, id) ties span
+    groups: rows, order and rn must equal both a numpy brute force
+    and the crossJoin reference."""
+    import numpy as np
+
+    from zvdb_spark.operators import segments
+
+    emb, q = corpus
+    dups = (
+        emb.orderBy("vec_id").limit(40)
+        .withColumn("vec_id", F.col("vec_id") + 1_000_000)
+    )
+    full = emb.unionByName(dups).localCheckpoint(eager=True)
+    monkeypatch.setattr(segments, "_GROUP_TARGET", 150)
+    sc = SegmentCorpus(shard_target_rows=60).pack(full)
+    groups = segments._group_segments(sc.meta, segments._GROUP_TARGET)
+    assert len(groups) >= 3
+    group_of = {
+        int(i): g
+        for g, segs in enumerate(groups)
+        for _, prefix, _, _ in segs
+        for i in np.load(f"{prefix}.ids.npy")
+    }
+    assert any(
+        group_of[i] != group_of[i + 1_000_000]
+        for i in group_of if i < 1_000_000 and i + 1_000_000 in group_of
+    )
+    k = 5
+    got = _sorted(sc.exact_search(q, k=k, dtype="float64").toPandas())
+    ref = _sorted(knn_join(full, q, k=k).toPandas())
+    pd.testing.assert_frame_equal(
+        ref[["query_id", "neighbor_id", "rn"]],
+        got[["query_id", "neighbor_id", "rn"]],
+        check_dtype=False,
+    )
+    cpdf = full.toPandas()
+    ids = cpdf.vec_id.to_numpy()
+    x = np.stack(cpdf.emb.to_numpy())
+    rows = []
+    for r in q.toPandas().itertuples(index=False):
+        d = ((x - np.asarray(r.qemb)) ** 2).sum(1)
+        for rn, j in enumerate(np.lexsort((ids, d))[:k], start=1):
+            rows.append((r.query_id, ids[j], d[j], rn))
+    want = _sorted(
+        pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score", "rn"])
+    )
+    assert (want.neighbor_id.to_numpy() == got.neighbor_id.to_numpy()).all()
+    assert (want.rn.to_numpy() == got.rn.to_numpy()).all()
+    assert np.abs(want.score.to_numpy() - got.score.to_numpy()).max() < 1e-9
+    # the duplicated queries find their copy at distance 0, after the
+    # original on the id tie-break
+    assert (got[got.score == 0.0].groupby("query_id").size() >= 2).any()
+
+
 def test_f32_rank_parity(spark, corpus):
     emb, q = corpus
     ref = _sorted(knn_join(emb, q, k=5).toPandas())

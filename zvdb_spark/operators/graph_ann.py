@@ -37,9 +37,11 @@ measured well:
   of the graph (cap is monotone: cap(cap(A) ∪ B) = cap(A ∪ B)).
 - **search**: a query seeds its beam from ``seeds_per_cell`` entry
   nodes of its ``nseed`` nearest cells, then runs a batched
-  best-first beam inside an applyInPandas task over the QUERY side
-  only (queries are a DataFrame — no table data rides any closure);
-  the task mmaps its shard's segments. Final global top-k by window.
+  best-first beam per shard those cells live in. All of it — routing,
+  the beams and the cross-shard top-k merge — runs inside the one
+  mapInPandas task that receives the query (queries are a DataFrame
+  — no table data rides any closure); the task mmaps the shards'
+  segments, and one round-robin exchange is the plan's only one.
 - **append**: new rows keep the quantizer, search their M nearest
   within their cell neighborhood (cost |new| x R x cell, never a
   rebuild), connect bidirectionally, local re-prune — the
@@ -281,19 +283,16 @@ def _kmeans_local(sample: np.ndarray, k: int, n_iter: int) -> np.ndarray:
 
 def _group_seeds_by_pid(
     near: np.ndarray, cell_shard: np.ndarray, cell_seeds: np.ndarray
-) -> list[list[dict]]:
-    """Group each query row's routed cells' seeds by shard id —
-    vectorized (round 14): one stable ``lexsort`` by (row, pid)
-    replaces the per-row Python dict loop. Stability preserves
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Group each query row's routed cells' seeds by shard id with one
+    stable ``lexsort`` by (pid, row). Stability preserves
     nearest-cell-first order and per-cell slot order within each
-    (row, pid) group, and cells whose seed slots are all padding (-1)
-    contribute nothing, so the output is byte-identical to the dict
-    form it replaces (pinned by
-    test_group_seeds_by_pid_matches_dict_loop; interleaved A/B ~1.3x
-    at the 10k-query x 2500-cell routing shape). ``near`` is
-    (nq, nseed) cell ids nearest-first; ``cell_seeds`` is (C, spc)
-    vec_ids with -1 padding; returns per row a pid-ascending list of
-    {"pid", "seeds"} structs (the _route UDF's element type)."""
+    (pid, row) run, and cells whose seed slots are all padding (-1)
+    contribute nothing (pinned against the per-row dict loop by
+    test_group_seeds_by_pid_matches_dict_loop). ``near`` is (nq,
+    nseed) cell ids nearest-first; ``cell_seeds`` is (C, spc) vec_ids
+    with -1 padding. Returns flat (row, pid, seed) int64 arrays sorted
+    by (pid, row), so each shard's rows form one contiguous slice."""
     nq_r, ns = near.shape
     spc = cell_seeds.shape[1]
     sel = cell_seeds[near]                          # (nq, ns, spc)
@@ -301,23 +300,8 @@ def _group_seeds_by_pid(
     rows_f = np.repeat(np.arange(nq_r, dtype=np.int64), ns * spc)[msk]
     pids_f = np.repeat(cell_shard[near].ravel().astype(np.int64), spc)[msk]
     seeds_f = sel.ravel()[msk]
-    order_g = np.lexsort((pids_f, rows_f))
-    rows_f, pids_f = rows_f[order_g], pids_f[order_g]
-    seeds_f = seeds_f[order_g]
-    if len(rows_f):
-        brk = np.flatnonzero(
-            (rows_f[1:] != rows_f[:-1]) | (pids_f[1:] != pids_f[:-1])
-        )
-        starts = np.concatenate(([0], brk + 1))
-        ends = np.concatenate((brk + 1, [len(rows_f)]))
-    else:
-        starts = ends = np.empty(0, dtype=np.int64)
-    seeds_l = seeds_f.tolist()
-    rows_l, pids_l = rows_f.tolist(), pids_f.tolist()
-    out: list[list[dict]] = [[] for _ in range(nq_r)]
-    for s, e in zip(starts.tolist(), ends.tolist()):
-        out[rows_l[s]].append({"pid": pids_l[s], "seeds": seeds_l[s:e]})
-    return out
+    order_g = np.lexsort((rows_f, pids_f))
+    return rows_f[order_g], pids_f[order_g], seeds_f[order_g]
 
 
 def _beam_search_seeded(
@@ -1219,8 +1203,9 @@ class GraphIndex:
         cogroup-by-pid pass over the DELTA, no corpus join and no
         full-edge-table scan), writes adjacency + refreshed capped
         edges next to the vector segment, and returns the tiny
-        metadata DataFrame (pid, n, maxdeg, dim, vprefix, aprefix)
-        that search broadcasts. After a build everything is dirty
+        metadata DataFrame (pid, n, maxdeg, dim, vprefix, aprefix);
+        search reads the same rows from ``_adj_meta`` and carries them
+        in its task closure. After a build everything is dirty
         (first full pack); after an append only the shards the delta
         touched are — untouched shards keep their files verbatim, so
         the re-pack cost scales with the DELTA's neighborhood, not
@@ -1424,14 +1409,16 @@ class GraphIndex:
     ) -> DataFrame:
         """queries: (query_id, qemb) DataFrame. Returns (query_id,
         vec_id, dist_sq), ≤ k rows per query ascending (dist_sq,
-        vec_id). Routing, seeding and the beam all run inside the
-        plan; the only driver-side inputs are the quantizer metadata
-        arrays riding the UDF closures (k x dim floats). Index bytes
-        never move: search tasks mmap their shard's segment files
-        (see ``state``), so per-search cost is the query shuffle +
-        the ef-bounded beam — independent of index size."""
+        vec_id). Each query is answered completely inside the one task
+        that receives it: routing, seeding, the per-shard beams and
+        the cross-shard top-k merge. The only driver-side inputs are
+        the quantizer metadata arrays and the per-shard segment
+        prefixes riding the task closure (k x dim floats plus P
+        tuples). Index bytes never move: tasks mmap the segment files
+        (see ``state``), so per-search cost is one round-robin query
+        exchange + the ef-bounded beam — independent of index size."""
         ef = ef or self.ef
-        state = self.state()
+        self.state()
         # live index: refresh segment mtimes so the dead-build purge
         # never reaps files a long-lived index still reads (vector,
         # adjacency AND stored-edge segments — the last are re-read by
@@ -1458,54 +1445,53 @@ class GraphIndex:
         cell_shard = self.cell_shard
         cell_seeds = self.cell_seeds
         nseed = min(self.nseed, len(cmat))
+        # every seed matrix has the index's full seed width, whatever
+        # the other rows of its block route to: the beam's width and
+        # step count derive from it, so a query's answer must not
+        # depend on which queries share its task
+        width = nseed * cell_seeds.shape[1]
+        adj_meta = dict(self._adj_meta)  # pid -> (n, maxdeg, dim, vp, ap)
 
-        @F.pandas_udf("array<struct<pid:int,seeds:array<bigint>>>")
-        def _route(vs: pd.Series) -> pd.Series:
-            mat = np.stack(vs.to_numpy()).astype(np.float64)
-            d = cn[None, :] - 2.0 * (mat @ cmat.T)
-            # exact top-nseed SET by (distance, cell index) at
-            # argpartition cost, then the selected columns re-ordered
-            # by (distance, cell index) — NEAREST CELL FIRST. The
-            # order is load-bearing for SPEED, not correctness: seeds
-            # reach the beam in the emitted order, and a best-first
-            # warm start converges in fewer expansions (an interleaved
-            # A/B of ordered vs argpartition-arbitrary seeds measured
-            # 6.2-8.3 s vs 10.4-11.1 s per 10k-query search at 100k;
-            # same result rows, recall 0.999 both ways). Output is
-            # identical to stable-argsort's first nseed columns.
-            near = _topk_by_dist_id(
-                d, np.arange(d.shape[1], dtype=np.int64), nseed
-            )
-            nd = np.take_along_axis(d, near, axis=1)
-            o1 = np.argsort(near, axis=1, kind="stable")
-            nd = np.take_along_axis(nd, o1, axis=1)
-            near = np.take_along_axis(near, o1, axis=1)
-            o2 = np.argsort(nd, axis=1, kind="stable")
-            near = np.take_along_axis(near, o2, axis=1)
-            return pd.Series(
-                _group_seeds_by_pid(near, cell_shard, cell_seeds)
-            )
-
-        routed = (
-            queries.withColumn("r", F.explode(_route(F.col("qemb"))))
-            .select(
-                "query_id",
-                "qemb",
-                F.col("r.pid").alias("pid"),
-                F.col("r.seeds").alias("seeds"),
-            )
-        )
-
-        def _cell_fn(batches):
+        def _task(batches):
             for bpdf in batches:
-                # a round-robin partition may mix shards; beam per pid
-                for _, qpdf in bpdf.groupby("pid", sort=True):
-                    n = int(qpdf["n"].iloc[0])
-                    if n == 0:
+                qids_all = bpdf["query_id"].to_numpy()
+                qm_all = np.ascontiguousarray(
+                    np.stack(bpdf["qemb"].to_numpy()).astype(np.float64)
+                )
+                d = cn[None, :] - 2.0 * (qm_all @ cmat.T)
+                # exact top-nseed SET by (distance, cell index) at
+                # argpartition cost, then the selected columns
+                # re-ordered by (distance, cell index) — NEAREST CELL
+                # FIRST. The order is load-bearing for SPEED, not
+                # correctness: seeds reach the beam in the emitted
+                # order, and a best-first warm start converges in
+                # fewer expansions (an interleaved A/B of ordered vs
+                # argpartition-arbitrary seeds measured 6.2-8.3 s vs
+                # 10.4-11.1 s per 10k-query search at 100k; same
+                # result rows, recall 0.999 both ways). Output is
+                # identical to stable-argsort's first nseed columns.
+                near = _topk_by_dist_id(
+                    d, np.arange(d.shape[1], dtype=np.int64), nseed
+                )
+                nd = np.take_along_axis(d, near, axis=1)
+                o1 = np.argsort(near, axis=1, kind="stable")
+                nd = np.take_along_axis(nd, o1, axis=1)
+                near = np.take_along_axis(near, o1, axis=1)
+                o2 = np.argsort(nd, axis=1, kind="stable")
+                near = np.take_along_axis(near, o2, axis=1)
+                rows, pids, seed_ids = _group_seeds_by_pid(
+                    near, cell_shard, cell_seeds
+                )
+                upids, starts = np.unique(pids, return_index=True)
+                ends = np.r_[starts[1:], len(pids)]
+                parts = []
+                for pid, lo, hi in zip(
+                    upids.tolist(), starts.tolist(), ends.tolist()
+                ):
+                    meta = adj_meta.get(pid)
+                    if meta is None or meta[0] == 0:
                         continue
-                    vprefix = qpdf["vprefix"].iloc[0]
-                    aprefix = qpdf["aprefix"].iloc[0]
-                    maxdeg = int(qpdf["maxdeg"].iloc[0])
+                    n, maxdeg, _, vprefix, aprefix = meta
                     # mmap: header-only load; data pages come from
                     # (and stay in) the shared OS page cache
                     ids = np.load(f"{vprefix}.ids.npy", mmap_mode="r")
@@ -1514,61 +1500,54 @@ class GraphIndex:
                         adj = np.load(f"{aprefix}.adj.npy", mmap_mode="r")
                     else:  # edgeless shard: seeds-only probe
                         adj = np.full((n + 1, maxdeg), n, dtype=np.int64)
-                    qids = qpdf["query_id"].to_numpy()
-                    qm = np.ascontiguousarray(
-                        np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
+                    # seed id -> row position, one searchsorted for the
+                    # shard's whole slice; survivors keep their order
+                    # within their row
+                    urows, inv = np.unique(rows[lo:hi], return_inverse=True)
+                    flat = seed_ids[lo:hi]
+                    ids_arr = np.asarray(ids)
+                    sp = np.minimum(np.searchsorted(ids_arr, flat), n - 1)
+                    ok = ids_arr[sp] == flat
+                    okr, spo = inv[ok], sp[ok]
+                    rank = np.arange(len(okr)) - np.searchsorted(
+                        okr, okr, side="left"
                     )
-                    # vectorized seed-id -> row-position resolution:
-                    # one searchsorted over the concatenated seed ids
-                    # instead of one per query row (identical
-                    # placement: survivors keep their per-row order)
-                    seed_lists = [
-                        np.asarray(s, dtype=np.int64)
-                        for s in qpdf["seeds"]
-                    ]
-                    lens = np.fromiter(
-                        (len(s) for s in seed_lists),
-                        dtype=np.int64,
-                        count=len(seed_lists),
-                    )
-                    max_ns = int(lens.max()) if len(lens) else 1
-                    seeds = np.full(
-                        (len(qids), max(max_ns, 1)), -1, dtype=np.int64
-                    )
-                    if lens.sum():
-                        flat = np.concatenate(seed_lists)
-                        ids_arr = np.asarray(ids)
-                        sp = np.minimum(
-                            np.searchsorted(ids_arr, flat), n - 1
+                    seeds = np.full((len(urows), width), -1, dtype=np.int64)
+                    seeds[okr, rank] = spo
+                    parts.append(
+                        _beam_search_seeded(
+                            ids, mat, adj, seeds, qm_all[urows],
+                            qids_all[urows], k, ef,
                         )
-                        ok = ids_arr[sp] == flat
-                        rowv = np.repeat(np.arange(len(qids)), lens)
-                        okr, spo = rowv[ok], sp[ok]
-                        if len(okr):
-                            rank = np.arange(len(okr)) - np.searchsorted(
-                                okr, okr, side="left"
-                            )
-                            seeds[okr, rank] = spo
-                    yield _beam_search_seeded(
-                        ids, mat, adj, seeds, qm, qids, k, ef
                     )
+                if not parts:
+                    continue
+                # cross-shard merge: each vec_id lives in one shard,
+                # so the first k rows by (query, dist_sq, vec_id) are
+                # the query's global top-k
+                res = pd.concat(parts, ignore_index=True)
+                q = res["query_id"].to_numpy()
+                o = np.lexsort(
+                    (res["vec_id"].to_numpy(), res["dist_sq"].to_numpy(), q)
+                )
+                q = q[o]
+                first = np.r_[True, q[1:] != q[:-1]]
+                grp_start = np.maximum.accumulate(
+                    np.where(first, np.arange(len(q)), 0)
+                )
+                keep = o[np.arange(len(q)) - grp_start < k]
+                yield res.iloc[keep].reset_index(drop=True)
 
-        # EXPLICIT round-robin repartition + mapInPandas (not
-        # groupBy + applyInPandas): the query side is small, so AQE
-        # would coalesce a grouping shuffle into one or two partitions
-        # and serialize the beam. A fixed partition count spreads
-        # query blocks across every core; the beam groups by shard
-        # inside the task.
-        per_cell = (
-            routed.join(F.broadcast(state), "pid")
-            .repartition(n_qblocks)
-            .mapInPandas(_cell_fn, SEARCH_SCHEMA_STR)
-        )
-        w = W.partitionBy("query_id").orderBy("dist_sq", "vec_id")
+        # EXPLICIT round-robin repartition + mapInPandas (not groupBy +
+        # applyInPandas): the query side is small, so AQE would
+        # coalesce a grouping shuffle into one or two partitions and
+        # serialize the beam. A fixed partition count spreads query
+        # blocks across every core, and every query's answer is
+        # complete inside its block, so no merge exchange follows.
         return (
-            per_cell.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
+            queries.select("query_id", "qemb")
+            .repartition(n_qblocks)
+            .mapInPandas(_task, SEARCH_SCHEMA_STR)
         )
 
     # -- exact search over the same segments --------------------------

@@ -12,11 +12,12 @@ clusters:
   atomic rename. The corpus crosses the JVM<->Python boundary exactly
   once, at pack time.
 - ``exact_search``: queries stay a DataFrame; query blocks fan out
-  across cores (replicated over shards), each task ``np.load(
-  mmap_mode="r")``s its shard and runs a chunked norm-expansion GEMM
-  top-k; a global window merge carries P*k rows per query — never
-  the corpus. Per-search cost is the query shuffle + the GEMM; the
-  index bytes stay in the shared OS page cache across searches.
+  round-robin across cores, each task ``np.load(mmap_mode="r")``s
+  every shard and runs a chunked norm-expansion GEMM top-k, merging
+  its queries' per-shard candidates itself — no row of the corpus and
+  no per-shard partial result crosses an exchange. Per-search cost is
+  the query shuffle + the GEMM; the index bytes stay in the shared OS
+  page cache across searches.
 
 Scale posture: shard size bounds task state (``DEFAULT_SHARD_TARGET``
 rows); query-block count bounds task memory on the probe side; both
@@ -38,7 +39,6 @@ from contextlib import contextmanager
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 DEFAULT_SHARD_TARGET = 2_000_000  # rows per segment (task state bound)
@@ -438,17 +438,17 @@ def purge_stale(d: str, now: float) -> None:
 _SEARCH_SCHEMA = "query_id long, neighbor_id long, score double"
 _QCHUNK = 128  # query rows per GEMM (bounds the distance matrix)
 _CCHUNK = 1 << 18  # corpus rows per GEMM chunk
-_GROUP_TARGET = 2_000_000  # segment rows bundled per query-replica group
+_GROUP_TARGET = 2_000_000  # segment rows per exact-search work group
 
 
 def _group_segments(
     meta: list[tuple[int, str, int, int]], target: int
 ) -> list[list[tuple[int, str, int, int]]]:
     """Bundle segments into groups of ~target rows (first-fit over
-    size-sorted segments). Queries replicate once per GROUP, not per
-    segment, so many small graph shards don't multiply the query
-    shuffle or shrink the GEMMs; at scale the group grid is the
-    block-nested-loop shape (replication = total_rows / target)."""
+    size-sorted segments). A group is the unit of exact-search work:
+    one query·group item GEMMs ~target corpus rows, so the task count
+    scales with nq x total_rows / target, and many small graph shards
+    count as one group instead of shrinking the work estimate."""
     groups: list[tuple[int, list]] = []
     for seg in sorted(meta, key=lambda s: -s[2]):
         for i, (rows, members) in enumerate(groups):
@@ -487,21 +487,21 @@ def exact_search_segments(
     np_dtype = np.dtype(dtype)
     f32 = np_dtype == np.float32
     mat_name, xn_name = ("mat32", "xn32") if f32 else ("mat", "xn")
-    groups = _group_segments(meta, _GROUP_TARGET)
+    n_groups = len(_group_segments(meta, _GROUP_TARGET))
+    kk = min(k, sum(n for _, _, n, _ in meta))
     if n_queries is None:
         n_queries = queries.count()
     par = spark.sparkContext.defaultParallelism
     # ≥64 query·group work items per task, capped at ONE WAVE of
-    # tasks (defaultParallelism = the cluster's total cores). The
-    # earlier 4-wave default ("fine blocks smooth stragglers") was
-    # measured wrong: per-task fixed costs — python worker dispatch,
-    # Arrow batch framing, first-touch mmap page-in — dominate extra
-    # waves. At 100k x 128-d, nq=10k, 32 cores: 1 wave 2.10 s best /
-    # 2.24 s median, 2 waves 2.69 s, 4 waves 3.91 s, 8 waves 3.97 s.
-    # SPARK_GRAFT_EXACT_WAVES raises it for clusters with genuinely
-    # heterogeneous executors.
-    waves = int(os.environ.get("SPARK_GRAFT_EXACT_WAVES", "1"))
-    n_tasks = max(1, min(waves * par, -(-n_queries * len(groups) // 64)))
+    # tasks (defaultParallelism = the cluster's total cores) and at
+    # one query per task. Extra waves were measured slower: per-task
+    # fixed costs — python worker dispatch, Arrow batch framing,
+    # first-touch mmap page-in — dominate them. At 100k x 128-d,
+    # nq=10k, 32 cores: 1 wave 2.10 s best / 2.24 s median, 2 waves
+    # 2.69 s, 4 waves 3.91 s, 8 waves 3.97 s.
+    n_tasks = max(
+        1, min(par, -(-n_queries * n_groups // 64), n_queries)
+    )
 
     from zvdb_spark.operators.knn import _topk_by_dist_id
 
@@ -516,84 +516,77 @@ def exact_search_segments(
                 cache[pref] = (np.asarray(ids), mat, xn)
             return cache[pref]
 
-        for bpdf in batches:
-            for gid_any, qpdf in bpdf.groupby("gid", sort=True):
-                segs = groups[int(gid_any)]
-                g_rows = sum(s[2] for s in segs)
-                if not g_rows:
-                    continue
-                qids_all = qpdf[query_id].to_numpy()
-                qm_all = np.ascontiguousarray(
-                    np.stack(qpdf[query_vec].to_numpy()).astype(np_dtype)
+        for qpdf in batches:
+            if not kk:
+                continue
+            qids_all = qpdf[query_id].to_numpy()
+            qm_all = np.ascontiguousarray(
+                np.stack(qpdf[query_vec].to_numpy()).astype(np_dtype)
+            )
+            qn_all = (
+                qm_all.astype(np.float64) ** 2
+            ).sum(axis=1).astype(np_dtype)
+            for lo in range(0, len(qids_all), _QCHUNK):
+                qm = qm_all[lo : lo + _QCHUNK]
+                qn = qn_all[lo : lo + _QCHUNK]
+                qids = qids_all[lo : lo + _QCHUNK]
+                # every segment is GEMMed in corpus chunks; kk
+                # candidates kept per chunk, RESCORED as exact
+                # diff-squared (the norm-expansion GEMM loses ~1e-16 to
+                # cancellation — a self-match must be 0.0, not
+                # 6.7e-16, and ties must resolve by the true (distance,
+                # id) order), then resolved exactly across chunks and
+                # segments — any global top-k member is top-k in its
+                # chunk
+                c_ids, c_d = [], []
+                qm64 = qm.astype(np.float64)
+                for _, pref, n_seg, _dim in meta:
+                    ids, mat, xn = seg(pref)
+                    for clo in range(0, n_seg, _CCHUNK):
+                        cm = np.ascontiguousarray(mat[clo : clo + _CCHUNK])
+                        cid = ids[clo : clo + _CCHUNK]
+                        d = (
+                            qn[:, None]
+                            + xn[clo : clo + _CCHUNK][None, :]
+                            - 2.0 * (qm @ cm.T)
+                        )
+                        ck = min(kk, len(cid))
+                        part = _topk_by_dist_id(d, cid, ck)
+                        sel = np.asarray(cm)[part].astype(np.float64)
+                        diff = sel - qm64[:, None, :]
+                        dex = np.einsum("ijk,ijk->ij", diff, diff)
+                        c_ids.append(cid[part])
+                        c_d.append(dex)
+                cand_i = np.concatenate(c_ids, axis=1)
+                cand_d = np.concatenate(c_d, axis=1)
+                # per-row lexsort: exact (d, id) resolve over the
+                # rescored per-chunk winners (also re-sorts the
+                # single-chunk case, whose GEMM-order selection may
+                # disagree with the rescored order on ties)
+                sel = np.empty((len(qids), kk), dtype=np.int64)
+                for r in range(len(qids)):
+                    o = np.lexsort((cand_i[r], cand_d[r]))[:kk]
+                    sel[r] = o
+                cand_i = np.take_along_axis(cand_i, sel, axis=1)
+                cand_d = np.take_along_axis(cand_d, sel, axis=1)
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.repeat(qids, kk),
+                        "neighbor_id": cand_i.ravel(),
+                        "score": cand_d.ravel(),
+                        "rn": np.tile(
+                            np.arange(1, kk + 1, dtype=np.int32), len(qids)
+                        ),
+                    }
                 )
-                qn_all = (
-                    qm_all.astype(np.float64) ** 2
-                ).sum(axis=1).astype(np_dtype)
-                kk = min(k, g_rows)
-                for lo in range(0, len(qids_all), _QCHUNK):
-                    qm = qm_all[lo : lo + _QCHUNK]
-                    qn = qn_all[lo : lo + _QCHUNK]
-                    qids = qids_all[lo : lo + _QCHUNK]
-                    # every segment of the group is GEMMed in corpus
-                    # chunks; kk candidates kept per chunk, RESCORED
-                    # as exact diff-squared (the norm-expansion GEMM
-                    # loses ~1e-16 to cancellation — a self-match must
-                    # be 0.0, not 6.7e-16, and ties must resolve by
-                    # the true (distance, id) order), then resolved
-                    # exactly across chunks — any global top-k member
-                    # is top-k in its chunk
-                    c_ids, c_d = [], []
-                    qm64 = qm.astype(np.float64)
-                    for _, pref, n_seg, _dim in segs:
-                        ids, mat, xn = seg(pref)
-                        for clo in range(0, n_seg, _CCHUNK):
-                            cm = np.ascontiguousarray(mat[clo : clo + _CCHUNK])
-                            cid = ids[clo : clo + _CCHUNK]
-                            d = (
-                                qn[:, None]
-                                + xn[clo : clo + _CCHUNK][None, :]
-                                - 2.0 * (qm @ cm.T)
-                            )
-                            ck = min(kk, len(cid))
-                            part = _topk_by_dist_id(d, cid, ck)
-                            sel = np.asarray(cm)[part].astype(np.float64)
-                            diff = sel - qm64[:, None, :]
-                            dex = np.einsum("ijk,ijk->ij", diff, diff)
-                            c_ids.append(cid[part])
-                            c_d.append(dex)
-                    cand_i = np.concatenate(c_ids, axis=1)
-                    cand_d = np.concatenate(c_d, axis=1)
-                    # per-row lexsort: exact (d, id) resolve over the
-                    # rescored per-chunk winners (also re-sorts the
-                    # single-chunk case, whose GEMM-order selection
-                    # may disagree with the rescored order on ties)
-                    sel = np.empty((len(qids), kk), dtype=np.int64)
-                    for r in range(len(qids)):
-                        o = np.lexsort((cand_i[r], cand_d[r]))[:kk]
-                        sel[r] = o
-                    cand_i = np.take_along_axis(cand_i, sel, axis=1)
-                    cand_d = np.take_along_axis(cand_d, sel, axis=1)
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.repeat(qids, cand_i.shape[1]),
-                            "neighbor_id": cand_i.ravel(),
-                            "score": cand_d.ravel(),
-                        }
-                    )
 
-    gid_df = spark.createDataFrame(
-        [(int(g),) for g in range(len(groups))], "gid int"
-    )
-    fanned = (
-        queries.select(query_id, query_vec)
-        .crossJoin(F.broadcast(gid_df))
-        .repartition(n_tasks)  # round-robin: AQE-respected fan-out
-    )
-    per_shard = fanned.mapInPandas(_task, _SEARCH_SCHEMA)
-    w = W.partitionBy("query_id").orderBy("score", "neighbor_id")
+    # round-robin: AQE respects a fixed partition count, and every
+    # query's answer is complete inside its task, so no merge exchange
+    # follows the fan-out
     return (
-        per_shard.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        queries.select(query_id, query_vec)
+        .repartition(n_tasks)
+        .mapInPandas(_task, _SEARCH_SCHEMA + ", rn int")
     )
 
 
@@ -604,8 +597,8 @@ class SegmentCorpus:
 
     Replaces the reference's in-memory node map + linear probe
     (``src/hnsw.zig:45``, ``:194-236``) with shared-nothing shards:
-    build is one shuffle + linear IO; search cost is P*k rows of
-    shuffle per query batch.
+    build is one shuffle + linear IO; search shuffles only the query
+    batch, once.
     """
 
     def __init__(
