@@ -251,6 +251,40 @@ def gen_vectors(spark, n: int, dim: int, seed: int):
     )
 
 
+# the reference-comparable scalars the compact final line carries
+COMPACT_SCALARS = (
+    "insert_pts_per_s", "search_qps", "ann_search_qps",
+    "search_qps_loaded", "ann_recall_at_k",
+    "baseline_insert_pts_per_s", "baseline_search_qps",
+)
+COMPACT_MAX_CHARS = 1900  # fits a ~2,000-char stdout tail capture
+
+
+def _compact_line(
+    front: dict, timings: dict, scalars: dict, errors: list, total: float
+) -> str:
+    """The compact final stdout line: per-HEADLINE-query seconds, the
+    COMPACT_SCALARS present in ``scalars``, the error count and
+    bench_total. Query seconds drop to one decimal if the full-precision
+    line would outgrow COMPACT_MAX_CHARS."""
+    compact = {"sf": front["sf"],
+               "queries": {n: timings[n] for n in HEADLINE if n in timings}}
+    for key in COMPACT_SCALARS:
+        if key in scalars:
+            compact[key] = scalars[key]
+    compact["n_errors"] = len(errors)
+    compact["metric"] = "bench_total"
+    compact["value"] = total
+    compact["unit"] = "sec"
+    line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > COMPACT_MAX_CHARS:
+        compact["queries"] = {
+            n: round(s, 1) for n, s in compact["queries"].items()
+        }
+        line = json.dumps(compact, separators=(",", ":"))
+    return line
+
+
 def main() -> None:
     from zvdb_spark.operators.graph_ann import GraphIndex
     from zvdb_spark.operators.segments import SegmentCorpus
@@ -2378,25 +2412,7 @@ def main() -> None:
     # Both lines describe the SAME run — the compact line is a
     # projection of the full one, never a different measurement.
     print(json.dumps({**front, **bulky, **scalars}))
-    compact = {"sf": front["sf"],
-               "queries": {n: timings[n] for n in HEADLINE if n in timings}}
-    for key in (
-        "insert_pts_per_s", "search_qps", "ann_search_qps",
-        "search_qps_loaded", "ann_recall_at_k",
-        "baseline_insert_pts_per_s", "baseline_search_qps",
-    ):
-        if key in scalars:
-            compact[key] = scalars[key]
-    compact["n_errors"] = len(errors)
-    compact["metric"] = "bench_total"
-    compact["value"] = total
-    compact["unit"] = "sec"
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # never outgrow the driver's tail capture
-        compact["queries"] = {
-            n: round(s, 1) for n, s in compact["queries"].items()
-        }
-        line = json.dumps(compact, separators=(",", ":"))
+    line = _compact_line(front, timings, scalars, errors, total)
     print(line)
     sys.stdout.flush()
     spark.stop()

@@ -86,3 +86,34 @@ def test_harness_imports_from_the_engine_exist():
                     )
     assert checked, "no engine imports found — the scan is broken"
     assert not missing, f"harness imports of missing names: {missing}"
+
+
+def test_compact_line_fits_the_tail_capture():
+    """The compact final stdout line stays within a ~2,000-char stdout
+    tail capture with every HEADLINE query at a worst-case timing and
+    every compact scalar present, and still carries all of them.
+    Unrounded timings (17 significant digits) take the one-decimal
+    fallback."""
+    import json
+
+    import bench
+
+    worst = 12345.678912
+    scalars = {k: worst * 100 for k in bench.COMPACT_SCALARS}
+    for t in (worst, 1 / 3 + 12345):
+        line = bench._compact_line(
+            {"sf": "0.1"}, {n: t for n in bench.HEADLINE}, scalars,
+            ["err"] * 999, worst * 100,
+        )
+        assert len(line) <= bench.COMPACT_MAX_CHARS <= 1900, len(line)
+        got = json.loads(line)
+        assert list(got["queries"]) == list(bench.HEADLINE)
+        assert all(got[k] == worst * 100 for k in bench.COMPACT_SCALARS)
+        assert (got["metric"], got["unit"], got["n_errors"]) == (
+            "bench_total", "sec", 999
+        )
+    assert set(got["queries"].values()) == {round(t, 1)}
+    # a line that fits keeps full precision
+    first = bench.HEADLINE[0]
+    short = bench._compact_line({"sf": "0.1"}, {first: t}, scalars, [], 1.5)
+    assert json.loads(short)["queries"] == {first: t}

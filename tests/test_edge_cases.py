@@ -7,7 +7,8 @@
   (duplicate vectors are distinct rows, src/test_hnsw.zig:104-119),
   on both plans of the blocked operators;
 - an over-size probe side is never collected onto the driver;
-- salted_join rejects join types it cannot preserve.
+- salted_join rejects join types it cannot preserve;
+- the default driver heap is capped at 60% of the host's memory.
 """
 
 from __future__ import annotations
@@ -254,3 +255,18 @@ def test_vector_index_schema_uniform(spark):
     assert exact.columns == cols
     assert approx.columns == cols
     assert approx.count() <= 3
+
+
+def test_default_driver_memory_is_sized_to_the_host(tmp_path):
+    from zvdb_spark.session import _default_driver_memory
+
+    def host(total_kb: int) -> str:
+        f = tmp_path / "meminfo"
+        f.write_text(
+            f"MemTotal:       {total_kb} kB\nMemFree:        1024 kB\n"
+        )
+        return _default_driver_memory(str(f))
+
+    assert host(15 * 1024 * 1024) == "9216m"  # 60% of a 15 GB host
+    assert host(256 * 1024 * 1024) == "49152m"  # 48g cap on a big host
+    assert _default_driver_memory(str(tmp_path / "missing")) == "49152m"

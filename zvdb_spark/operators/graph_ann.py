@@ -115,6 +115,9 @@ _MIN_CELLS = 4
 # driver-local k-means bound: fit locally when the bounded sample
 # (40 rows/cell) holds at most this many floats; else distributed
 _LOCAL_KMEANS_MAX_ELEMS = 50_000_000
+# beam distance chunk: (4096, dim) float64 gathers stay cache-sized
+# instead of one (explored rows, dim) temporary per step
+_DIST_CHUNK = 4096
 
 SEARCH_SCHEMA_STR = "query_id long, vec_id long, dist_sq double"
 _EDGE_SCHEMA = (
@@ -304,6 +307,25 @@ def _group_seeds_by_pid(
     return rows_f[order_g], pids_f[order_g], seeds_f[order_g]
 
 
+def _ranked_dists(
+    mat: np.ndarray, qm: np.ndarray, qidx: np.ndarray, cf: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Squared L2 distance of each (query qidx, row cf) pair, computed
+    in ``_DIST_CHUNK``-row chunks (the same per-row arithmetic as one
+    whole-batch gather). Returns (query, row, dist, rank-in-query) in
+    (query, dist, row) order. The pairs must arrive sorted by (query,
+    row): lexsort is stable, so the row tie-break needs no key."""
+    dd = np.empty(len(cf))
+    for lo in range(0, len(cf), _DIST_CHUNK):
+        diff = mat[cf[lo:lo + _DIST_CHUNK]]
+        diff -= qm[qidx[lo:lo + _DIST_CHUNK]]
+        dd[lo:lo + _DIST_CHUNK] = np.einsum("ij,ij->i", diff, diff)
+    order = np.lexsort((dd, qidx))
+    qs_ = qidx[order]
+    rank = np.arange(len(qs_)) - np.searchsorted(qs_, qs_)
+    return qs_, cf[order], dd[order], rank
+
+
 def _beam_search_seeded(
     ids: np.ndarray,
     mat: np.ndarray,
@@ -318,7 +340,15 @@ def _beam_search_seeded(
     vectorized twin of the reference's heap loop
     (``src/hnsw.zig:211-224``): each step expands the beams of ALL
     queries in one numpy batch; the explored set is ef-bounded;
-    results are the best k explored, ascending (distance, id)."""
+    results are the best k explored, ascending (distance, id).
+
+    The result is a running top-k: each step keeps only its own best k
+    rows per query (from the (query, dist, node) order the beam already
+    needs), so the final merge sorts at most (steps + 1) * k rows per
+    query instead of every explored row. Distances are computed in
+    ``_DIST_CHUNK``-row chunks. Both are exact: the rows, order and
+    dtypes equal those of the keep-everything kernel (pinned by
+    tests/test_beam_unit.py::test_beam_matches_reference_kernel)."""
     n = len(ids)
     nb = len(qm)
     budget = max(ef, k)
@@ -351,6 +381,9 @@ def _beam_search_seeded(
     ns = seeds_per_q.shape[1]
     beam_width = max(8, budget // 8, ns)
     max_steps = max(3, -(-budget // beam_width))
+    # plain ndarrays: a memmap's __getitem__ costs on every gather
+    mat = np.asarray(mat)
+    adj = np.asarray(adj)
     # visited as a SORTED key array (key = q * (n+1) + node), not a
     # dense (nb, n) bitmap: the bitmap was O(queries x shard_rows)
     # memory *zeroed per task* — 313 MB per 313-query block on a
@@ -361,17 +394,18 @@ def _beam_search_seeded(
     stride = n + 1
     sq = seeds_per_q.copy()
     sq[sq < 0] = n  # sentinel for missing seeds (empty cells)
-    sqr = sq.ravel()
     visited_keys = np.unique(
-        np.repeat(np.arange(nb, dtype=np.int64), ns) * stride + sqr
+        np.repeat(np.arange(nb, dtype=np.int64), ns) * stride + sq.ravel()
     )
-    d0 = np.full(len(sqr), np.inf)
-    live = sqr < n
-    diff = mat[sqr[live]] - np.repeat(qm, ns, axis=0)[live]
-    d0[live] = np.einsum("ij,ij->i", diff, diff)
-    acc_q = [np.repeat(np.arange(nb, dtype=np.int64), ns)]
-    acc_p = [sqr.astype(np.int64)]
-    acc_d = [d0]
+    # the result keeps each step's best k per query, seeds included:
+    # every step's rows are new (query, node) pairs, so the union
+    # holds the best k explored. Seeds enter deduped and
+    # sentinel-free, so no row repeats and no final dedupe is needed.
+    q0, p0 = np.divmod(visited_keys, stride)
+    live = p0 < n
+    qs_, ps_, ds_, rank = _ranked_dists(mat, qm, q0[live], p0[live])
+    top = rank < k
+    res_q, res_p, res_d = [qs_[top]], [ps_[top]], [ds_[top]]
     beam = np.full((nb, beam_width), n, dtype=np.int64)
     beam[:, :ns] = sq
     active = np.ones(nb, dtype=bool)
@@ -383,63 +417,37 @@ def _beam_search_seeded(
         qidx = np.repeat(aq, cand.shape[1])
         cf = cand.ravel()
         real = cf < n  # drop adjacency padding (node n)
-        qidx, cf = qidx[real], cf[real]
-        if not len(qidx):
-            break
-        key = qidx * stride + cf
-        _, u = np.unique(key, return_index=True)
-        qidx, cf = qidx[u], cf[u]
-        key = qidx * stride + cf  # sorted ascending (unique's order)
+        key = np.unique(qidx[real] * stride + cf[real])
         pos = np.searchsorted(visited_keys, key)
         seen = np.zeros(len(key), dtype=bool)
         inb = pos < len(visited_keys)
         seen[inb] = visited_keys[pos[inb]] == key[inb]
-        qidx, cf, key = qidx[~seen], cf[~seen], key[~seen]
-        if not len(qidx):
+        key = key[~seen]
+        if not len(key):
             break
         # both inputs sorted: concatenate + sort is a cheap merge of
         # O(explored) keys, never O(shard_rows)
         visited_keys = np.sort(np.concatenate([visited_keys, key]))
-        diff = mat[cf] - qm[qidx]
-        dd = np.einsum("ij,ij->i", diff, diff)
-        acc_q.append(qidx)
-        acc_p.append(cf)
-        acc_d.append(dd)
-        order = np.lexsort((cf, dd, qidx))
-        qs_, ps_ = qidx[order], cf[order]
-        starts = np.searchsorted(qs_, np.arange(nb + 1))
-        rank = np.arange(len(qs_)) - starts[qs_]
+        qidx, cf = np.divmod(key, stride)
+        qs_, ps_, ds_, rank = _ranked_dists(mat, qm, qidx, cf)
+        top = rank < k
+        res_q.append(qs_[top])
+        res_p.append(ps_[top])
+        res_d.append(ds_[top])
         keep = rank < beam_width
         beam = np.full((nb, beam_width), n, dtype=np.int64)
         beam[qs_[keep], rank[keep]] = ps_[keep]
         active = np.zeros(nb, dtype=bool)
         active[qs_] = True
-    pall, dall, qall = map(np.concatenate, (acc_p, acc_d, acc_q))
-    ok = pall < n  # drop sentinel seeds
-    pall, dall, qall = pall[ok], dall[ok], qall[ok]
-    order = np.lexsort((pall, dall, qall))
-    qs_, ps_, ds_ = qall[order], pall[order], dall[order]
-    # dedupe (query, node): seeds may also be re-found via edges
-    kq = qs_ * (n + 1) + ps_
-    first = np.ones(len(kq), dtype=bool)
-    first[1:] = kq[1:] != kq[:-1]
-    qs_, ps_, ds_ = qs_[first], ps_[first], ds_[first]
+    qs_, ps_, ds_ = map(np.concatenate, (res_q, res_p, res_d))
     order = np.lexsort((ps_, ds_, qs_))
     qs_, ps_, ds_ = qs_[order], ps_[order], ds_[order]
-    starts = np.searchsorted(qs_, np.arange(nb + 1))
-    out_q, out_v, out_d = [], [], []
-    ids_arr = np.asarray(ids)
-    for qi in range(nb):
-        lo = starts[qi]
-        hi = min(starts[qi + 1], lo + k)
-        out_q.append(np.full(hi - lo, qids[qi], dtype=np.int64))
-        out_v.append(ids_arr[ps_[lo:hi]])
-        out_d.append(ds_[lo:hi])
+    top = np.arange(len(qs_)) - np.searchsorted(qs_, qs_) < k
     return pd.DataFrame(
         {
-            "query_id": np.concatenate(out_q) if out_q else [],
-            "vec_id": np.concatenate(out_v) if out_v else [],
-            "dist_sq": np.concatenate(out_d) if out_d else [],
+            "query_id": np.asarray(qids).astype(np.int64)[qs_[top]],
+            "vec_id": np.asarray(ids)[ps_[top]],
+            "dist_sq": ds_[top],
         }
     )
 

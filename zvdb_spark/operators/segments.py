@@ -559,16 +559,17 @@ def exact_search_segments(
                         c_d.append(dex)
                 cand_i = np.concatenate(c_ids, axis=1)
                 cand_d = np.concatenate(c_d, axis=1)
-                # per-row lexsort: exact (d, id) resolve over the
-                # rescored per-chunk winners (also re-sorts the
-                # single-chunk case, whose GEMM-order selection may
-                # disagree with the rescored order on ties)
-                sel = np.empty((len(qids), kk), dtype=np.int64)
-                for r in range(len(qids)):
-                    o = np.lexsort((cand_i[r], cand_d[r]))[:kk]
-                    sel[r] = o
-                cand_i = np.take_along_axis(cand_i, sel, axis=1)
-                cand_d = np.take_along_axis(cand_d, sel, axis=1)
+                # one lexsort by (row, d, id): exact (d, id) resolve
+                # of each row's rescored per-chunk winners (also
+                # re-sorts the single-chunk case, whose GEMM-order
+                # selection may disagree with the rescored order on
+                # ties)
+                nq_c, width = cand_d.shape
+                row = np.repeat(np.arange(nq_c), width)
+                cand_i, cand_d = cand_i.ravel(), cand_d.ravel()
+                sel = np.lexsort((cand_i, cand_d, row))
+                sel = sel.reshape(nq_c, width)[:, :kk]
+                cand_i, cand_d = cand_i[sel], cand_d[sel]
                 yield pd.DataFrame(
                     {
                         "query_id": np.repeat(qids, kk),

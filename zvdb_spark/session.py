@@ -17,6 +17,23 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """48g, capped at 60% of the host's MemTotal so a default session
+    cannot grow the Spark driver heap past a small host's memory. Hosts
+    without ``meminfo`` get the plain 48g."""
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kb = int(line.split()[1])
+                    cap_mb = min(cap_mb, kb * 6 // 10 // 1024)
+                    break
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_session(
     app_name: str = "zvdb_spark",
     cpus: int | None = None,
@@ -53,7 +70,10 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # same single-BLAS-thread contract on a real cluster, where
