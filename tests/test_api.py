@@ -44,10 +44,17 @@ def test_approximate_search_returns_k(idx, spark, sf_dir):
     assert len(res) == 10
 
 
-def test_empty_index_empty_result(spark):
+def test_empty_index_empty_result(spark, sf_dir):
     empty = VectorIndex(spark)
     assert empty.search([1.0, 2.0], k=5).count() == 0
     assert empty.count() == 0
+    # a zero-row batch is an empty index too
+    zero = VectorIndex(spark).insert_batch(
+        load(spark, sf_dir, "embeddings").limit(0)
+    )
+    out = zero.search([0.0] * 64, k=5)
+    assert out.columns == ["query_id", "neighbor_id", "score", "rn"]
+    assert out.count() == 0
 
 
 def test_incremental_append(spark, sf_dir):

@@ -212,6 +212,96 @@ def test_structure_routing_across_dims(spark, dim):
             assert r >= 0.9, (dim, r)
 
 
+def test_build_rejects_empty_input(spark, sf_dir):
+    """An empty input frame is rejected by name before any sampling,
+    whether build counts it or the caller passes n_rows=0."""
+    empty = _emb(spark, sf_dir).limit(0)
+    for n_rows in (None, 0):
+        with pytest.raises(ValueError, match="no rows"):
+            GraphIndex(m=8, ef=64).build(empty, n_rows=n_rows)
+
+
+def test_rebuild_replaces_previous_build(spark, sf_dir):
+    """build() on a built index starts from an empty one: the old
+    build's vector, adjacency and edge segments are retired, and
+    search, n_rows and celled see only the new input."""
+    import zvdb_spark.operators.segments as S
+
+    emb = _emb(spark, sf_dir).localCheckpoint(eager=True)
+    a = emb.filter(F.col("vec_id") % 2 == 0)
+    b = emb.filter(F.col("vec_id") % 2 == 1)
+    idx = GraphIndex(m=8, ef=64).build(a)
+    idx.state()
+    old = (
+        {p for p, _, _ in idx._vec_meta.values()}
+        | {ap for *_, ap in idx._adj_meta.values() if ap}
+        | {e for e in idx._edge_meta.values() if e}
+    )
+    assert len(old) >= 3
+    idx.build(b)
+    nb = b.count()
+    assert idx.n_rows == nb
+    assert idx.celled.count() == nb
+    retired = {p for _, p in S._retired}
+    assert old <= retired
+    assert not {p for p, _, _ in idx._vec_meta.values()} & retired
+    q = _queries(spark, emb)  # ids of both halves
+    res = idx.search(q, k=5, n_queries=20).toPandas()
+    assert len(res) == 100
+    assert (res.vec_id % 2 == 1).all()
+    idx.retire()
+
+
+def test_append_repacks_only_dirty_shards(spark):
+    """Delta-cost state() on a 4-shard index. After build + state()
+    every shard has adjacency. After an append whose rows all land in
+    one cell, state() re-packs exactly the dirty shards (that cell's
+    shard plus the shards of its r_build nearest cells): they get new
+    adjacency and edge segments, the receiving shard a new vector
+    segment, and every other shard keeps all three prefixes
+    verbatim."""
+    rng = np.random.default_rng(3)
+    n, dim = 2000, 16
+    centers = 4.0 * rng.normal(size=(40, dim))
+    x = centers[rng.integers(0, 40, n)] + 0.5 * rng.normal(size=(n, dim))
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(x)],
+        "vec_id long, emb array<double>",
+    )
+    idx = GraphIndex(m=4, ef=64, cell_target_rows=50, n_shards=4).build(
+        emb, n_rows=n
+    )
+    idx.state()
+    assert len(idx._vec_meta) == 4
+    assert set(idx._adj_meta) == set(idx._vec_meta)
+    vec0, adj0 = dict(idx._vec_meta), dict(idx._adj_meta)
+    edge0 = dict(idx._edge_meta)
+    # copies of one cell's members under fresh ids land in that cell
+    cells = idx.celled.toPandas().sort_values("vec_id")
+    cell = int(cells.cell_id.iloc[0])
+    rows = cells[cells.cell_id == cell].head(5)
+    delta = spark.createDataFrame(
+        [(int(i) + n, [float(v) for v in e])
+         for i, e in zip(rows.vec_id, rows.emb)],
+        "vec_id long, emb array<double>",
+    )
+    idx.append(delta)
+    home = int(idx.cell_shard[cell])
+    dirty = set(idx._dirty)
+    assert home in dirty and dirty < set(vec0), dirty
+    idx.state()
+    assert idx.n_rows == n + len(rows)
+    for p in vec0:
+        assert (idx._vec_meta[p] == vec0[p]) == (p != home), p
+        if p in dirty:
+            assert idx._adj_meta[p][4] != adj0[p][4], p
+            assert idx._edge_meta[p] != edge0[p], p
+        else:
+            assert idx._adj_meta[p] == adj0[p], p
+            assert idx._edge_meta[p] == edge0[p], p
+    idx.retire()
+
+
 def test_empty_query_side(spark, sf_dir, built):
     emb, idx = built
     q = _queries(spark, emb, n=1).filter(F.col("query_id") < 0)

@@ -134,24 +134,65 @@ def test_graph_search_moves_no_index_data(spark, sf_dir):
     _assert_one_task_per_query_plan(idx.search(q, k=3, n_queries=4))
 
 
+def _count_jobs(spark, name, run):
+    """Run ``run()`` under its own job group; return (its result, the
+    number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{name}"
+    sc.setJobGroup(group, name, False)
+    try:
+        out = run()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_vector_searches_run_two_jobs(spark, sf_dir):
     """With n_queries supplied and the index state built, each search
     collects in exactly 2 Spark jobs: the query-block exchange and the
     result stage."""
     idx, q = _graph_index_and_queries(spark, sf_dir)
     idx.state()
-    sc = spark.sparkContext
     for name, run in (
         ("search", lambda: idx.search(q, k=3, n_queries=4)),
         ("exact_search", lambda: idx.exact_search(q, k=3, n_queries=4)),
     ):
-        group = f"test-jobs-{name}"
-        sc.setJobGroup(group, name, False)
-        try:
-            assert len(run().toPandas()) == 12
-        finally:
-            sc._jsc.clearJobGroup()
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2, name
+        n_rows, n_jobs = _count_jobs(
+            spark, name, lambda: len(run().toPandas())
+        )
+        assert n_rows == 12
+        assert n_jobs == 2, name
+
+
+def test_graph_write_path_job_counts(spark, sf_dir):
+    """The write path's Spark job counts with n_rows supplied, pinned
+    at their measured values: build 7, state 3, append 3, state 3.
+    Build is an append into an empty index; sharing the pack path
+    must not cost it a job."""
+    from pyspark.sql import functions as F
+
+    from zvdb_spark.functions.vector import as_double_array
+    from zvdb_spark.operators.graph_ann import GraphIndex
+    from zvdb_spark.sources.tables import load
+
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double_array("embedding").alias("emb")
+    )
+    base = emb.filter(F.col("vec_id") % 10 != 0).localCheckpoint(eager=True)
+    delta = emb.filter(F.col("vec_id") % 10 == 0).localCheckpoint(eager=True)
+    n_base = base.count()
+    idx = GraphIndex(m=8, ef=32, cell_target_rows=100)
+    counts = [
+        _count_jobs(spark, name, run)[1]
+        for name, run in (
+            ("build", lambda: idx.build(base, n_rows=n_base)),
+            ("state", idx.state),
+            ("append", lambda: idx.append(delta)),
+            ("state-after-append", idx.state),
+        )
+    ]
+    assert counts == [7, 3, 3, 3], counts
+    idx.retire()
 
 
 def test_window_frame_runs_on_aggregate(spark, sf_dir):

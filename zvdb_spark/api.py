@@ -105,7 +105,10 @@ class VectorIndex:
         One schema for every path (exact / approximate / empty):
         (query_id, neighbor_id, score, rn).
         """
-        if self._vectors is None:
+        # a batch of zero rows is an empty index too (build() rejects it)
+        if self._vectors is None or (
+            self._graph is None and self._vectors.isEmpty()
+        ):
             return self.spark.createDataFrame(
                 [], "query_id long, neighbor_id long, score double, rn int"
             )

@@ -24,8 +24,10 @@ measured well:
   time. (Measured alternative: shuffling the corpus through a
   cogroup for every build stage / search cost 22 s per build stage
   and ~25 s per search at 100k x 128-d.)
-- **build**: each node's M nearest are searched only among its cell
-  and the R-1 nearest cells (fraction ~R/C of the exact N² work).
+- **build**: fit the quantizer and shard map, then append every row
+  into the empty index (one pack path; every row probes). Each node's
+  M nearest are searched only among its cell and the R-1 nearest
+  cells (fraction ~R/C of the exact N² work).
   The work unit is a CELL — a tiny driver-made work list fans cells
   out to tasks that mmap the segments and GEMM; only the resulting
   edge list (N x M skinny rows) flows through Spark. Edges are
@@ -45,13 +47,13 @@ measured well:
 - **append**: new rows keep the quantizer, search their M nearest
   within their cell neighborhood (cost |new| x R x cell, never a
   rebuild), connect bidirectionally, local re-prune — the
-  reference's incremental ``insert``. Segments are immutable:
-  append re-packs ONLY the touched shards (linear IO over the
-  delta's shards, no graph recompute) under a fresh token; a
-  concurrent search keeps reading its old files. Every stage is
-  delta-cost end-to-end: the delta pack returns the row count and
-  touched-cell list in the same job, the edge GEMM runs only for
-  cells that received rows, the delta edges are the only thing
+  reference's incremental ``insert``. Segments are immutable: the
+  pack (the one build also uses) re-writes ONLY the touched shards
+  (linear IO over the delta's shards, no graph recompute) under a
+  fresh token; a concurrent search keeps reading its old files.
+  Every stage is delta-cost end-to-end: the pack returns the row
+  count and touched-cell list in the same job, the edge GEMM runs
+  only for cells that received rows, the delta edges are the only thing
   checkpointed (never the full edge table), and the adjacency
   re-pack at ``state()`` time touches only DIRTY shards — untouched
   shards keep their ``.adj.npy`` / ``.e*.npy`` files verbatim.
@@ -106,6 +108,7 @@ from zvdb_spark.operators.segments import (
     save_npy as _save_npy,
     seg_dir as _shared_seg_dir,
     touch_prefixes as _touch_prefixes,
+    write_vectors,
 )
 
 DEFAULT_CELL_TARGET = 400  # rows per quantizer cell
@@ -123,13 +126,13 @@ SEARCH_SCHEMA_STR = "query_id long, vec_id long, dist_sq double"
 _EDGE_SCHEMA = (
     "query_id long, neighbor_id long, score double, q_pid int, n_pid int"
 )
+# the pack also reports the new rows' count + cells so append needs
+# no separate count job
 _PACK_SCHEMA = (
     "pid int, n long, dim int, prefix string,"
-    " cells array<int>, seeds array<array<bigint>>"
+    " cells array<int>, seeds array<array<bigint>>,"
+    " newcells array<int>, n_new long"
 )
-# delta pack also reports the new rows' count + cells so append needs
-# no separate count job
-_PACK_DELTA_SCHEMA = _PACK_SCHEMA + ", newcells array<int>, n_new long"
 _META_SCHEMA = (
     "pid int, n long, maxdeg int, dim int, vprefix string, aprefix string"
 )
@@ -156,15 +159,10 @@ def _write_segment(
     neighbors 20+ dist² from every seed of their own (correctly
     routed) cell, while the earlier evenly-spaced-by-row-order picks
     covered sub-clusters only by luck. Farthest-point sampling puts
-    one seed per separated mode by construction. Shared by the bulk
-    pack and the append delta-merge."""
+    one seed per separated mode by construction. Called once per
+    shard the pack writes, by build and append alike."""
     n = len(ids)
-    xn = (mat * mat).sum(axis=1)
-    _save_npy(prefix, "ids", ids)
-    _save_npy(prefix, "mat", mat)
-    _save_npy(prefix, "mat32", mat.astype(np.float32))
-    _save_npy(prefix, "xn", xn)
-    _save_npy(prefix, "xn32", xn.astype(np.float32))
+    write_vectors(prefix, ids, mat)
     _save_npy(prefix, "cells", cells)
     _save_npy(prefix, "new", newm)
     order = np.argsort(cells, kind="stable")
@@ -494,6 +492,7 @@ class GraphIndex:
         self.cell_shard: np.ndarray | None = None  # (C,) cell -> pid
         self.cell_seeds: np.ndarray | None = None  # (C, spc) vec_ids, -1 pad
         # index data (DataFrames + segment files)
+        self._spark = None  # session of the last build()/load()
         self.celled: DataFrame | None = None  # (cell_id, vec_id, emb)
         self.n_rows: int = 0
         self._vec_meta: dict[int, tuple[str, int, int]] = {}  # pid->(prefix,n,dim)
@@ -505,7 +504,7 @@ class GraphIndex:
         # append can merge + re-cap one shard in isolation.
         self._edge_meta: dict[int, str] = {}
         # delta edges awaiting adjacency pack and the shards they
-        # dirty; _dirty None = full pack. The pending plan is LAZY
+        # dirty (build: every packed shard). The pending plan is LAZY
         # (the edge GEMM runs inside state()'s pack shuffle — no
         # separate materialization job); _pending_lazy marks that, so
         # the one case that could re-read retired segment files (a
@@ -513,22 +512,29 @@ class GraphIndex:
         # reads) checkpoints it just-in-time.
         self._pending_edges: DataFrame | None = None
         self._pending_lazy: bool = False
-        self._dirty: set[int] | None = None
+        self._dirty: set[int] = set()
         self._state: DataFrame | None = None
 
     def _seg_dir(self) -> str:
         return _shared_seg_dir(self.index_dir)
 
-    # -- build (R1-R5, bulk) ----------------------------------------
+    # -- build (R1-R5): an append into an empty index ----------------
     def build(self, emb: DataFrame, n_rows: int | None = None) -> "GraphIndex":
-        """emb: (vec_id, emb)."""
-        from zvdb_spark.operators.kmeans import assign_cells, kmeans_fit
+        """emb: (vec_id, emb). Replaces whatever the index held: fits
+        the quantizer on a sample, groups cells into shards, then packs
+        every row through the same ``_pack`` as ``append`` — into an
+        empty index, so every shard is new and every row probes."""
+        from zvdb_spark.operators.kmeans import assign_local, kmeans_fit
 
         if n_rows is None:
             n_rows = emb.count()
+        if n_rows == 0:
+            raise ValueError("build: the input frame has no rows")
+        self.retire()
+        self._spark = emb.sparkSession
         self.n_rows = n_rows
         c_cells = max(_MIN_CELLS, math.ceil(n_rows / self.cell_target_rows))
-        frac = min(1.0, (40.0 * c_cells) / max(n_rows, 1))
+        frac = min(1.0, (40.0 * c_cells) / n_rows)
         sample = emb.sample(fraction=frac, seed=self.seed) if frac < 1.0 else emb
         dim_guess = len(sample.select("emb").head()[0])
         if 40.0 * c_cells * dim_guess <= _LOCAL_KMEANS_MAX_ELEMS:
@@ -551,33 +557,21 @@ class GraphIndex:
         # cells very unevenly; sampling error is fine, skew is not).
         # Thread-chunked assign: the one-shot (sample x C) GEMM was
         # ~15 s of single-BLAS-thread driver time at the 1M shape.
-        from zvdb_spark.operators.kmeans import assign_local
-
         cell_assign, _ = assign_local(smat, self.centroids)
         cell_sample_counts = np.bincount(
             cell_assign, minlength=len(self.centroids)
         )
-        # kept LAZY: build's only consumer is the pack shuffle (one
-        # pass); materializing a second full copy of the corpus here
-        # bought nothing. append() re-derives assignments for old rows
-        # (one deterministic GEMM pass) when it unions.
-        self.celled = assign_cells(emb, self.centroids, "vec_id", "emb").select(
-            "cell_id", "vec_id", "emb"
-        )
         self._assign_shards(cell_weights=cell_sample_counts)
-        self._pack_vectors(self.celled)
-        nn = self._edges_from_segments()
-        _retire_prefixes(p for p in self._edge_meta.values() if p)
-        _retire_prefixes(a for *_, a in self._adj_meta.values() if a)
-        self._adj_meta = {}
-        self._edge_meta = {}
+        self.cell_seeds = np.full(
+            (len(self.centroids), self.seeds_per_cell), -1, dtype=np.int64
+        )
+        _, _, self._dirty = self._pack(emb)
+        self.celled = self._celled_from_segments()
         # LAZY: the edge GEMM streams straight into state()'s pack
         # shuffle — no intermediate materialization of the N x 2(M+1)
         # edge table (GEMM + shuffle + pack pipeline as ONE job)
-        self._pending_edges = _symmetrize(nn)
+        self._pending_edges = _symmetrize(self._edges_from_segments())
         self._pending_lazy = True
-        self._dirty = None  # full adjacency pack pending
-        self._state = None
         return self
 
     def _assign_shards(self, cell_weights: np.ndarray | None = None) -> None:
@@ -605,7 +599,7 @@ class GraphIndex:
             n_shards = min(max(1, int(self.n_shards_override)), c)
         else:
             n_shards = max(1, math.ceil(self.n_rows / self.shard_target_rows))
-            par = self.celled.sparkSession.sparkContext.defaultParallelism
+            par = self._spark.sparkContext.defaultParallelism
             floor = min(par, max(1, self.n_rows // _MIN_SHARD_ROWS))
             n_shards = min(max(n_shards, floor), c)
         if n_shards <= 1:
@@ -637,90 +631,37 @@ class GraphIndex:
         for p, s in enumerate(shards):
             self.cell_shard[s] = p
 
-    def _pack_vectors(self, celled: DataFrame) -> None:
-        """Write the per-shard VECTOR segments (ids sorted, embedding
-        matrix, per-row cell index, new-row mask) and collect per-cell
-        seed nodes from the same pass. One groupBy(pid) shuffle — the
-        single time the corpus crosses into Python — then ~C x spc
-        seed ids come back as metadata. ``is_new`` column (append
-        path) marks probe rows; absent means all rows probe."""
-        spark = celled.sparkSession
-        shard_map = spark.createDataFrame(
-            [(int(c), int(p)) for c, p in enumerate(self.cell_shard)],
-            "cell_id int, pid int",
-        )
-        cols = ["pid", "cell_id", "vec_id", "emb"]
-        has_new = "is_new" in celled.columns
-        if has_new:
-            cols.append("is_new")
-        nodes = celled.join(F.broadcast(shard_map), "cell_id").select(*cols)
-        seg_dir = self._seg_dir()
-        token = uuid.uuid4().hex[:12]
-        cmat = self.centroids
-        spc = self.seeds_per_cell
-
-        def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("vec_id", ignore_index=True)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            n = len(ids)
-            mat = np.ascontiguousarray(
-                np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            )
-            dim = mat.shape[1]
-            cells = pdf["cell_id"].to_numpy(dtype=np.int32)
-            newm = (
-                pdf["is_new"].to_numpy(dtype=bool)
-                if "is_new" in pdf.columns
-                else np.ones(n, dtype=bool)
-            )
-            pid = int(pdf["pid"].iloc[0])
-            prefix = os.path.join(seg_dir, f"seg_{token}_{pid}")
-            out_cells, out_seeds = _write_segment(
-                prefix, ids, mat, cells, newm, cmat, spc
-            )
-            return pd.DataFrame(
-                [(pid, n, dim, prefix, out_cells, out_seeds)],
-                columns=["pid", "n", "dim", "prefix", "cells", "seeds"],
-            )
-
-        with _no_aqe_coalesce(spark):
-            meta = (
-                nodes.groupBy("pid")
-                .applyInPandas(_pack, _PACK_SCHEMA)
-                .collect()
-            )
-        _retire_prefixes(p for p, _, _ in self._vec_meta.values())
-        self._vec_meta = {r.pid: (r.prefix, r.n, r.dim) for r in meta}
-        c = len(cmat)
-        seeds = np.full((c, spc), -1, dtype=np.int64)
-        for r in meta:
-            for cell, sds in zip(r.cells, r.seeds):
-                for j, s in enumerate(sds[:spc]):
-                    seeds[cell, j] = s
-        self.cell_seeds = seeds
-
-    def _pack_vectors_delta(
-        self, new_celled: DataFrame
-    ) -> tuple[int, list[int], set[int]]:
-        """Merge ONLY the delta into the per-shard segments: the new
-        rows (not the corpus) shuffle by pid; each touched shard's
-        task mmaps its existing arrays, merge-inserts the delta in id
-        order, and writes fresh files under a new token (immutable —
-        concurrent searches keep the old ones). Untouched shards keep
-        their files verbatim. Cost is O(touched-shard bytes) local
-        I/O plus a delta-sized shuffle — the full corpus never crosses
-        the JVM<->Python boundary again, which is what makes append
-        cheaper than rebuild at any corpus size.
+    def _pack(self, emb: DataFrame) -> tuple[int, list[int], set[int]]:
+        """Route new (vec_id, emb) rows to their cells and shards and
+        merge them into the per-shard VECTOR segments (ids sorted,
+        embedding matrix, per-row cell index, new-row mask); collect
+        per-cell seed nodes from the same pass. Only the new rows
+        shuffle by pid; each touched shard's task mmaps its existing
+        arrays, merge-inserts the new rows in id order, and writes
+        fresh files under a new token (immutable — concurrent
+        searches keep the old ones). Untouched shards keep their files
+        verbatim. Cost is O(touched-shard bytes) local I/O plus a
+        new-rows-sized shuffle: build crosses the corpus into Python
+        once, and append never again, which is what makes append
+        cheaper than rebuild at any corpus size. Cell seeds are
+        refreshed only for the cells of touched shards.
 
         Returns (n_new, new_cells, touched_pids) from the SAME job —
         append needs no separate count/groupBy pass."""
-        spark = new_celled.sparkSession
+        from zvdb_spark.operators.kmeans import assign_cells
+
+        spark = self._spark
         shard_map = spark.createDataFrame(
             [(int(c), int(p)) for c, p in enumerate(self.cell_shard)],
             "cell_id int, pid int",
         )
-        nodes = new_celled.join(F.broadcast(shard_map), "cell_id").select(
-            "pid", "cell_id", "vec_id", "emb"
+        # NOT checkpointed: this pack is the input plan's ONLY consumer,
+        # so it is evaluated exactly once, inside the shuffle write;
+        # everything after derives from the packed segments
+        nodes = (
+            assign_cells(emb, self.centroids, "vec_id", "emb")
+            .join(F.broadcast(shard_map), "cell_id")
+            .select("pid", "cell_id", "vec_id", "emb")
         )
         seg_dir = self._seg_dir()
         token = uuid.uuid4().hex[:12]
@@ -777,7 +718,7 @@ class GraphIndex:
         with _no_aqe_coalesce(spark):
             meta = (
                 nodes.groupBy("pid")
-                .applyInPandas(_merge, _PACK_DELTA_SCHEMA)
+                .applyInPandas(_merge, _PACK_SCHEMA)
                 .collect()
             )
         touched = {r.pid for r in meta}
@@ -811,7 +752,7 @@ class GraphIndex:
         ``cells`` restricts the work list (append passes only the
         cells that received new rows — GEMM cost scales with the
         delta, not the corpus)."""
-        spark = self.celled.sparkSession
+        spark = self._spark
         nbr = _cell_neighbors(self.centroids, self.r_build)
         cell_pid = self.cell_shard
         vmeta = {p: v[0] for p, v in self._vec_meta.items()}  # pid -> prefix
@@ -934,15 +875,14 @@ class GraphIndex:
         # independent cell.
         return work.repartition(ntasks).mapInPandas(_task, _EDGE_SCHEMA)
 
-    def _celled_from_segments(self, spark=None) -> DataFrame:
+    def _celled_from_segments(self) -> DataFrame:
         """(cell_id, vec_id, emb) read back from the packed segments —
         the authoritative snapshot of what the index actually holds.
-        append() consumes THIS rather than re-evaluating the original
-        input plan, so packed rows, edges, and n_rows can never
-        diverge even if the input DataFrame were nondeterministic.
-        ``spark`` is only needed when no ``celled`` frame exists yet
-        (load() reopening a persisted index)."""
-        spark = spark if spark is not None else self.celled.sparkSession
+        build(), append() and load() all set ``celled`` from THIS
+        rather than from an input plan, so packed rows, edges, and
+        n_rows can never diverge even if the input DataFrame were
+        nondeterministic. Lazy: building the frame runs no job."""
+        spark = self._spark
         meta = [
             (int(p), prefix)
             for p, (prefix, _, _) in sorted(self._vec_meta.items())
@@ -978,8 +918,6 @@ class GraphIndex:
         segments re-pack under a fresh token (immutable files,
         concurrent searches keep their old ones) and the graph GEMM
         runs only for the new rows."""
-        from zvdb_spark.operators.kmeans import assign_cells
-
         if self.celled is None:
             raise ValueError("build() first")
         # a pending LAZY edge plan reads the current segment files;
@@ -991,17 +929,9 @@ class GraphIndex:
                 eager=True
             )
             self._pending_lazy = False
-        # NOT checkpointed: the delta pack below is this plan's ONLY
-        # consumer (the old second consumer — a count job — is folded
-        # into the pack), so it is evaluated exactly once, inside the
-        # pack's shuffle write; everything after derives from the
-        # packed segments, never from this plan again.
-        new_celled = assign_cells(
-            emb_new, self.centroids, "vec_id", "emb"
-        ).select("cell_id", "vec_id", "emb")
         # ONE job packs the delta AND returns the row count + touched
         # cells + touched shards (C-bounded metadata)
-        n_new, new_cells, touched_pids = self._pack_vectors_delta(new_celled)
+        n_new, new_cells, touched_pids = self._pack(emb_new)
         if n_new == 0:
             return self
         self.n_rows += n_new
@@ -1032,8 +962,7 @@ class GraphIndex:
         else:
             self._pending_edges = self._pending_edges.unionAll(delta_edges)
         self._pending_lazy = True
-        if self._dirty is not None:
-            self._dirty |= dirty
+        self._dirty |= dirty
         self._state = None
         return self
 
@@ -1166,9 +1095,8 @@ class GraphIndex:
         touch_prefixes(p for p, _, _ in idx._vec_meta.values())
         touch_prefixes(a for *_, a in idx._adj_meta.values() if a)
         touch_prefixes(e for e in idx._edge_meta.values() if e)
-        idx.celled = idx._celled_from_segments(spark)
-        idx._dirty = set()  # nothing pending: disk is the truth
-        idx._pending_edges = None
+        idx._spark = spark
+        idx.celled = idx._celled_from_segments()
         return idx
 
     def retire(self) -> None:
@@ -1200,7 +1128,7 @@ class GraphIndex:
         self.centroids = None
         self.cell_shard = None
         self.cell_seeds = None
-        self._dirty = None
+        self._dirty = set()
         self.structure_ratio = None
 
     def state(self) -> DataFrame:
@@ -1213,24 +1141,19 @@ class GraphIndex:
         edges next to the vector segment, and returns the tiny
         metadata DataFrame (pid, n, maxdeg, dim, vprefix, aprefix);
         search reads the same rows from ``_adj_meta`` and carries them
-        in its task closure. After a build everything is dirty
-        (first full pack); after an append only the shards the delta
-        touched are — untouched shards keep their files verbatim, so
-        the re-pack cost scales with the DELTA's neighborhood, not
-        the corpus. Index bytes live in the segment files — search
-        moves ZERO index data through shuffles or the JVM<->Python
-        boundary."""
+        in its task closure. After a build every packed shard is dirty
+        and has no stored edges yet; after an append only the shards
+        the delta touched are — untouched shards keep their files
+        verbatim, so the re-pack cost scales with the DELTA's
+        neighborhood, not the corpus. Index bytes live in the segment
+        files — search moves ZERO index data through shuffles or the
+        JVM<->Python boundary."""
         if self._state is not None:
             return self._state
         if self.celled is None:
             raise ValueError("build() first")
-        spark = self.celled.sparkSession
-        full = self._dirty is None or not self._adj_meta
-        dirty = sorted(
-            self._vec_meta
-            if full
-            else (p for p in self._dirty if p in self._vec_meta)
-        )
+        spark = self._spark
+        dirty = sorted(p for p in self._dirty if p in self._vec_meta)
         if dirty:
             # one-sided groupBy instead of a cogroup: a sentinel row
             # (src == dst == -1, impossible for a real edge — self-
@@ -1249,10 +1172,7 @@ class GraphIndex:
             seg_dir = self._seg_dir()
             token = uuid.uuid4().hex[:12]
             vmeta = dict(self._vec_meta)  # pid -> (prefix, n, dim)
-            emeta = (
-                {} if full
-                else {p: e for p, e in self._edge_meta.items() if e}
-            )
+            emeta = {p: e for p, e in self._edge_meta.items() if e}
             two_m = 2 * self.m
             empty_meta = pd.DataFrame(
                 columns=[
@@ -1384,7 +1304,7 @@ class GraphIndex:
         if self.celled is None:
             return None
         self.state()
-        spark = self.celled.sparkSession
+        spark = self._spark
         meta = [(p, e) for p, e in sorted(self._edge_meta.items()) if e]
         if not meta:
             return spark.createDataFrame([], _PENDING_SCHEMA)

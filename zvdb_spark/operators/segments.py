@@ -460,6 +460,18 @@ def _group_segments(
     return [members for _, members in groups]
 
 
+def write_vectors(prefix: str, ids: np.ndarray, mat: np.ndarray) -> None:
+    """Write one shard's vector files — the ones exact_search_segments
+    reads: sorted ``ids``, the f64 ``mat`` and its row norms ``xn``,
+    and f32 copies of both (``mat32``, ``xn32``)."""
+    xn = (mat * mat).sum(axis=1)
+    save_npy(prefix, "ids", ids)
+    save_npy(prefix, "mat", mat)
+    save_npy(prefix, "mat32", mat.astype(np.float32))
+    save_npy(prefix, "xn", xn)
+    save_npy(prefix, "xn32", xn.astype(np.float32))
+
+
 def exact_search_segments(
     queries: DataFrame,
     meta: list[tuple[int, str, int, int]],
@@ -634,12 +646,7 @@ class SegmentCorpus:
             )
             pid = int(pdf["pid"].iloc[0])
             prefix = os.path.join(d, f"xseg_{token}_{pid}")
-            xn = (mat * mat).sum(axis=1)
-            save_npy(prefix, "ids", ids)
-            save_npy(prefix, "mat", mat)
-            save_npy(prefix, "mat32", mat.astype(np.float32))
-            save_npy(prefix, "xn", xn)
-            save_npy(prefix, "xn32", xn.astype(np.float32))
+            write_vectors(prefix, ids, mat)
             return pd.DataFrame(
                 [(pid, prefix, len(ids), mat.shape[1])],
                 columns=["pid", "prefix", "n", "dim"],
