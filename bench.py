@@ -487,8 +487,8 @@ def main() -> None:
         timings["vector_index_build"] = round(insert_sec, 3)
         result["insert_pts_per_s"] = round(BENCH_N / insert_sec, 2)
         # adjacency pack (state()) timed separately: build() ends with
-        # packed vector segments + checkpointed edge list; the pack
-        # turns that into the searchable position-mapped adjacency.
+        # packed vector segments; state() runs the edge GEMM and packs
+        # its edges into the searchable position-mapped adjacency.
         # insert_pts_per_s keeps the r1-r3 definition (build only);
         # insert_pts_per_s_searchable is the end-to-end number.
         t0 = time.perf_counter()

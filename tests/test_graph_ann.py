@@ -10,11 +10,12 @@ matches a full rebuild within recall tolerance.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from zvdb_spark.functions.vector import as_double_array
-from zvdb_spark.operators.graph_ann import GraphIndex
+from zvdb_spark.operators.graph_ann import GraphIndex, _cell_neighbors
 from zvdb_spark.operators.knn import exact_search_blocked
 from zvdb_spark.sources.tables import load
 
@@ -287,7 +288,10 @@ def test_append_repacks_only_dirty_shards(spark):
     )
     idx.append(delta)
     home = int(idx.cell_shard[cell])
-    dirty = set(idx._dirty)
+    # dirty by definition: the shards of the cell and its r_build
+    # nearest cells
+    nbrs = _cell_neighbors(idx.centroids, idx.r_build)[cell]
+    dirty = {int(idx.cell_shard[g]) for g in nbrs}
     assert home in dirty and dirty < set(vec0), dirty
     idx.state()
     assert idx.n_rows == n + len(rows)
@@ -300,6 +304,66 @@ def test_append_repacks_only_dirty_shards(spark):
             assert idx._adj_meta[p] == adj0[p], p
             assert idx._edge_meta[p] == edge0[p], p
     idx.retire()
+
+
+def _graph_snapshot(idx, q):
+    """What a stated graph index serves: its capped edges, its k=5 ANN
+    rows for ``q`` and its per-cell seeds."""
+    edges = idx.edges.toPandas().sort_values(
+        ["pid", "src", "dst"], ignore_index=True
+    )
+    rows = idx.search(q, k=5, n_queries=q.count()).toPandas().sort_values(
+        ["query_id", "dist_sq", "vec_id"], ignore_index=True
+    )
+    return edges, rows, idx.cell_seeds.copy()
+
+
+def test_unstated_appends_give_the_stated_graph(spark):
+    """Appends with no state() in between give the same graph as
+    stating after every step, on a 4-shard index: each batch's edges
+    come from the segments of its own time, and the capped merge makes
+    the order of the merges irrelevant. Edges, search rows and cell
+    seeds must be equal."""
+    rng = np.random.default_rng(5)
+    dim = 16
+    centers = 4.0 * rng.normal(size=(40, dim))
+
+    def frame(lo, n):
+        x = centers[rng.integers(0, 40, n)] + 0.5 * rng.normal(size=(n, dim))
+        return spark.createDataFrame(
+            [(lo + i, v.tolist()) for i, v in enumerate(x)],
+            "vec_id long, emb array<double>",
+        ).localCheckpoint(eager=True)
+
+    base, d1, d2 = frame(0, 2000), frame(2000, 150), frame(2150, 150)
+    q = frame(10_000, 20).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
+    )
+
+    def index():
+        return GraphIndex(m=4, ef=64, cell_target_rows=50, n_shards=4).build(
+            base, n_rows=2000
+        )
+
+    stated = index()
+    stated.state()
+    stated.append(d1).state()
+    after_d1 = _graph_snapshot(stated, q)
+    stated.append(d2).state()
+    after_d2 = _graph_snapshot(stated, q)
+    stated.retire()
+
+    for deltas, want in (((d1,), after_d1), ((d1, d2), after_d2)):
+        idx = index()
+        for d in deltas:
+            idx.append(d)
+        idx.state()
+        got = _graph_snapshot(idx, q)
+        idx.retire()
+        assert len(got[0]) > 0 and len(got[1]) == 100
+        pd.testing.assert_frame_equal(got[0], want[0])
+        pd.testing.assert_frame_equal(got[1], want[1])
+        np.testing.assert_array_equal(got[2], want[2])
 
 
 def test_empty_query_side(spark, sf_dir, built):

@@ -164,11 +164,35 @@ def test_vector_searches_run_two_jobs(spark, sf_dir):
         assert n_jobs == 2, name
 
 
-def test_graph_write_path_job_counts(spark, sf_dir):
+def test_edge_plan_runs_one_gemm_in_both_directions(spark, sf_dir):
+    """The edge plan ``state()`` runs: one MapInPandas (the edge GEMM)
+    and no Union, whose rows carry each edge in both directions —
+    every (a, b, score) row has its (b, a, score) twin."""
+    from zvdb_spark.operators.graph_ann import _cell_neighbors
+    from zvdb_spark.plans.audit import explain_str
+
+    idx, _ = _graph_index_and_queries(spark, sf_dir)
+    edges = idx._edges_from_segments(
+        sorted(idx._pending_cells), _cell_neighbors(idx.centroids, idx.r_build)
+    )
+    simple = explain_str(edges, "simple")
+    assert simple.count("MapInPandas") == 1, simple
+    assert "Union" not in simple, simple
+    pdf = edges.toPandas()
+    assert len(pdf) > 0
+    fwd = set(zip(pdf.src, pdf.dst, pdf.score))
+    assert fwd == set(zip(pdf.dst, pdf.src, pdf.score))
+    idx.retire()
+
+
+def test_graph_write_path_job_counts(spark, sf_dir, monkeypatch):
     """The write path's Spark job counts with n_rows supplied, pinned
     at their measured values: build 7, state 3, append 3, state 3.
     Build is an append into an empty index; sharing the pack path
-    must not cost it a job."""
+    must not cost it a job. An append over a batch that has not been
+    stated runs that state() first (3 jobs) and then its own pack (3),
+    and nothing on the write path checkpoints."""
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from zvdb_spark.functions.vector import as_double_array
@@ -181,6 +205,11 @@ def test_graph_write_path_job_counts(spark, sf_dir):
     base = emb.filter(F.col("vec_id") % 10 != 0).localCheckpoint(eager=True)
     delta = emb.filter(F.col("vec_id") % 10 == 0).localCheckpoint(eager=True)
     n_base = base.count()
+    checkpoints = []
+    monkeypatch.setattr(
+        DataFrame, "localCheckpoint",
+        lambda df, *a, **kw: checkpoints.append(df),
+    )
     idx = GraphIndex(m=8, ef=32, cell_target_rows=100)
     counts = [
         _count_jobs(spark, name, run)[1]
@@ -192,6 +221,16 @@ def test_graph_write_path_job_counts(spark, sf_dir):
         )
     ]
     assert counts == [7, 3, 3, 3], counts
+    unstated = [
+        _count_jobs(spark, name, run)[1]
+        for name, run in (
+            ("rebuild", lambda: idx.build(base, n_rows=n_base)),
+            ("append-unstated", lambda: idx.append(delta)),
+            ("state-after-unstated", idx.state),
+        )
+    ]
+    assert unstated == [7, 6, 3], unstated
+    assert checkpoints == []
     idx.retire()
 
 

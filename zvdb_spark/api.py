@@ -115,7 +115,7 @@ class VectorIndex:
         if self._graph is None:
             self.build()
         q = np.atleast_2d(np.asarray(query, dtype=np.float64))
-        qdf = self._qdf(q, None)
+        qdf = self._qdf(q)
         if approximate:
             from pyspark.sql import Window as W
 
@@ -129,22 +129,9 @@ class VectorIndex:
             qdf, k=k, dtype="float64", n_queries=len(q)
         )
 
-    def search_batch(self, queries, k: int = 10, query_ids=None) -> DataFrame:
-        if self._graph is None:
-            self.build()
-        q = np.atleast_2d(np.asarray(queries, dtype=np.float64))
-        return self._graph.exact_search(
-            self._qdf(q, query_ids), k=k, dtype="float64", n_queries=len(q)
-        )
-
-    def _qdf(self, q: np.ndarray, query_ids) -> DataFrame:
-        if query_ids is None:
-            query_ids = range(len(q))
+    def _qdf(self, q: np.ndarray) -> DataFrame:
         return self.spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in row])
-                for i, row in zip(query_ids, q)
-            ],
+            [(i, [float(x) for x in row]) for i, row in enumerate(q)],
             "query_id long, qemb array<double>",
         )
 

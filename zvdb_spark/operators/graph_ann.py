@@ -30,13 +30,14 @@ measured well:
   cells (fraction ~R/C of the exact N² work).
   The work unit is a CELL — a tiny driver-made work list fans cells
   out to tasks that mmap the segments and GEMM; only the resulting
-  edge list (N x M skinny rows) flows through Spark. Edges are
-  symmetrized, deduplicated and degree-capped at 2M inside the
-  per-shard adjacency pack — the distributed connect + shrink
-  (``src/hnsw.zig:119-170``) — and each shard stores its capped
-  edge list as an immutable ``.npy`` segment next to its vectors,
-  so an append can re-cap a shard WITHOUT ever re-reading the rest
-  of the graph (cap is monotone: cap(cap(A) ∪ B) = cap(A ∪ B)).
+  edge list (2 x N x M skinny rows) flows through Spark. Each GEMM
+  task emits every edge in both directions (the connect half of
+  ``src/hnsw.zig:119-170``); the per-shard adjacency pack
+  deduplicates and degree-caps them at 2M (the shrink half), and
+  each shard stores its capped edge list as an immutable ``.npy``
+  segment next to its vectors, so an append can re-cap a shard
+  WITHOUT ever re-reading the rest of the graph (cap is monotone:
+  cap(cap(A) ∪ B) = cap(A ∪ B)).
 - **search**: a query seeds its beam from ``seeds_per_cell`` entry
   nodes of its ``nseed`` nearest cells, then runs a batched
   best-first beam per shard those cells live in. All of it — routing,
@@ -52,11 +53,12 @@ measured well:
   (linear IO over the delta's shards, no graph recompute) under a
   fresh token; a concurrent search keeps reading its old files.
   Every stage is delta-cost end-to-end: the pack returns the row
-  count and touched-cell list in the same job, the edge GEMM runs
-  only for cells that received rows, the delta edges are the only thing
-  checkpointed (never the full edge table), and the adjacency
-  re-pack at ``state()`` time touches only DIRTY shards — untouched
-  shards keep their ``.adj.npy`` / ``.e*.npy`` files verbatim.
+  count and touched-cell list in the same job, and between calls the
+  index holds only that cell list (no edge plan, no checkpoint).
+  ``state()`` runs the edge GEMM for those cells alone and re-packs
+  only DIRTY shards — untouched shards keep their ``.adj.npy`` /
+  ``.e*.npy`` files verbatim. An append runs any pending ``state()``
+  first, so each batch's edges come from the segments of its time.
 
 Measured basis (scripts/proto_ann.py + scripts/scale_trend.py,
 128-d, k=10, 32 cores): on a clustered corpus (mixture of Gaussians
@@ -123,9 +125,6 @@ _LOCAL_KMEANS_MAX_ELEMS = 50_000_000
 _DIST_CHUNK = 4096
 
 SEARCH_SCHEMA_STR = "query_id long, vec_id long, dist_sq double"
-_EDGE_SCHEMA = (
-    "query_id long, neighbor_id long, score double, q_pid int, n_pid int"
-)
 # the pack also reports the new rows' count + cells so append needs
 # no separate count job
 _PACK_SCHEMA = (
@@ -225,25 +224,6 @@ def _canonical_capped_edges(
     )
     cap = (np.arange(len(src)) - grp_start) < two_m
     return src[cap], dst[cap], sc[cap]
-
-
-def _symmetrize(nn: DataFrame) -> DataFrame:
-    """Bidirectional edges — the connect half of the reference's
-    connect + shrinkConnections (src/hnsw.zig:119-170). NO shuffle:
-    the degree cap, dedupe and shrink all happen inside the per-shard
-    adjacency pack (``state``), which needs a groupBy(pid) shuffle
-    anyway — a separate per-src window here was one full extra
-    shuffle of the edge table for nothing. Each edge carries its
-    SRC's shard (both endpoints' shards are known at GEMM time) so
-    the pack groups without a corpus join.
-    Returns (src, dst, score, pid)."""
-    fwd = nn.select(F.col("query_id").alias("src"),
-                    F.col("neighbor_id").alias("dst"), "score",
-                    F.col("q_pid").alias("pid"))
-    rev = nn.select(F.col("neighbor_id").alias("src"),
-                    F.col("query_id").alias("dst"), "score",
-                    F.col("n_pid").alias("pid"))
-    return fwd.unionAll(rev)
 
 
 def _structure_ratio(smat: np.ndarray, centroids: np.ndarray) -> float:
@@ -503,16 +483,11 @@ class GraphIndex:
         # Stored in id space (incl. cross-shard dsts) so a later
         # append can merge + re-cap one shard in isolation.
         self._edge_meta: dict[int, str] = {}
-        # delta edges awaiting adjacency pack and the shards they
-        # dirty (build: every packed shard). The pending plan is LAZY
-        # (the edge GEMM runs inside state()'s pack shuffle — no
-        # separate materialization job); _pending_lazy marks that, so
-        # the one case that could re-read retired segment files (a
-        # second append re-packing the files the first append's GEMM
-        # reads) checkpoints it just-in-time.
-        self._pending_edges: DataFrame | None = None
-        self._pending_lazy: bool = False
-        self._dirty: set[int] = set()
+        # cells whose rows have not probed yet (build: every cell;
+        # append: the cells of its new rows). Driver-side metadata
+        # only: state() builds the edge plan from it and runs it at
+        # once, so no DataFrame plan outlives a call.
+        self._pending_cells: set[int] = set()
         self._state: DataFrame | None = None
 
     def _seg_dir(self) -> str:
@@ -565,13 +540,11 @@ class GraphIndex:
         self.cell_seeds = np.full(
             (len(self.centroids), self.seeds_per_cell), -1, dtype=np.int64
         )
-        _, _, self._dirty = self._pack(emb)
+        self._pack(emb)
         self.celled = self._celled_from_segments()
-        # LAZY: the edge GEMM streams straight into state()'s pack
-        # shuffle — no intermediate materialization of the N x 2(M+1)
-        # edge table (GEMM + shuffle + pack pipeline as ONE job)
-        self._pending_edges = _symmetrize(self._edges_from_segments())
-        self._pending_lazy = True
+        # the edge GEMM runs inside state()'s pack shuffle — no
+        # intermediate materialization of the N x 2(M+1) edge table
+        self._pending_cells = set(range(len(self.centroids)))
         return self
 
     def _assign_shards(self, cell_weights: np.ndarray | None = None) -> None:
@@ -631,7 +604,7 @@ class GraphIndex:
         for p, s in enumerate(shards):
             self.cell_shard[s] = p
 
-    def _pack(self, emb: DataFrame) -> tuple[int, list[int], set[int]]:
+    def _pack(self, emb: DataFrame) -> tuple[int, list[int]]:
         """Route new (vec_id, emb) rows to their cells and shards and
         merge them into the per-shard VECTOR segments (ids sorted,
         embedding matrix, per-row cell index, new-row mask); collect
@@ -646,8 +619,8 @@ class GraphIndex:
         cheaper than rebuild at any corpus size. Cell seeds are
         refreshed only for the cells of touched shards.
 
-        Returns (n_new, new_cells, touched_pids) from the SAME job —
-        append needs no separate count/groupBy pass."""
+        Returns (n_new, new_cells) from the SAME job — append needs no
+        separate count/groupBy pass."""
         from zvdb_spark.operators.kmeans import assign_cells
 
         spark = self._spark
@@ -737,27 +710,25 @@ class GraphIndex:
                 self.cell_seeds[cell] = row
         n_new = sum(r.n_new for r in meta)
         new_cells = sorted({int(c) for r in meta for c in r.newcells})
-        return n_new, new_cells, {int(r.pid) for r in meta}
+        return n_new, new_cells
 
     def _edges_from_segments(
-        self, cells: list[int] | None = None
+        self, cells: list[int], nbr: np.ndarray
     ) -> DataFrame:
-        """Directed approximate M-NN edges, cell-blocked: every probe
-        row (new mask in the segment) searches its ``m`` nearest among
-        the members of its ``r_build`` nearest cells. The work unit is
-        a CELL: a C-row driver-made work list (cell, its neighbor
-        cells, their shards) fans out to tasks that mmap the vector
-        segments — the corpus itself never shuffles; only the N x M
-        edge rows flow back. Cost ~R/C of the exact N² GEMM.
-        ``cells`` restricts the work list (append passes only the
-        cells that received new rows — GEMM cost scales with the
-        delta, not the corpus)."""
+        """Approximate M-NN edges in both directions, cell-blocked, as
+        (src, dst, score, pid) rows: every probe row (new mask in the
+        segment) of ``cells`` searches its ``m`` nearest among the
+        members of its ``r_build`` nearest cells (``nbr``, from
+        ``_cell_neighbors``). The work unit is a CELL: a driver-made
+        work list (cell, its neighbor cells, their shards) fans out to
+        tasks that mmap the vector segments — the corpus itself never
+        shuffles; only the 2 x N x M edge rows flow back. Cost ~R/C of
+        the exact N² GEMM, and GEMM cost scales with the probing
+        cells, not the corpus."""
         spark = self._spark
-        nbr = _cell_neighbors(self.centroids, self.r_build)
         cell_pid = self.cell_shard
         vmeta = {p: v[0] for p, v in self._vec_meta.items()}  # pid -> prefix
         m = self.m
-        cell_list = list(range(len(nbr))) if cells is None else cells
         par = spark.sparkContext.defaultParallelism
         # build: every cell's rows probe — fine-grained tasks (4x
         # cores) smooth the heavy GEMM stragglers. Delta: only the new
@@ -767,7 +738,7 @@ class GraphIndex:
         # the GEMM itself at a 10% delta).
         ntasks = max(
             1,
-            min(par * 4 if cells is None else par, len(cell_list)),
+            min(par * 4 if len(cells) == len(nbr) else par, len(cells)),
         )
         work = spark.createDataFrame(
             [
@@ -776,7 +747,7 @@ class GraphIndex:
                     [int(g) for g in nbr[c]],
                     [int(cell_pid[g]) for g in nbr[c]],
                 )
-                for c in cell_list
+                for c in cells
             ],
             "cell int, nbrs array<int>, nbr_pids array<int>",
         )
@@ -843,27 +814,28 @@ class GraphIndex:
                     np_ = cor_pid[part.ravel()]
                     ss = np.take_along_axis(d, part, axis=1).ravel()
                     keep = qq != nb_  # drop self-edges
-                    # both endpoints' shards are known right here, so
-                    # the adjacency pack never needs a corpus join to
-                    # recover them
+                    qq, nb_, np_, ss = qq[keep], nb_[keep], np_[keep], ss[keep]
+                    # each edge in both directions — the connect half of
+                    # connect + shrinkConnections (src/hnsw.zig:119-170),
+                    # from this one GEMM. Each row carries its src's
+                    # shard (the probe's forward, the neighbor's
+                    # reverse), so the adjacency pack groups without a
+                    # corpus join; its full (src, score, dst) lexsort
+                    # makes the arrival order irrelevant.
                     out.append(
                         (
-                            qq[keep],
-                            nb_[keep],
-                            ss[keep],
-                            np.full(keep.sum(), pid, dtype=np.int32),
-                            np_[keep],
+                            np.concatenate([qq, nb_]),
+                            np.concatenate([nb_, qq]),
+                            np.concatenate([ss, ss]),
+                            np.concatenate(
+                                [np.full(len(qq), pid, dtype=np.int32), np_]
+                            ),
                         )
                     )
                 if out:
+                    src, dst, sc, pids = (np.concatenate(c) for c in zip(*out))
                     yield pd.DataFrame(
-                        {
-                            "query_id": np.concatenate([o[0] for o in out]),
-                            "neighbor_id": np.concatenate([o[1] for o in out]),
-                            "score": np.concatenate([o[2] for o in out]),
-                            "q_pid": np.concatenate([o[3] for o in out]),
-                            "n_pid": np.concatenate([o[4] for o in out]),
-                        }
+                        {"src": src, "dst": dst, "score": sc, "pid": pids}
                     )
 
         # EXPLICIT partition count + mapInPandas: the work list is a
@@ -873,7 +845,7 @@ class GraphIndex:
         # with a fixed count is respected by AQE and balances cells
         # perfectly; grouping semantics aren't needed — each row is an
         # independent cell.
-        return work.repartition(ntasks).mapInPandas(_task, _EDGE_SCHEMA)
+        return work.repartition(ntasks).mapInPandas(_task, _PENDING_SCHEMA)
 
     def _celled_from_segments(self) -> DataFrame:
         """(cell_id, vec_id, emb) read back from the packed segments —
@@ -917,52 +889,24 @@ class GraphIndex:
         linear read — never a re-evaluation of the original input);
         segments re-pack under a fresh token (immutable files,
         concurrent searches keep their old ones) and the graph GEMM
-        runs only for the new rows."""
+        runs only for the new rows, at the next ``state()``."""
         if self.celled is None:
             raise ValueError("build() first")
-        # a pending LAZY edge plan reads the current segment files;
-        # this append is about to re-pack (and retire) some of them —
-        # materialize it first (only the append→append-without-search
-        # path pays this; append→search folds it into state())
-        if self._pending_edges is not None and self._pending_lazy:
-            self._pending_edges = self._pending_edges.localCheckpoint(
-                eager=True
-            )
-            self._pending_lazy = False
+        # a previous batch that has not probed yet probes now: its
+        # edges must come from the segments of its own time, and the
+        # pack below retires some of them (a no-op when nothing is
+        # pending — the state is cached)
+        self.state()
         # ONE job packs the delta AND returns the row count + touched
-        # cells + touched shards (C-bounded metadata)
-        n_new, new_cells, touched_pids = self._pack(emb_new)
+        # cells (C-bounded metadata)
+        n_new, new_cells = self._pack(emb_new)
         if n_new == 0:
             return self
         self.n_rows += n_new
         # lazy snapshot of what the segments now hold (consumed only
         # if someone reads .sharded / .celled — never an append job)
         self.celled = self._celled_from_segments()
-        # Dirty shards = shards that got rows + shards any delta edge
-        # can land in (reverse edges point at neighbors, and build
-        # candidates only come from the r_build nearest cells of a
-        # touched cell) — driver-side metadata math, no job. state()
-        # re-packs ONLY these; the reference's shrinkConnections
-        # likewise touches only the endpoints of new edges
-        # (src/hnsw.zig:135-140), never the whole graph.
-        nbr = _cell_neighbors(self.centroids, self.r_build)
-        dirty = set(touched_pids)
-        for c in new_cells:
-            dirty.add(int(self.cell_shard[c]))
-            for g in nbr[c]:
-                dirty.add(int(self.cell_shard[g]))
-        nn = self._edges_from_segments(cells=new_cells)  # new rows probe
-        # delta-sized (|new| x 2(M+1) rows) LAZY edge plan: the GEMM
-        # runs inside state()'s pack shuffle (one job, no separate
-        # materialization). The FULL edge table is never touched here
-        # — that is what makes append delta-cost.
-        delta_edges = _symmetrize(nn)
-        if self._pending_edges is None:
-            self._pending_edges = delta_edges
-        else:
-            self._pending_edges = self._pending_edges.unionAll(delta_edges)
-        self._pending_lazy = True
-        self._dirty |= dirty
+        self._pending_cells = set(new_cells)
         self._state = None
         return self
 
@@ -1117,7 +1061,7 @@ class GraphIndex:
         self._vec_meta = {}
         self._edge_meta = {}
         self._adj_meta = {}
-        self._pending_edges = None
+        self._pending_cells = set()
         self._state = None
         self.celled = None
         self.n_rows = 0
@@ -1128,32 +1072,42 @@ class GraphIndex:
         self.centroids = None
         self.cell_shard = None
         self.cell_seeds = None
-        self._dirty = set()
         self.structure_ratio = None
 
     def state(self) -> DataFrame:
-        """Adjacency segments + search metadata. Builds the padded
+        """Adjacency segments + search metadata. Runs the edge GEMM for
+        the pending cells and, in the same job, builds the padded
         position-mapped adjacency for each DIRTY shard by merging the
-        shard's stored capped edge segment with the pending delta
-        edges (edges already carry their src's shard — one
-        cogroup-by-pid pass over the DELTA, no corpus join and no
-        full-edge-table scan), writes adjacency + refreshed capped
-        edges next to the vector segment, and returns the tiny
-        metadata DataFrame (pid, n, maxdeg, dim, vprefix, aprefix);
-        search reads the same rows from ``_adj_meta`` and carries them
-        in its task closure. After a build every packed shard is dirty
-        and has no stored edges yet; after an append only the shards
-        the delta touched are — untouched shards keep their files
-        verbatim, so the re-pack cost scales with the DELTA's
-        neighborhood, not the corpus. Index bytes live in the segment
-        files — search moves ZERO index data through shuffles or the
-        JVM<->Python boundary."""
+        shard's stored capped edge segment with the new edges (edges
+        already carry their src's shard — one groupBy-pid pass over
+        the DELTA, no corpus join and no full-edge-table scan), writes
+        adjacency + refreshed capped edges next to the vector segment,
+        and returns the tiny metadata DataFrame (pid, n, maxdeg, dim,
+        vprefix, aprefix); search reads the same rows from
+        ``_adj_meta`` and carries them in its task closure. After a
+        build every packed shard is dirty and has no stored edges yet;
+        after an append only the shards the delta's edges can reach
+        are — untouched shards keep their files verbatim, so the
+        re-pack cost scales with the DELTA's neighborhood, not the
+        corpus. Index bytes live in the segment files — search moves
+        ZERO index data through shuffles or the JVM<->Python
+        boundary."""
         if self._state is not None:
             return self._state
         if self.celled is None:
             raise ValueError("build() first")
         spark = self._spark
-        dirty = sorted(p for p in self._dirty if p in self._vec_meta)
+        cells = sorted(self._pending_cells)
+        # Dirty shards = the packed shards any new edge can land in: a
+        # forward edge starts at a pending cell's row, a reverse edge
+        # at a candidate from that cell's r_build nearest cells (the
+        # cell itself first) — driver-side metadata math, no job. The
+        # reference's shrinkConnections likewise touches only the
+        # endpoints of new edges (src/hnsw.zig:135-140), never the
+        # whole graph.
+        nbr = _cell_neighbors(self.centroids, self.r_build) if cells else None
+        reach = {int(self.cell_shard[g]) for c in cells for g in nbr[c]}
+        dirty = sorted(reach & self._vec_meta.keys())
         if dirty:
             # one-sided groupBy instead of a cogroup: a sentinel row
             # (src == dst == -1, impossible for a real edge — self-
@@ -1164,11 +1118,7 @@ class GraphIndex:
             sent = spark.createDataFrame(
                 [(-1, -1, 0.0, int(p)) for p in dirty], _PENDING_SCHEMA
             )
-            pending = (
-                sent
-                if self._pending_edges is None
-                else self._pending_edges.unionAll(sent)
-            )
+            pending = self._edges_from_segments(cells, nbr).unionAll(sent)
             seg_dir = self._seg_dir()
             token = uuid.uuid4().hex[:12]
             vmeta = dict(self._vec_meta)  # pid -> (prefix, n, dim)
@@ -1282,9 +1232,7 @@ class GraphIndex:
                     r.n, r.maxdeg, r.dim, r.vprefix, r.aprefix
                 )
                 self._edge_meta[r.pid] = r.eprefix
-        self._dirty = set()
-        self._pending_edges = None
-        self._pending_lazy = False
+        self._pending_cells = set()
         self._state = spark.createDataFrame(
             [
                 (p, n, md, dim, vp, ap)
