@@ -22,4 +22,15 @@ Layout:
 
 __version__ = "0.1.0"
 
-from zvdb_spark.session import get_session  # noqa: F401
+__all__ = ["get_session"]
+
+
+def __getattr__(name: str):
+    # Lazy, so ``import zvdb_spark`` stays pyspark-free: the worker
+    # daemon stub (``zvdb_spark._daemon``) imports this package before
+    # it execs pyspark's daemon, and must not load pyspark to do it.
+    if name == "get_session":
+        from zvdb_spark.session import get_session
+
+        return get_session
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -1311,9 +1311,11 @@ class GraphIndex:
             # worker spin-up, seed-metadata unpack, segment page-in)
             # dominate a second wave — measured at 100k x 128-d,
             # nq=10k on 32 cores: 32 blocks 3.61 s vs 64 blocks
-            # 3.80 s best / 4.04 s median. defaultParallelism is the
-            # cluster's total core count, so the same rule holds on
-            # 1000 executors.
+            # 3.80 s best / 4.04 s median. Most of that worker cost
+            # was each task re-reading $SPARK_HOME's zip directories,
+            # which zvdb_spark._daemon now avoids; the cap predates
+            # that fix. defaultParallelism is the cluster's total core
+            # count, so the same rule holds on 1000 executors.
             cores = queries.sparkSession.sparkContext.defaultParallelism
             n_qblocks = max(1, min(cores, -(-nq // 32)))
         cmat = self.centroids

@@ -510,7 +510,9 @@ def exact_search_segments(
     # fixed costs — python worker dispatch, Arrow batch framing,
     # first-touch mmap page-in — dominate them. At 100k x 128-d,
     # nq=10k, 32 cores: 1 wave 2.10 s best / 2.24 s median, 2 waves
-    # 2.69 s, 4 waves 3.91 s, 8 waves 3.97 s.
+    # 2.69 s, 4 waves 3.91 s, 8 waves 3.97 s. Most of the dispatch
+    # cost was each task re-reading $SPARK_HOME's zip directories,
+    # which zvdb_spark._daemon now avoids; the cap predates that fix.
     n_tasks = max(
         1, min(par, -(-n_queries * n_groups // 64), n_queries)
     )

@@ -6,6 +6,12 @@ partition coalescing), broadcast threshold sized so the dimension
 tables (region/nation/supplier) always broadcast, Arrow enabled for
 the Pandas-UDF paths, UTC session timezone so timestamp semantics
 match the DuckDB oracle.
+
+Python workers start from ``zvdb_spark._daemon``, which runs pyspark's
+own daemon against the installed pyspark (the driver's package) rather
+than ``$SPARK_HOME``'s ``pyspark.zip``: with those archives on a
+worker's path, every task re-read their zip directories (~0.1-0.25 s
+per task before any engine code ran).
 """
 
 from __future__ import annotations
@@ -15,6 +21,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory that holds the zvdb_spark package
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -81,6 +89,16 @@ def get_session(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        # Workers run pyspark's daemon through the engine stub, which
+        # takes $SPARK_HOME's pyspark/py4j zips and spark-core jar off
+        # the worker path: each task's importlib.invalidate_caches()
+        # otherwise re-parses every archive's zip directory. The stub
+        # is imported before any UDF ships the engine, so the directory
+        # holding zvdb_spark/ goes on the workers' path explicitly; a
+        # driver started outside the repo would otherwise fail every
+        # Python task with "No module named 'zvdb_spark'".
+        .config("spark.python.daemon.module", "zvdb_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
