@@ -15,7 +15,36 @@ import pandas as pd
 import pytest
 
 from zvdb_spark.operators.graph_ann import _beam_search_seeded
-from zvdb_spark.operators.knn import _pair_scores, _topk_by_dist_id
+from zvdb_spark.operators.knn import _pair_scores
+
+
+# The engine's top-k helper as it stood before it selected by a
+# column-block bound: an argpartition, with the rows whose boundary
+# ties straddle kk re-resolved by (distance, id) lexsort. Rows come
+# back in argpartition order. It is the oracle of the surviving helper
+# (tests/test_kernels.py::test_topk_matches_reference) and the top-k
+# of the beam oracle below.
+def _topk_reference(d, ids, kk: int):
+    """Per-row indices of the kk smallest (distance, id) pairs.
+
+    argpartition fast path; when ties straddle the k-th boundary the
+    affected rows are re-resolved exactly by (distance, id) lexsort,
+    so shard-level membership matches the declared
+    ``ORDER BY d, neighbor_id`` contract even with duplicate vectors
+    (duplicates are distinct rows, src/test_hnsw.zig:104-119).
+    """
+    import numpy as np
+
+    if kk >= d.shape[1]:
+        return np.broadcast_to(np.arange(d.shape[1]), d.shape).copy()
+    part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
+    boundary = np.take_along_axis(d, part, axis=1).max(axis=1)
+    ambiguous = np.nonzero((d <= boundary[:, None]).sum(axis=1) > kk)[0]
+    for r in ambiguous:
+        cand = np.nonzero(d[r] <= boundary[r])[0]
+        order = np.lexsort((ids[cand], d[r, cand]))
+        part[r] = cand[order[:kk]]
+    return part
 
 
 # The kernel as it stood before it kept a per-step top-k and chunked
@@ -51,7 +80,7 @@ def _beam_reference(
         mat_arr = np.asarray(mat)
         d = _pair_scores(qm, mat_arr, "l2_sq")
         kk = min(k, n)
-        part = _topk_by_dist_id(d, ids, kk)
+        part = _topk_reference(d, ids, kk)
         sel = mat_arr[part]  # (nb, kk, dim) gather
         diff = sel - qm[:, None, :]
         dex = np.einsum("ijk,ijk->ij", diff, diff)
@@ -375,23 +404,63 @@ def beam_corpus():
     return ids, mat, adj, seeds, qm, qids
 
 
+@pytest.fixture(scope="module")
+def tie_corpus():
+    """A 345 x 8 corpus on a random out-degree-12 graph: 300 random rows,
+    40 copies of one vector (so far more than beam_width + 1 new pairs
+    of one step tie exactly at a query's selection boundary) and a
+    5-row clique joined to nothing else. 18 queries: 8 at the copied
+    vector itself (distance 0.0 ties), 4 near it, 4 random and 2
+    seeded only inside the clique, which run out of new pairs (fewer
+    than beam_width per step) while the others still expand."""
+    rng = np.random.default_rng(11)
+    n_rand, n_copy, n_clq, dim = 300, 40, 5, 8
+    v = rng.normal(0.0, 1.0, dim)
+    mat = np.concatenate([
+        rng.normal(0.0, 1.0, (n_rand, dim)),
+        np.repeat(v[None, :], n_copy, axis=0),
+        rng.normal(100.0, 0.1, (n_clq, dim)),
+    ])
+    n = len(mat)
+    ids = np.arange(n, dtype=np.int64) * 3 + 5
+    m = n_rand + n_copy
+    adj = np.full((n + 1, 12), n, dtype=np.int64)
+    adj[:m] = rng.integers(0, m, (m, 12))
+    for i in range(n_clq):
+        adj[m + i, : n_clq - 1] = [m + j for j in range(n_clq) if j != i]
+    qm = np.concatenate([
+        np.repeat(v[None, :], 8, axis=0),
+        v + rng.normal(0.0, 0.01, (4, dim)),
+        rng.normal(0.0, 1.0, (4, dim)),
+        mat[m : m + 2] + 0.01,
+    ])
+    seeds = rng.integers(0, m, (len(qm), 4)).astype(np.int64)
+    seeds[-2:] = [[m, -1, -1, -1], [m + 1, m + 2, -1, -1]]
+    qids = np.arange(len(qm), dtype=np.int64) * 7 + 1
+    return ids, mat, adj, seeds, qm, qids
+
+
 @pytest.mark.parametrize("drop", [0.0, 0.3])
 @pytest.mark.parametrize("ef", [8, 32, 128, 600, 2000])
 @pytest.mark.parametrize("k", [1, 10, 40, 100, 700])
-def test_beam_matches_reference_kernel(beam_corpus, k, ef, drop):
-    """The per-step top-k, chunked-distance kernel returns exactly the
-    reference kernel's rows, order and dtypes: on both branches
+def test_beam_matches_reference_kernel(beam_corpus, tie_corpus, k, ef, drop):
+    """The per-step selection, chunked-distance kernel returns exactly
+    the reference kernel's rows, order and dtypes: on both branches
     (ef=2000 and k=700 with ef=2000 take the exhaustive one), with
     seeds missing, and with self-match and duplicate-vector ties. The
-    larger beams expand more than one 4,096-row distance chunk per
-    step, and k >= 40 keeps more than one step's rows per query."""
-    ids, mat, adj, seeds, qm, qids = beam_corpus
-    seeds = seeds.copy()
-    rng = np.random.default_rng(int(drop * 10))
-    seeds[rng.random(seeds.shape) < drop] = -1
-    seeds[0] = -1  # one query with no seed at all
-    got = _beam_search_seeded(ids, mat, adj, seeds, qm, qids, k=k, ef=ef)
-    want = _beam_reference(ids, mat, adj, seeds, qm, qids, k=k, ef=ef)
-    assert list(got.columns) == list(want.columns)
-    assert list(got.dtypes) == list(want.dtypes)
-    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    larger beams expand more than one ``_DIST_CHUNK`` of pairs per
+    step, and k >= 40 keeps more than one step's rows per query. On
+    ``tie_corpus`` a step's boundary ties reach past the selected
+    max(k, beam_width) pairs (the full-row-sort fallback), and
+    clique queries have fewer new pairs than beam_width (the padded
+    selection)."""
+    for ids, mat, adj, seeds, qm, qids in (beam_corpus, tie_corpus):
+        seeds = seeds.copy()
+        rng = np.random.default_rng(int(drop * 10))
+        seeds[rng.random(seeds.shape) < drop] = -1
+        seeds[0] = -1  # one query with no seed at all
+        got = _beam_search_seeded(ids, mat, adj, seeds, qm, qids, k=k, ef=ef)
+        want = _beam_reference(ids, mat, adj, seeds, qm, qids, k=k, ef=ef)
+        assert list(got.columns) == list(want.columns)
+        assert list(got.dtypes) == list(want.dtypes)
+        pd.testing.assert_frame_equal(got, want, check_exact=True)

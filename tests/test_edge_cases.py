@@ -196,6 +196,37 @@ def test_blocked_paths_match_reference(spark, dup_vectors, op, grid, metric):
         assert np.allclose(got["score"], ref["score"], atol=1e-9)
 
 
+@pytest.mark.parametrize("grid", sorted(_GRIDS))
+def test_blocked_cosine_zero_norm_probe_matches_reference(
+    spark, dup_vectors, grid
+):
+    """A zero-norm probe scores NaN against every row. Each task's
+    top-k then takes its smallest ids (finite scores first, NaN ones
+    by id), so both blocked plans return the neighbors knn_join ranks
+    for it: NULL scores, ordered by neighbor id."""
+    import pandas as pd
+
+    from zvdb_spark.operators import knn
+
+    df, _, _, mat = dup_vectors
+    probes = spark.createDataFrame(
+        [(0, [0.0] * 8), (1, [float(x) for x in mat[5]])],
+        "query_id long, qemb array<double>",
+    )
+    cols = ["query_id", "neighbor_id", "rn"]
+    got, ref = (
+        f.toPandas()[cols].sort_values(cols, ignore_index=True)
+        for f in (
+            knn.exact_search_blocked(
+                df, probes, k=5, metric="cosine", **_GRIDS[grid]
+            ),
+            knn.knn_join(df, probes, k=5, metric="cosine"),
+        )
+    )
+    pd.testing.assert_frame_equal(got, ref)
+    assert got[got.query_id == 0].neighbor_id.tolist() == [0, 1, 2, 3, 4]
+
+
 def test_oversize_probe_side_never_reaches_driver(spark, dup_vectors,
                                                   monkeypatch):
     """The byte gate (rows x dim x 8) runs before any collect: a probe

@@ -184,3 +184,51 @@ def test_graph_index_serves_cosine_via_normalization(spark, sf_dir):
         assert len(pred) == 5
         hits += len(truth & pred)
     assert hits / (len(probe_ids) * 5) >= 0.9
+
+
+@pytest.mark.parametrize("dtype", ["float32", "float64"])
+def test_topk_matches_reference(dtype):
+    """The bound-prefiltered top-k selects the reference helper's
+    index set on every row and returns it in (distance, id) order:
+    random rows, few-valued rows whose duplicates straddle the kk
+    boundary, all-equal rows, widths that are not a multiple of kk,
+    and kk of 1, 10, width - 1, width and width + 3. A row with fewer
+    than kk finite entries (NaN scores, as a zero-norm cosine gives)
+    returns its finite entries by (distance, id), then its NaN
+    entries by id; the reference leaves that order to argpartition."""
+    import numpy as np
+
+    from tests.test_beam_unit import _topk_reference
+    from zvdb_spark.operators.knn import _topk_by_dist_id
+
+    rng = np.random.default_rng(9)
+    nq = 24
+    for width in (1, 7, 10, 33, 100, 257):
+        ids = rng.permutation(width).astype(np.int64) * 2 + 1
+        cases = {
+            "random": rng.random((nq, width)),
+            "dups": rng.integers(0, 4, (nq, width)) / 4.0,
+            "equal": np.full((nq, width), 0.5),
+        }
+        nan = rng.random((nq, width))
+        nan[rng.random((nq, width)) < 0.7] = np.nan
+        nan[:, 0] = np.nan  # a column of zero-norm scores
+        cases["nan"] = nan
+        for case, d in cases.items():
+            d = d.astype(dtype)
+            for kk in sorted({1, 10, width - 1, width, width + 3} - {0}):
+                got = _topk_by_dist_id(d, ids, kk)
+                want = _topk_reference(d, ids, kk)
+                assert got.shape == want.shape, (case, width, kk)
+                assert np.issubdtype(got.dtype, np.integer)
+                for i in range(nq):
+                    fin = np.flatnonzero(~np.isnan(d[i]))
+                    if len(fin) >= min(kk, width):
+                        w = want[i]
+                        w = w[np.lexsort((ids[w], d[i, w]))]
+                    else:
+                        fin = fin[np.lexsort((ids[fin], d[i, fin]))]
+                        nn = np.flatnonzero(np.isnan(d[i]))
+                        w = np.r_[fin, nn[np.argsort(ids[nn])]][:kk]
+                        assert set(fin) <= set(want[i])
+                    assert got[i].tolist() == w.tolist(), (case, width, kk, i)

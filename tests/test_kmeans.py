@@ -3,10 +3,28 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+from pyspark.sql import functions as F
 
 from zvdb_spark.functions.vector import as_double_array
-from zvdb_spark.operators.kmeans import assign_cells, kmeans_fit, sse
+from zvdb_spark.operators.kmeans import assign_cells, kmeans_fit
 from zvdb_spark.sources.tables import load
+
+
+def sse(emb, centroids: np.ndarray, vec_col: str = "emb") -> float:
+    """Within-cluster sum of squared distances (the Lloyd's objective;
+    must be non-increasing over iterations)."""
+    cmat = np.ascontiguousarray(centroids)
+    cnorm = (cmat * cmat).sum(axis=1)
+
+    @F.pandas_udf("double")
+    def _mind(vs: pd.Series) -> pd.Series:
+        mat = np.stack(vs.to_numpy()).astype(np.float64)
+        xnorm = (mat * mat).sum(axis=1)
+        d = xnorm[:, None] + cnorm[None, :] - 2.0 * (mat @ cmat.T)
+        return pd.Series(np.maximum(d.min(axis=1), 0.0))
+
+    return emb.select(F.sum(_mind(F.col(vec_col)))).head()[0]
 
 
 def _emb(spark, sf_dir):

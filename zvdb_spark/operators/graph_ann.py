@@ -120,9 +120,9 @@ _MIN_CELLS = 4
 # driver-local k-means bound: fit locally when the bounded sample
 # (40 rows/cell) holds at most this many floats; else distributed
 _LOCAL_KMEANS_MAX_ELEMS = 50_000_000
-# beam distance chunk: (4096, dim) float64 gathers stay cache-sized
-# instead of one (explored rows, dim) temporary per step
-_DIST_CHUNK = 4096
+# beam distance chunk: a (256, dim) float64 gather (256 KB at dim
+# 128) stays in L2 instead of one (explored rows, dim) temporary per step
+_DIST_CHUNK = 256
 
 SEARCH_SCHEMA_STR = "query_id long, vec_id long, dist_sq double"
 # the pack also reports the new rows' count + cells so append needs
@@ -286,22 +286,47 @@ def _group_seeds_by_pid(
 
 
 def _ranked_dists(
-    mat: np.ndarray, qm: np.ndarray, qidx: np.ndarray, cf: np.ndarray
+    mat: np.ndarray, qm: np.ndarray, qidx: np.ndarray, cf: np.ndarray, r: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Squared L2 distance of each (query qidx, row cf) pair, computed
-    in ``_DIST_CHUNK``-row chunks (the same per-row arithmetic as one
-    whole-batch gather). Returns (query, row, dist, rank-in-query) in
-    (query, dist, row) order. The pairs must arrive sorted by (query,
-    row): lexsort is stable, so the row tie-break needs no key."""
+    """Each query's first r (query qidx, row cf) pairs by squared L2
+    distance, ties by row. Distances are computed in ``_DIST_CHUNK``-row
+    chunks (the same per-row arithmetic as one whole-batch gather).
+    The pairs must arrive sorted by (query, row); each query's
+    distances then fill one row of a ``+inf``-padded matrix in row
+    order, where ``argpartition`` picks r columns and a stable sort of
+    those columns (taken in column order) ranks them by (dist, row).
+    A query whose r-th distance ties past its chosen columns takes a
+    full stable row sort instead. Returns (query, row, dist,
+    rank-in-query) of the rank < r pairs, in (query, dist, row)
+    order."""
     dd = np.empty(len(cf))
     for lo in range(0, len(cf), _DIST_CHUNK):
         diff = mat[cf[lo:lo + _DIST_CHUNK]]
         diff -= qm[qidx[lo:lo + _DIST_CHUNK]]
         dd[lo:lo + _DIST_CHUNK] = np.einsum("ij,ij->i", diff, diff)
-    order = np.lexsort((dd, qidx))
-    qs_ = qidx[order]
-    rank = np.arange(len(qs_)) - np.searchsorted(qs_, qs_)
-    return qs_, cf[order], dd[order], rank
+    start = np.flatnonzero(np.r_[True, qidx[1:] != qidx[:-1]])
+    cnt = np.diff(np.r_[start, len(qidx)])
+    dm = np.full((len(start), cnt.max(initial=0)), np.inf)
+    row = np.repeat(np.arange(len(start)), cnt)
+    dm[row, np.arange(len(qidx)) - start[row]] = dd
+    if dm.shape[1] > r:
+        sel = np.sort(np.argpartition(dm, r - 1, axis=1)[:, :r], axis=1)
+        sd = np.take_along_axis(dm, sel, axis=1)
+        sel = np.take_along_axis(
+            sel, np.argsort(sd, axis=1, kind="stable"), axis=1
+        )
+        edge = sd.max(axis=1)
+        tie = np.flatnonzero(
+            np.isfinite(edge) & ((dm <= edge[:, None]).sum(axis=1) > r)
+        )
+        sel[tie] = np.argsort(dm[tie], axis=1, kind="stable")[:, :r]
+    else:
+        sel = np.argsort(dm, axis=1, kind="stable")
+    # padding sorts last (+inf, highest columns): real pairs are a prefix
+    real = sel < cnt[:, None]
+    rq, rank = np.nonzero(real)
+    at = start[rq] + sel[real]
+    return qidx[at], cf[at], dd[at], rank
 
 
 def _beam_search_seeded(
@@ -320,12 +345,14 @@ def _beam_search_seeded(
     queries in one numpy batch; the explored set is ef-bounded;
     results are the best k explored, ascending (distance, id).
 
-    The result is a running top-k: each step keeps only its own best k
-    rows per query (from the (query, dist, node) order the beam already
-    needs), so the final merge sorts at most (steps + 1) * k rows per
-    query instead of every explored row. Distances are computed in
-    ``_DIST_CHUNK``-row chunks. Both are exact: the rows, order and
-    dtypes equal those of the keep-everything kernel (pinned by
+    The result is a running top-k: each step selects only its first
+    max(k, beam_width) new pairs per query by (dist, node) — the next
+    beam and that step's best k both come from them — so no step sorts
+    every explored pair, and the final merge sorts at most (steps + 1)
+    * k rows per query. Distances are computed in ``_DIST_CHUNK``-row
+    chunks, and new visited keys are inserted at their sorted
+    positions. All of it is exact: the rows, order and dtypes equal
+    those of the keep-everything kernel (pinned by
     tests/test_beam_unit.py::test_beam_matches_reference_kernel)."""
     n = len(ids)
     nb = len(qm)
@@ -381,7 +408,8 @@ def _beam_search_seeded(
     # sentinel-free, so no row repeats and no final dedupe is needed.
     q0, p0 = np.divmod(visited_keys, stride)
     live = p0 < n
-    qs_, ps_, ds_, rank = _ranked_dists(mat, qm, q0[live], p0[live])
+    r = max(k, beam_width)
+    qs_, ps_, ds_, rank = _ranked_dists(mat, qm, q0[live], p0[live], r)
     top = rank < k
     res_q, res_p, res_d = [qs_[top]], [ps_[top]], [ds_[top]]
     beam = np.full((nb, beam_width), n, dtype=np.int64)
@@ -403,11 +431,11 @@ def _beam_search_seeded(
         key = key[~seen]
         if not len(key):
             break
-        # both inputs sorted: concatenate + sort is a cheap merge of
-        # O(explored) keys, never O(shard_rows)
-        visited_keys = np.sort(np.concatenate([visited_keys, key]))
+        # both inputs sorted: insert the new keys at their searchsorted
+        # positions, O(explored) work, never O(shard_rows)
+        visited_keys = np.insert(visited_keys, pos[~seen], key)
         qidx, cf = np.divmod(key, stride)
-        qs_, ps_, ds_, rank = _ranked_dists(mat, qm, qidx, cf)
+        qs_, ps_, ds_, rank = _ranked_dists(mat, qm, qidx, cf, r)
         top = rank < k
         res_q.append(qs_[top])
         res_p.append(ps_[top])
@@ -1337,10 +1365,9 @@ class GraphIndex:
                     np.stack(bpdf["qemb"].to_numpy()).astype(np.float64)
                 )
                 d = cn[None, :] - 2.0 * (qm_all @ cmat.T)
-                # exact top-nseed SET by (distance, cell index) at
-                # argpartition cost, then the selected columns
-                # re-ordered by (distance, cell index) — NEAREST CELL
-                # FIRST. The order is load-bearing for SPEED, not
+                # exact top-nseed cells in (distance, cell index)
+                # order — NEAREST CELL FIRST, the helper's row order.
+                # The order is load-bearing for SPEED, not
                 # correctness: seeds reach the beam in the emitted
                 # order, and a best-first warm start converges in
                 # fewer expansions (an interleaved A/B of ordered vs
@@ -1351,12 +1378,6 @@ class GraphIndex:
                 near = _topk_by_dist_id(
                     d, np.arange(d.shape[1], dtype=np.int64), nseed
                 )
-                nd = np.take_along_axis(d, near, axis=1)
-                o1 = np.argsort(near, axis=1, kind="stable")
-                nd = np.take_along_axis(nd, o1, axis=1)
-                near = np.take_along_axis(near, o1, axis=1)
-                o2 = np.argsort(nd, axis=1, kind="stable")
-                near = np.take_along_axis(near, o2, axis=1)
                 rows, pids, seed_ids = _group_seeds_by_pid(
                     near, cell_shard, cell_seeds
                 )

@@ -326,22 +326,6 @@ def assign_cells(
     return emb.withColumn("cell_id", _cell(F.col(vec_col)))
 
 
-def sse(emb: DataFrame, centroids: np.ndarray, vec_col: str = "emb") -> float:
-    """Within-cluster sum of squared distances (the Lloyd's objective;
-    must be non-increasing over iterations)."""
-    cmat = np.ascontiguousarray(centroids)
-    cnorm = (cmat * cmat).sum(axis=1)
-
-    @F.pandas_udf("double")
-    def _mind(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.to_numpy()).astype(np.float64)
-        xnorm = (mat * mat).sum(axis=1)
-        d = xnorm[:, None] + cnorm[None, :] - 2.0 * (mat @ cmat.T)
-        return pd.Series(np.maximum(d.min(axis=1), 0.0))
-
-    return emb.select(F.sum(_mind(F.col(vec_col)))).head()[0]
-
-
 def kmeans_fit_sample(
     emb: DataFrame,
     k: int = 256,

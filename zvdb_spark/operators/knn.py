@@ -70,26 +70,42 @@ def knn_join(
 
 
 def _topk_by_dist_id(d, ids, kk: int):
-    """Per-row indices of the kk smallest (distance, id) pairs.
+    """Per-row column indices of the kk smallest (distance, id) pairs,
+    each row in (distance, id) order (column index breaks exact ties).
 
-    argpartition fast path; when ties straddle the k-th boundary the
-    affected rows are re-resolved exactly by (distance, id) lexsort,
-    so shard-level membership matches the declared
-    ``ORDER BY d, neighbor_id`` contract even with duplicate vectors
-    (duplicates are distinct rows, src/test_hnsw.zig:104-119).
+    Selection, not a full sort: the kk-th smallest of a row's strided
+    column-block minima bounds its kk-th smallest value from above (kk
+    distinct entries lie at or below it), so only the pairs at or
+    below that bound are lexsorted by (row, distance, id). Ties that
+    straddle the boundary resolve exactly by id, so shard-level
+    membership matches the declared ``ORDER BY d, neighbor_id``
+    contract even with duplicate vectors (duplicates are distinct
+    rows, src/test_hnsw.zig:104-119). A row with fewer than kk pairs at or
+    below its bound (only NaN scores cause that) takes every column:
+    its finite entries come first, then its NaN entries by id.
+    Returns (rows, min(kk, width)) indices.
     """
     import numpy as np
 
-    if kk >= d.shape[1]:
-        return np.broadcast_to(np.arange(d.shape[1]), d.shape).copy()
-    part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-    boundary = np.take_along_axis(d, part, axis=1).max(axis=1)
-    ambiguous = np.nonzero((d <= boundary[:, None]).sum(axis=1) > kk)[0]
-    for r in ambiguous:
-        cand = np.nonzero(d[r] <= boundary[r])[0]
-        order = np.lexsort((ids[cand], d[r, cand]))
-        part[r] = cand[order[:kk]]
-    return part
+    nq, w = d.shape
+    kk = min(kk, w)
+    if kk < w:
+        # strided blocks: column j goes to block j % nb, so a run of
+        # near columns (rows packed by cell) spreads over every block
+        nb = min(w, 8 * kk)
+        mins = d[:, : w // nb * nb].reshape(nq, w // nb, nb).min(axis=1)
+        bound = np.partition(mins, kk - 1, axis=1)[:, kk - 1]
+        mask = d <= bound[:, None]
+    else:
+        mask = np.ones(d.shape, dtype=bool)
+    r, c = np.divmod(np.flatnonzero(mask), w)
+    cnt = np.bincount(r, minlength=nq)
+    if (cnt < kk).any():  # NaN scores: those rows take every column
+        mask[cnt < kk] = True
+        r, c = np.divmod(np.flatnonzero(mask), w)
+        cnt = np.bincount(r, minlength=nq)
+    c = c[np.lexsort((np.asarray(ids)[c], d[r, c], r))]
+    return c[(np.cumsum(cnt) - cnt)[:, None] + np.arange(kk)]
 
 
 def _pair_scores(qarr, mat, metric: str):
