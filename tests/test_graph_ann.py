@@ -222,6 +222,29 @@ def test_build_rejects_empty_input(spark, sf_dir):
             GraphIndex(m=8, ef=64).build(empty, n_rows=n_rows)
 
 
+def test_nan_vectors_are_rejected(spark):
+    """A NaN distance ranks behind the beam's +inf padding and would
+    silently drop out of a result set, so NaN vectors never reach the
+    kernels: build refuses a NaN row and search a NaN probe, naming
+    the column."""
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.random(4).tolist()) for i in range(200)]
+    good = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    bad = spark.createDataFrame(
+        rows[:-1] + [(199, [0.5, float("nan"), 0.5, 0.5])],
+        "vec_id long, emb array<double>",
+    )
+    with pytest.raises(ValueError, match="emb: non-finite"):
+        GraphIndex(m=4, ef=16, cell_target_rows=50).build(bad)
+    idx = GraphIndex(m=4, ef=16, cell_target_rows=50).build(good)
+    q = spark.createDataFrame(
+        [(0, [0.5, 0.5, float("nan"), 0.5])], "query_id long, qemb array<double>"
+    )
+    with pytest.raises(Exception, match="qemb: non-finite"):
+        idx.search(q, k=3, n_queries=1).collect()
+    idx.retire()
+
+
 def test_rebuild_replaces_previous_build(spark, sf_dir):
     """build() on a built index starts from an empty one: the old
     build's vector, adjacency and edge segments are retired, and

@@ -1,16 +1,9 @@
 """Multimodal plumbing (operators/multimodal.py): the carry
-pass-through that makes decode->aggregate a ONE-scan pipeline, and
-the import-guarded REAL image codec (runs when PIL is installed,
-skips otherwise — the deterministic fake remains the oracle-checked
-default either way)."""
+pass-through that makes decode->aggregate a ONE-scan pipeline."""
 
 from __future__ import annotations
 
-import pytest
-
 from zvdb_spark.operators.multimodal import (
-    HAS_PIL,
-    decode_image_real,
     documents_as_media,
     extract_features,
 )
@@ -46,46 +39,3 @@ def test_multimodal_stats_is_one_scan(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1, plan
     assert "Join" not in plan, plan
-
-
-@pytest.mark.skipif(not HAS_PIL, reason="PIL not installed")
-def test_real_image_decode_roundtrip(spark):
-    """With PIL present: a true PNG round-trip through the REAL codec
-    path — synthesize images driver-side, decode via the same
-    mapInPandas plumbing, pin width/height/channels."""
-    import io
-
-    from PIL import Image
-
-    from zvdb_spark.operators.multimodal import extract_image_features
-
-    rows = []
-    for i, (w, h, mode) in enumerate(
-        [(7, 5, "RGB"), (16, 9, "L"), (4, 4, "RGBA")]
-    ):
-        buf = io.BytesIO()
-        Image.new(mode, (w, h), color=None).save(buf, format="PNG")
-        rows.append((i, "image", buf.getvalue(), "synthetic", "xx"))
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, media_type string, payload binary, "
-        "meta_source string, meta_lang string",
-    )
-    got = {
-        r.media_id: (r.width, r.height, r.mode, r.n_channels)
-        for r in extract_image_features(media).collect()
-    }
-    assert got == {
-        0: (7, 5, "RGB", 3),
-        1: (16, 9, "L", 1),
-        2: (4, 4, "RGBA", 4),
-    }
-
-
-@pytest.mark.skipif(HAS_PIL, reason="PIL installed — real path active")
-def test_real_decode_is_loud_without_pil():
-    """Without PIL the real path must refuse loudly (never silently
-    fall back to the fake — the fake is chosen explicitly via
-    decode_media)."""
-    with pytest.raises(NotImplementedError, match="PIL not installed"):
-        decode_image_real(b"\x89PNG\r\n\x1a\n")

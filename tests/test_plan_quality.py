@@ -84,8 +84,8 @@ def test_knn_batch_probe_side_crosses_no_exchange(spark, sf_dir):
         (exact_search_blocked(e, probes, k=5, n_shards=4), 2),
     ):
         a = plan_audit(df)
-        assert "MapInPandas" in a["plan"], a["plan"]
-        assert "FlatMapCoGroupsInPandas" not in a["plan"], a["plan"]
+        assert "MapInArrow" in a["plan"], a["plan"]
+        assert "FlatMapCoGroupsIn" not in a["plan"], a["plan"]
         assert "Generate" not in a["plan"], a["plan"]
         assert a["n_exchanges"] == n_exchanges, a["plan"]
 
@@ -99,10 +99,10 @@ _MERGE_OPERATORS = (
 def _assert_one_task_per_query_plan(df):
     """The plan of a search answered inside one task per query block:
     the query side crosses one round-robin Exchange into a
-    MapInPandas, and nothing merges, joins or re-evaluates Python
+    MapInArrow, and nothing merges, joins or re-evaluates Python
     afterwards."""
     a = plan_audit(df)
-    assert "MapInPandas" in a["plan"], a["plan"]
+    assert "MapInArrow" in a["plan"], a["plan"]
     assert a["n_exchanges"] == 1, a["plan"]
     for op in _MERGE_OPERATORS:
         assert op not in a["plan"], (op, a["plan"])
@@ -132,6 +132,45 @@ def test_graph_search_moves_no_index_data(spark, sf_dir):
     broadcast of the metadata, no routing UDF and no top-k window."""
     idx, q = _graph_index_and_queries(spark, sf_dir)
     _assert_one_task_per_query_plan(idx.search(q, k=3, n_queries=4))
+
+
+def _sql_plans(spark, run):
+    """Run ``run()``; return (its result, the physical plan of every
+    SQL execution it started)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc.listenerBus().waitUntilEmpty()
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    out = run()
+    return out, [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > seen
+    ]
+
+
+def test_graph_index_vector_plans_hold_no_pandas_node(spark, sf_dir):
+    """Vector columns cross the JVM<->Python boundary as Arrow: every
+    plan ``build`` runs (the segment pack among them), the segment
+    read-back ``celled`` and ``search`` hold no ``InPandas`` node."""
+    from zvdb_spark.plans.audit import explain_str
+
+    (idx, q), plans = _sql_plans(
+        spark, lambda: _graph_index_and_queries(spark, sf_dir)
+    )
+    assert any("FlatMapGroupsInArrow" in p for p in plans), plans
+    for p in plans:
+        assert "InPandas" not in p, p
+    for df in (idx.celled, idx.search(q, k=3, n_queries=4)):
+        simple = explain_str(df, "simple")
+        assert "MapInArrow" in simple, simple
+        assert "InPandas" not in simple, simple
+    idx.retire()
 
 
 def _count_jobs(spark, name, run):
@@ -165,7 +204,7 @@ def test_vector_searches_run_two_jobs(spark, sf_dir):
 
 
 def test_edge_plan_runs_one_gemm_in_both_directions(spark, sf_dir):
-    """The edge plan ``state()`` runs: one MapInPandas (the edge GEMM)
+    """The edge plan ``state()`` runs: one MapInArrow (the edge GEMM)
     and no Union, whose rows carry each edge in both directions —
     every (a, b, score) row has its (b, a, score) twin."""
     from zvdb_spark.operators.graph_ann import _cell_neighbors
@@ -176,7 +215,7 @@ def test_edge_plan_runs_one_gemm_in_both_directions(spark, sf_dir):
         sorted(idx._pending_cells), _cell_neighbors(idx.centroids, idx.r_build)
     )
     simple = explain_str(edges, "simple")
-    assert simple.count("MapInPandas") == 1, simple
+    assert simple.count("MapInArrow") == 1, simple
     assert "Union" not in simple, simple
     pdf = edges.toPandas()
     assert len(pdf) > 0

@@ -11,6 +11,22 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
+def batch_stream_join_twin(spark, sf_dir):
+    """Batch twin of the stream-stream join demo: identical sides,
+    identical interval condition, over the batch events table."""
+    from zvdb_spark.sources.tables import load
+    from zvdb_spark.streaming.jobs import (
+        _ATTRIBUTION_COND,
+        _attribution_sides,
+        stream_join_summary,
+    )
+
+    views, buys = _attribution_sides(load(spark, sf_dir, "events"))
+    return stream_join_summary(
+        views.join(buys, F.expr(_ATTRIBUTION_COND), "inner")
+    )
+
+
 def test_stateful_dedup_first_seen_wins(spark, sf_dir):
     from zvdb_spark.sources.tables import load
     from zvdb_spark.streaming.jobs import run_stateful_dedup_demo
@@ -62,10 +78,7 @@ def test_stream_stream_join_matches_batch_twin(spark, sf_dir):
     exactly the batch join's pairs: availableNow over the single
     landing file is one micro-batch, so no row is watermark-late and
     the summaries must be row-identical."""
-    from zvdb_spark.streaming.jobs import (
-        batch_stream_join_twin,
-        run_stream_stream_join_demo,
-    )
+    from zvdb_spark.streaming.jobs import run_stream_stream_join_demo
 
     got = {
         r.view_hour: (r.n_pairs, r.n_users, r.purchase_value)

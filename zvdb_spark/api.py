@@ -27,10 +27,12 @@ Differences from the reference, each deliberate (SURVEY §2.1):
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zvdb_spark.functions.vector import as_double_array
+from zvdb_spark.operators.arrowvec import list_array
 from zvdb_spark.operators.graph_ann import GraphIndex
 
 
@@ -131,7 +133,7 @@ class VectorIndex:
 
     def _qdf(self, q: np.ndarray) -> DataFrame:
         return self.spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(q)],
+            pa.table({"query_id": np.arange(len(q)), "qemb": list_array(q)}),
             "query_id long, qemb array<double>",
         )
 

@@ -9,9 +9,10 @@ Here the kernels are pure Catalyst higher-order-function expressions
 (``zip_with`` + ``aggregate``) over ``array<double>`` columns — they
 stay JVM-side inside whole-stage codegen, need no Python round-trip,
 and are exactly reproducible in the DuckDB oracle (same left-to-right
-double accumulation). A vectorized numpy Pandas-UDF twin lives in
-``zvdb_spark/operators/knn.py`` for the UDF-parity query and the
-high-dimension bench path.
+double accumulation). The vectorized numpy twins run over Arrow
+batches and read vectors through ``zvdb_spark/operators/arrowvec.py``:
+the ``arrow_udf`` of the UDF-parity query (``queries/vector.py``) and
+the GEMM kernels of ``zvdb_spark/operators/knn.py``.
 
 Dimension mismatch: ``zip_with`` truncates nothing — it extends the
 shorter array with nulls, which poisons the sum to NULL. ``dist_sq_strict``

@@ -42,7 +42,7 @@ measured well:
   nodes of its ``nseed`` nearest cells, then runs a batched
   best-first beam per shard those cells live in. All of it — routing,
   the beams and the cross-shard top-k merge — runs inside the one
-  mapInPandas task that receives the query (queries are a DataFrame
+  mapInArrow task that receives the query (queries are a DataFrame
   — no table data rides any closure); the task mmaps the shards'
   segments, and one round-robin exchange is the plan's only one.
 - **append**: new rows keep the quantizer, search their M nearest
@@ -98,10 +98,12 @@ import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from zvdb_spark.operators.arrowvec import list_array, matrix
 from zvdb_spark.operators.knn import _pair_scores, _topk_by_dist_id
 from zvdb_spark.operators.segments import (
     exact_search_segments,
@@ -541,19 +543,21 @@ class GraphIndex:
         sample = emb.sample(fraction=frac, seed=self.seed) if frac < 1.0 else emb
         dim_guess = len(sample.select("emb").head()[0])
         if 40.0 * c_cells * dim_guess <= _LOCAL_KMEANS_MAX_ELEMS:
-            spdf = sample.select("vec_id", "emb").orderBy("vec_id").toPandas()
-            smat = np.stack(spdf["emb"].to_numpy()).astype(np.float64)
+            smat = matrix(
+                sample.select("vec_id", "emb").orderBy("vec_id").toArrow()["emb"],
+                name="emb",
+            )
             self.centroids = _kmeans_local(smat, c_cells, n_iter=4)
             self.structure_ratio = _structure_ratio(smat, self.centroids)
         else:
             self.centroids = kmeans_fit(
                 sample, k=c_cells, n_iter=4, id_col="vec_id", vec_col="emb"
             )
-            spdf = (
+            smat = matrix(
                 sample.select("emb").orderBy(F.rand(self.seed)).limit(2000)
-                .toPandas()
+                .toArrow()["emb"],
+                name="emb",
             )
-            smat = np.stack(spdf["emb"].to_numpy()).astype(np.float64)
             self.structure_ratio = _structure_ratio(smat, self.centroids)
         # sampled cell sizes — the weights that keep search shards
         # BALANCED BY ROWS in _assign_shards (clustered corpora fill
@@ -670,14 +674,13 @@ class GraphIndex:
         spc = self.seeds_per_cell
         vmeta = dict(self._vec_meta)  # pid -> (prefix, n, dim)
 
-        def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("vec_id", ignore_index=True)
-            pid = int(pdf["pid"].iloc[0])
-            nids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nmat = np.ascontiguousarray(
-                np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            )
-            ncells = pdf["cell_id"].to_numpy(dtype=np.int32)
+        def _merge(key, new):
+            pid = key[0].as_py()
+            nids = new["vec_id"].to_numpy()
+            order = np.argsort(nids, kind="stable")
+            nids = nids[order]
+            nmat = matrix(new["emb"], name="emb")[order]
+            ncells = new["cell_id"].to_numpy().astype(np.int32)[order]
             if pid in vmeta:
                 old_prefix = vmeta[pid][0]
                 oids = np.load(f"{old_prefix}.ids.npy")
@@ -702,24 +705,21 @@ class GraphIndex:
             out_cells, out_seeds = _write_segment(
                 prefix, ids, mat, cells, newm, cmat, spc
             )
-            return pd.DataFrame(
-                [
-                    (
-                        pid, len(ids), mat.shape[1], prefix, out_cells,
-                        out_seeds,
-                        [int(x) for x in np.unique(ncells)], len(nids),
-                    )
-                ],
-                columns=[
-                    "pid", "n", "dim", "prefix", "cells", "seeds",
-                    "newcells", "n_new",
-                ],
-            )
+            return pa.table({
+                "pid": pa.array([pid], pa.int32()),
+                "n": pa.array([len(ids)], pa.int64()),
+                "dim": pa.array([mat.shape[1]], pa.int32()),
+                "prefix": [prefix],
+                "cells": pa.array([out_cells], pa.list_(pa.int32())),
+                "seeds": pa.array([out_seeds], pa.list_(pa.list_(pa.int64()))),
+                "newcells": pa.array([np.unique(ncells)], pa.list_(pa.int32())),
+                "n_new": pa.array([len(nids)], pa.int64()),
+            })
 
         with _no_aqe_coalesce(spark):
             meta = (
                 nodes.groupBy("pid")
-                .applyInPandas(_merge, _PACK_SCHEMA)
+                .applyInArrow(_merge, _PACK_SCHEMA)
                 .collect()
             )
         touched = {r.pid for r in meta}
@@ -806,19 +806,23 @@ class GraphIndex:
                 hi = np.searchsorted(cs, cell, side="right")
                 return order[lo:hi]
 
-            for pdf in batches:
+            for batch in batches:
                 out = []
-                for row in pdf.itertuples(index=False):
-                    pid = int(cell_pid[row.cell])
+                for cell, nbrs, nbr_pids in zip(
+                    batch["cell"].to_numpy(),
+                    matrix(batch["nbrs"], np.int64, name="nbrs"),
+                    matrix(batch["nbr_pids"], np.int64, name="nbr_pids"),
+                ):
+                    pid = int(cell_pid[cell])
                     if pid not in vmeta:
                         continue
                     ids, mat, _, _, newm = seg(pid)
-                    memb = members(pid, row.cell)
+                    memb = members(pid, cell)
                     probe = memb[newm[memb]]
                     if not len(probe):
                         continue
                     cor_i, cor_m, cor_p = [], [], []
-                    for g, pg in zip(row.nbrs, row.nbr_pids):
+                    for g, pg in zip(nbrs.tolist(), nbr_pids.tolist()):
                         if pg not in vmeta:
                             continue
                         gids, gmat, _, _, _ = seg(pg)
@@ -862,18 +866,20 @@ class GraphIndex:
                     )
                 if out:
                     src, dst, sc, pids = (np.concatenate(c) for c in zip(*out))
-                    yield pd.DataFrame(
-                        {"src": src, "dst": dst, "score": sc, "pid": pids}
-                    )
+                    # f32 GEMM scores widen exactly to the double column
+                    yield pa.record_batch({
+                        "src": src, "dst": dst,
+                        "score": sc.astype(np.float64), "pid": pids,
+                    })
 
-        # EXPLICIT partition count + mapInPandas: the work list is a
+        # EXPLICIT partition count + mapInArrow: the work list is a
         # few KB, so a groupBy shuffle would be AQE-coalesced into ONE
         # partition and the whole GEMM fan-out would serialize
         # (measured: 16 s vs ~2 s at 100k). Round-robin repartition
         # with a fixed count is respected by AQE and balances cells
         # perfectly; grouping semantics aren't needed — each row is an
         # independent cell.
-        return work.repartition(ntasks).mapInPandas(_task, _PENDING_SCHEMA)
+        return work.repartition(ntasks).mapInArrow(_task, _PENDING_SCHEMA)
 
     def _celled_from_segments(self) -> DataFrame:
         """(cell_id, vec_id, emb) read back from the packed segments —
@@ -892,20 +898,15 @@ class GraphIndex:
         )
 
         def _read(batches):
-            for pdf in batches:
-                for r in pdf.itertuples(index=False):
-                    ids = np.load(f"{r.prefix}.ids.npy")
-                    mat = np.load(f"{r.prefix}.mat.npy")
-                    cells = np.load(f"{r.prefix}.cells.npy")
-                    yield pd.DataFrame(
-                        {
-                            "cell_id": cells.astype(np.int32),
-                            "vec_id": ids,
-                            "emb": list(mat),
-                        }
-                    )
+            for batch in batches:
+                for prefix in batch["prefix"].to_pylist():
+                    yield pa.record_batch({
+                        "cell_id": np.load(f"{prefix}.cells.npy").astype(np.int32),
+                        "vec_id": np.load(f"{prefix}.ids.npy"),
+                        "emb": list_array(np.load(f"{prefix}.mat.npy")),
+                    })
 
-        return mdf.mapInPandas(_read, "cell_id int, vec_id long, emb array<double>")
+        return mdf.mapInArrow(_read, "cell_id int, vec_id long, emb array<double>")
 
     # -- append (R2, incremental) -----------------------------------
     def append(self, emb_new: DataFrame) -> "GraphIndex":
@@ -1359,11 +1360,9 @@ class GraphIndex:
         adj_meta = dict(self._adj_meta)  # pid -> (n, maxdeg, dim, vp, ap)
 
         def _task(batches):
-            for bpdf in batches:
-                qids_all = bpdf["query_id"].to_numpy()
-                qm_all = np.ascontiguousarray(
-                    np.stack(bpdf["qemb"].to_numpy()).astype(np.float64)
-                )
+            for batch in batches:
+                qids_all = batch["query_id"].to_numpy()
+                qm_all = matrix(batch["qemb"], name="qemb")
                 d = cn[None, :] - 2.0 * (qm_all @ cmat.T)
                 # exact top-nseed cells in (distance, cell index)
                 # order — NEAREST CELL FIRST, the helper's row order.
@@ -1435,10 +1434,12 @@ class GraphIndex:
                     np.where(first, np.arange(len(q)), 0)
                 )
                 keep = o[np.arange(len(q)) - grp_start < k]
-                yield res.iloc[keep].reset_index(drop=True)
+                yield pa.RecordBatch.from_pandas(
+                    res.iloc[keep], preserve_index=False
+                )
 
-        # EXPLICIT round-robin repartition + mapInPandas (not groupBy +
-        # applyInPandas): the query side is small, so AQE would
+        # EXPLICIT round-robin repartition + mapInArrow (not groupBy +
+        # applyInArrow): the query side is small, so AQE would
         # coalesce a grouping shuffle into one or two partitions and
         # serialize the beam. A fixed partition count spreads query
         # blocks across every core, and every query's answer is
@@ -1446,7 +1447,7 @@ class GraphIndex:
         return (
             queries.select("query_id", "qemb")
             .repartition(n_qblocks)
-            .mapInPandas(_task, SEARCH_SCHEMA_STR)
+            .mapInArrow(_task, SEARCH_SCHEMA_STR)
         )
 
     # -- exact search over the same segments --------------------------

@@ -24,9 +24,11 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from zvdb_spark.operators.arrowvec import matrix
 
 _CENTROID_FORMAT = 1
 
@@ -280,9 +282,9 @@ def kmeans_fit(
     vec_col: str = "emb",
 ) -> np.ndarray:
     """Fit k centroids; returns (k, dim) float64 array."""
-    init_rows = emb.orderBy(id_col).limit(k).collect()
-    centroids = np.stack(
-        [np.asarray(r[vec_col], dtype=np.float64) for r in init_rows]
+    centroids = matrix(
+        emb.orderBy(id_col).limit(k).select(vec_col).toArrow()[vec_col],
+        name=vec_col,
     )
     for _ in range(n_iter):
         assigned = assign_cells(emb, centroids, id_col, vec_col)
@@ -316,12 +318,12 @@ def assign_cells(
     cmat = np.ascontiguousarray(centroids)
     cnorm = (cmat * cmat).sum(axis=1)
 
-    @F.pandas_udf("int")
-    def _cell(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.to_numpy()).astype(np.float64)
+    @F.arrow_udf("int")
+    def _cell(vs: pa.Array) -> pa.Array:
+        mat = matrix(vs, name=vec_col)
         xnorm = (mat * mat).sum(axis=1)
         d = xnorm[:, None] + cnorm[None, :] - 2.0 * (mat @ cmat.T)
-        return pd.Series(np.argmin(d, axis=1).astype(np.int32))
+        return pa.array(np.argmin(d, axis=1).astype(np.int32))
 
     return emb.withColumn("cell_id", _cell(F.col(vec_col)))
 
@@ -349,11 +351,11 @@ def kmeans_fit_sample(
     (``lloyd_fit``) so the driver stays schedulable during the
     O(sample x k x dim) FLOP block — identical centroids either way.
     """
-    from zvdb_spark.operators.pq import hash_sample, sample_matrix
+    from zvdb_spark.operators.pq import hash_sample
 
     sample = hash_sample(
         emb, sample_n, id_col=id_col, cols=(vec_col,), n_rows=n_rows
     )
     return lloyd_fit(
-        emb.sparkSession, sample_matrix(sample, vec_col), k, n_iter
+        emb.sparkSession, matrix(sample[vec_col], name=vec_col), k, n_iter
     )

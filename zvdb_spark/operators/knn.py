@@ -14,11 +14,14 @@ partition-then-merge shape of distributed top-k.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from zvdb_spark.functions.vector import cosine_sim, dist_sq
+from zvdb_spark.operators.arrowvec import matrix
 
 
 def _score(metric: str, a: str, b: str) -> tuple[Column, bool]:
@@ -85,8 +88,6 @@ def _topk_by_dist_id(d, ids, kk: int):
     its finite entries come first, then its NaN entries by id.
     Returns (rows, min(kk, width)) indices.
     """
-    import numpy as np
-
     nq, w = d.shape
     kk = min(kk, w)
     if kk < w:
@@ -115,8 +116,6 @@ def _pair_scores(qarr, mat, metric: str):
     (descending-better), NaN where either norm is zero (matches the
     NULL semantics of functions.vector.cosine_sim).
     """
-    import numpy as np
-
     g = qarr @ mat.T
     if metric == "l2_sq":
         qn = (qarr * qarr).sum(axis=1)
@@ -148,7 +147,7 @@ def _replicated_cogroup(
 
     The corpus is hash-sharded into P shards and replicated across B
     probe blocks; probes are hash-blocked into B blocks and replicated
-    across P shards; a cogrouped applyInPandas task then sees exactly
+    across P shards; a cogrouped applyInArrow task then sees exactly
     one (probe-block, corpus-shard) cell. Shuffle volume is
     |corpus| x B + |probes| x P rows — the block nested-loop join
     shape that scales: task memory is bounded by (|corpus|/P +
@@ -198,7 +197,7 @@ def _replicated_cogroup(
         .cogroup(
             c.repartition(nparts, "bid", "pid").groupBy("bid", "pid")
         )
-        .applyInPandas(fn, out_schema)
+        .applyInArrow(fn, out_schema)
     )
 
 
@@ -228,8 +227,8 @@ _CELL_CHUNK_ELEMS = 1 << 24  # distance-matrix elements (128 MB f64)
 # instead of being replicated through the exchange. At the 1M x 10k
 # bench shape the
 # exploded probe side was 245 copies x 10k rows x ~1.1 KB ≈ 2.7 GB of
-# shuffle write+read plus one Arrow decode + np.stack of the full
-# probe batch PER TASK; the same 10 MB probe matrix broadcasts once
+# shuffle write+read plus one Arrow decode of the full probe batch
+# PER TASK; the same 10 MB probe matrix broadcasts once
 # per executor. Above the gate (e.g. corpus-scale self-joins) the
 # blocked cogroup fan-out below remains THE path — its task memory
 # stays bounded at any probe count, which a broadcast cannot promise.
@@ -237,47 +236,42 @@ _BCAST_PROBE_ROWS = 65536
 _BCAST_PROBE_BYTES = 1 << 27  # 128 MB of f64 probe matrix
 
 
-def _decode(pdf, id_col: str, vec_col: str):
-    """(int64 ids, C-contiguous float64 matrix) of one pandas batch —
-    the one place a vector column becomes a numpy matrix."""
-    import numpy as np
-
-    ids = pdf[id_col].to_numpy().astype(np.int64, copy=False)
-    if not len(ids):
-        return ids, np.empty((0, 0), dtype=np.float64)
-    return ids, np.ascontiguousarray(
-        np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    )
+def _pair_batch(q, n, s):
+    """One (query_id, neighbor_id, score) batch; a NaN score (cosine
+    with a zero-norm side) is emitted as NULL, like ``cosine_sim``."""
+    return pa.record_batch({
+        "query_id": q, "neighbor_id": n,
+        "score": pa.array(s, mask=np.isnan(s)),
+    })
 
 
-def _score_chunks(qids, qarr, cpdf, metric: str, emit):
-    """The per-task kernel: decode one corpus batch, score it against
-    the probe matrix one query chunk at a time, and yield the
-    (query_id, neighbor_id, score) frame ``emit`` keeps from each
-    chunk. Chunking bounds the distance matrix to _CELL_CHUNK_ELEMS
-    however big the batch is; rows are independent, so it changes
-    nothing but peak memory."""
-    import pandas as pd
-
-    if not len(cpdf):
+def _score_chunks(qids, qarr, corpus, metric: str, emit):
+    """The per-task kernel: decode one corpus batch (``vec_id``,
+    ``emb``), score it against the probe matrix one query chunk at a
+    time, and yield the (query_id, neighbor_id, score) batch ``emit``
+    keeps from each chunk. Chunking bounds the distance matrix to
+    _CELL_CHUNK_ELEMS however big the batch is; rows are independent,
+    so it changes nothing but peak memory."""
+    if not len(corpus):
         return
-    ids, mat = _decode(cpdf, "vec_id", "emb")
+    ids = corpus["vec_id"].to_numpy()
+    mat = matrix(corpus["emb"], name="emb")
     qchunk = max(256, _CELL_CHUNK_ELEMS // len(ids))
     for lo in range(0, len(qarr), qchunk):
-        q, n, s = emit(
+        yield _pair_batch(*emit(
             qids[lo : lo + qchunk], ids,
             _pair_scores(qarr[lo : lo + qchunk], mat, metric),
-        )
-        yield pd.DataFrame({"query_id": q, "neighbor_id": n, "score": s})
+        ))
 
 
 def _collect_probe_matrix(probes: DataFrame, query_id: str,
                           query_vec: str):
-    """(ids, matrix) of a SMALL probe side via one Arrow ``toPandas``
+    """(int64 ids, matrix) of a SMALL probe side via one ``toArrow``
     (guide: Arrow for driver transfers; the driver holds only the
     gate-bounded probe batch, never corpus rows)."""
-    return _decode(probes.select(query_id, query_vec).toPandas(),
-                   query_id, query_vec)
+    t = probes.select(query_id, query_vec).toArrow()
+    return (t[query_id].to_numpy().astype(np.int64, copy=False),
+            matrix(t[query_vec], name=query_vec))
 
 
 def _bcast_probe_map(corpus: DataFrame, fn, n_shards: int,
@@ -300,7 +294,7 @@ def _bcast_probe_map(corpus: DataFrame, fn, n_shards: int,
         F.col(corpus_vec).alias("emb"),
     )
     key = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(64 * n_shards))
-    return c.repartition(n_shards, key).mapInPandas(fn, _PAIR_SCHEMA)
+    return c.repartition(n_shards, key).mapInArrow(fn, _PAIR_SCHEMA)
 
 
 
@@ -378,9 +372,6 @@ def _scored_pairs(corpus: DataFrame, probes: DataFrame, metric: str, emit,
     the width when it is. A caller that pins the whole grid without
     ``n_probes`` is never counted and goes straight to the grid.
     """
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
     if n_blocks is None or (
@@ -411,8 +402,8 @@ def _scored_pairs(corpus: DataFrame, probes: DataFrame, metric: str, emit,
 
             def _task(batches):
                 qi, qa = bq.value
-                for cpdf in batches:
-                    yield from _score_chunks(qi, qa, cpdf, metric, emit)
+                for batch in batches:
+                    yield from _score_chunks(qi, qa, batch, metric, emit)
 
             return _bcast_probe_map(corpus, _task, n_shards, corpus_id,
                                     corpus_vec)
@@ -420,14 +411,14 @@ def _scored_pairs(corpus: DataFrame, probes: DataFrame, metric: str, emit,
     n_shards, n_blocks = _auto_grid(corpus, probes, n_shards, n_blocks,
                                     n_corpus, n_probes, parallelism)
 
-    def _cell(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        qi, qa = _decode(qpdf, "query_id", "qemb")
-        frames = list(_score_chunks(qi, qa, cpdf, metric, emit))
-        if frames:
-            return pd.concat(frames, ignore_index=True)
-        return pd.DataFrame({"query_id": np.empty(0, np.int64),
-                             "neighbor_id": np.empty(0, np.int64),
-                             "score": np.empty(0, np.float64)})
+    def _cell(probe, corpus):
+        qi = probe["query_id"].to_numpy()
+        qa = matrix(probe["qemb"], name=query_vec)
+        empty = np.empty(0, np.int64)
+        return pa.Table.from_batches(
+            list(_score_chunks(qi, qa, corpus, metric, emit))
+            or [_pair_batch(empty, empty, np.empty(0))]
+        )
 
     return _replicated_cogroup(
         corpus, probes, _cell, _PAIR_SCHEMA, n_shards, n_blocks,
@@ -466,8 +457,6 @@ def exact_search_blocked(
     of one GEMM — so the id tie-break is stable). Pinned by the
     oracled q_knn_batch hash and test_blocked_paths_match_reference.
     """
-    import numpy as np
-
     asc = metric == "l2_sq"
 
     def _emit_topk(qi, ids, d):
@@ -511,8 +500,6 @@ def threshold_join_blocked(
     pinned by the oracled q_sim_join_threshold / q_dedup_vectors /
     q_dedup_embedding hashes).
     """
-    import numpy as np
-
     def _emit_pairs(qi, ids, s):
         mask = s < tau if metric == "l2_sq" else s >= tau
         if upper_only:

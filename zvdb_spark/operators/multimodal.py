@@ -1,5 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed
-metadata, processed with Arrow-batched mapInPandas.
+metadata, processed with Arrow-batched mapInPandas. Payloads are
+bytes, not vector columns, so they stay on the pandas batch path;
+vector columns cross the boundary through operators/arrowvec.
 
 The pattern a 100 TB multimodal pipeline needs: media stored as
 ``binary`` columns (or object-store URIs) beside structured metadata;
@@ -8,10 +10,10 @@ Python over Arrow batches, with batch size controlled by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a batch of images
 fits in executor memory.
 
-The actual codec step is STUBBED — image/audio libraries are not in
-this container — behind ``decode_media``: real Spark plumbing (schema,
-batching, partitioning), deterministic fake decode. Swapping in a real
-codec changes only the inside of that one function.
+The actual codec step is STUBBED — image/audio libraries are not
+engine dependencies — behind ``decode_media``: real Spark plumbing
+(schema, batching, partitioning), deterministic fake decode. Swapping
+in a real codec changes only the inside of that one function.
 """
 
 from __future__ import annotations
@@ -180,69 +182,6 @@ def sample_frames(media: DataFrame, n_frames: int = 4, frame_size: int = 16) -> 
             )
 
     return media.mapInPandas(_batches, FRAME_SCHEMA)
-
-
-# --------------------- optional REAL image codec (import-guarded)
-#
-# The deterministic fake above stays the oracle-checked default (the
-# container has no media libraries); when PIL is installed the REAL
-# decode path below activates — same Arrow/mapInPandas plumbing, a
-# true PNG/JPEG decode inside. tests/test_multimodal.py pins the
-# round-trip when PIL is importable and skips otherwise.
-
-try:  # PIL is an optional dependency; everything else works without
-    from PIL import Image as _PILImage
-
-    HAS_PIL = True
-except ImportError:  # the in-container path
-    _PILImage = None
-    HAS_PIL = False
-
-IMAGE_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mode", T.StringType()),
-        T.StructField("n_channels", T.IntegerType()),
-    ]
-)
-
-
-def decode_image_real(payload: bytes) -> dict:
-    """REAL image decode (PIL). Raises NotImplementedError when PIL
-    is absent — callers choose this path explicitly; decode_media's
-    deterministic fake remains the environment-independent default."""
-    if _PILImage is None:
-        raise NotImplementedError(
-            "PIL not installed — use decode_media's deterministic "
-            "fake (the Spark-side pipeline is identical)"
-        )
-    import io
-
-    with _PILImage.open(io.BytesIO(payload)) as im:
-        return {
-            "width": int(im.width),
-            "height": int(im.height),
-            "mode": str(im.mode),
-            "n_channels": len(im.getbands()),
-        }
-
-
-def extract_image_features(media: DataFrame) -> DataFrame:
-    """mapInPandas image feature extraction with the REAL codec:
-    identical batching/schema discipline to extract_features, PIL
-    decode inside. Only call when HAS_PIL (the guard raises per batch
-    otherwise — loudly, not silently fake)."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_image_real(p) for p in pdf["payload"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    return media.mapInPandas(_batches, IMAGE_FEATURE_SCHEMA)
 
 
 def documents_as_media(documents: DataFrame) -> DataFrame:

@@ -16,9 +16,9 @@ Distributed shape (all stages cluster-side):
   numpy Lloyd's per subspace. Codebooks are m x k x dsub floats
   (16x256x8 f64 = 256 KB) — task-closure freight, like the IVF
   centroids in operators/kmeans.py.
-- **encode**: one Arrow-batched pandas_udf, argmin GEMM per subspace;
+- **encode**: one Arrow-batched arrow_udf, argmin GEMM per subspace;
   no shuffle, output is ``array<smallint>`` codes.
-- **search (ADC)**: mapInPandas over code partitions. ADC distance to
+- **search (ADC)**: mapInArrow over code partitions. ADC distance to
   a coded row IS the exact distance to its reconstruction (subspaces
   concatenate orthogonally: sum_m ||q_m - b_{c_m}||^2 =
   ||q - recon||^2), so each task decodes its batch's codes once
@@ -51,11 +51,12 @@ hash-matched (same policy as the graph-ANN path).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from zvdb_spark.operators.arrowvec import list_array, matrix
 from zvdb_spark.operators.knn import _topk_by_dist_id
 
 # Hash range for the deterministic pseudo-shuffle of ids used by the
@@ -74,19 +75,17 @@ def hash_sample(
     id_col: str = "vec_id",
     cols: tuple[str, ...] = ("emb",),
     n_rows: int | None = None,
-) -> pd.DataFrame:
+) -> pa.Table:
     """First ``sample_n`` rows under a value hash of the id:
     deterministic, partitioning-independent, spread across the corpus
     (unlike head-N, which at 100 TB is one possibly-skewed file).
-    Returned as a pandas DataFrame via Arrow ``toPandas()`` — the
-    row-pickling ``collect()`` this replaces cost ~75 s of driver time
-    for a 100k x 128-d sample (measured: the Row transfer plus the
-    per-Row ``np.asarray`` loop in every consumer) vs ~2 s through
-    Arrow; same rows, same order, bit-identical float64 values.
-    The ~2 s figure assumes
-    ``spark.sql.execution.arrow.pyspark.enabled=true`` (session.py
-    sets it); a session without it silently falls back to the slow
-    row-conversion ``toPandas`` — same values, ~old cost.
+    Returned as an Arrow table via ``toArrow()``, so a vector column
+    becomes a matrix through ``arrowvec.matrix`` with no per-row
+    objects — the row-pickling ``collect()`` this replaced cost ~75 s
+    of driver time for a 100k x 128-d sample (measured: the Row
+    transfer plus the per-Row ``np.asarray`` loop in every consumer)
+    vs ~2 s through Arrow; same rows, same order, bit-identical
+    float64 values.
 
     ``n_rows`` (when the caller knows the corpus size — parquet
     footer, range count) enables the scale-safe path: a hash
@@ -107,30 +106,22 @@ def hash_sample(
     d = emb.select(id_col, *cols, h.alias("__h"))
     if n_rows is None or n_rows <= 4 * sample_n:
         return (
-            d.orderBy("__h", id_col).limit(sample_n).drop("__h").toPandas()
+            d.orderBy("__h", id_col).limit(sample_n).drop("__h").toArrow()
         )
     need = min(sample_n, n_rows)
     frac = 4.0 * sample_n / n_rows
     while True:
         thresh = int(_HASH_M * min(1.0, frac))
-        pdf = (
+        tbl = (
             d.filter(F.col("__h") < thresh)
             .orderBy("__h", id_col)
             .limit(sample_n)
             .drop("__h")
-            .toPandas()
+            .toArrow()
         )
-        if len(pdf) >= need or frac >= 1.0:
-            return pdf
+        if tbl.num_rows >= need or frac >= 1.0:
+            return tbl
         frac *= 4.0
-
-
-def sample_matrix(pdf: pd.DataFrame, vec_col: str = "emb") -> np.ndarray:
-    """(n, dim) float64 matrix from a ``hash_sample`` frame's vector
-    column — one np.stack over the Arrow-materialized arrays (the
-    per-Row ``np.asarray`` loop this replaces was O(n) Python-level
-    work on the driver's single thread)."""
-    return np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
 
 
 def pq_train(
@@ -152,7 +143,7 @@ def pq_train(
     sample = hash_sample(
         emb, sample_n, id_col=id_col, cols=(vec_col,), n_rows=n_rows
     )
-    mat = sample_matrix(sample, vec_col)
+    mat = matrix(sample[vec_col], name=vec_col)
     return _fit_codebooks(mat, m_sub=m_sub, k_codes=k_codes, n_iter=n_iter)
 
 
@@ -192,15 +183,15 @@ def pq_encode(
     m_sub, _, dsub = books.shape
     cnorm = (books * books).sum(2)  # (m, k)
 
-    @F.pandas_udf("array<smallint>")
-    def _code(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.to_numpy()).astype(np.float64)
+    @F.arrow_udf("array<smallint>")
+    def _code(vs: pa.Array) -> pa.Array:
+        mat = matrix(vs, name=vec_col)
         out = np.empty((mat.shape[0], m_sub), dtype=np.int16)
         for m in range(m_sub):
             x = mat[:, m * dsub : (m + 1) * dsub]
             d = cnorm[m][None, :] - 2.0 * (x @ books[m].T)  # +||x||² const
             out[:, m] = d.argmin(1).astype(np.int16)
-        return pd.Series(list(out))
+        return list_array(out)
 
     return emb.select(F.col(id_col), _code(F.col(vec_col)).alias("code"))
 
@@ -241,11 +232,11 @@ def pq_search(
     emit_k = kk if per_part_cap is None else min(kk, int(per_part_cap))
 
     def _part(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            ids = pdf[id_col].to_numpy()
-            c = np.stack(pdf["code"].to_numpy()).astype(np.int64)  # (n, m)
+            ids = batch[id_col].to_numpy().astype(np.int64)
+            c = matrix(batch["code"], np.int64, name="code")  # (n, m)
             n = len(ids)
             # decode once per batch (batch-bounded memory): ADC dist
             # == exact dist to the reconstruction, so scoring is one
@@ -267,7 +258,7 @@ def pq_search(
                 top = _topk_by_dist_id(d, ids, emit_k)
                 rows = np.take_along_axis(d, top, axis=1)
                 out_q = np.repeat(np.arange(q0, q0 + len(qb)), top.shape[1])
-                yield pd.DataFrame(
+                yield pa.record_batch(
                     {
                         "query_id": out_q,
                         id_col: ids[top].ravel(),
@@ -279,7 +270,7 @@ def pq_search(
     # accumulate in f32, so the values are f32-representable anyway);
     # the declared double column is restored by an exact cast after
     # the top-k filter — same values, half the shuffled dist bytes
-    cand = codes.mapInPandas(
+    cand = codes.mapInArrow(
         _part, schema=f"query_id long, {id_col} long, adc_dist_sq float"
     )
     w = W.partitionBy("query_id").orderBy(
@@ -381,8 +372,8 @@ def exact_rerank(
     # 10k x 128 probe batch (measured 0.8 s vs 4.5 s) — this runs
     # inside every timed rerank, so the constant matters
     qdf = spark.createDataFrame(
-        pd.DataFrame(
-            {"query_id": np.arange(len(q), dtype=np.int64), "qemb": list(q)}
+        pa.table(
+            {"query_id": np.arange(len(q), dtype=np.int64), "qemb": list_array(q)}
         ),
         schema="query_id long, qemb array<double>",
     )
@@ -463,7 +454,7 @@ def pq_search_ivf(
     Each query probes its ``nprobe`` nearest cells only, so scored
     rows ~= nprobe/C of the corpus and each of them costs m table
     lookups on a 16 B code — the two axes multiply. Executed as one
-    mapInPandas over the codes with cells grouped per task
+    mapInArrow over the codes with cells grouped per task
     (repartition on cell_id): per cell, LUTs are built only for the
     queries probing that cell, per-(query, partition) top-k, global
     window merge of P x k rows per query.
@@ -546,12 +537,12 @@ def pq_search_ivf(
         acc_q: list[np.ndarray] = []
         acc_i: list[np.ndarray] = []
         acc_d: list[np.ndarray] = []
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            ids_all = pdf[id_col].to_numpy()
-            cells_all = pdf["cell_id"].to_numpy()
-            c_all = np.stack(pdf["code"].to_numpy()).astype(np.int64)
+            ids_all = batch[id_col].to_numpy().astype(np.int64)
+            cells_all = batch["cell_id"].to_numpy()
+            c_all = matrix(batch["code"], np.int64, name="code")
             # decode once per Arrow batch — recon stays batch-bounded
             # ((rows, dim) f64) however large the task partition is
             recon = np.empty((len(ids_all), m_sub * dsub), dtype=np.float64)
@@ -596,7 +587,7 @@ def pq_search_ivf(
             starts = np.searchsorted(qs, qs, side="left")
             rank = np.arange(len(qs)) - starts
             keep = rank < cap
-            yield pd.DataFrame(
+            yield pa.record_batch(
                 {
                     "query_id": qs[keep],
                     id_col: is_[keep],
@@ -638,7 +629,7 @@ def pq_search_ivf(
     cand = (
         codes_with_cell.join(F.broadcast(gmap), "cell_id")
         .repartition(n_parts, "_grp")
-        .mapInPandas(
+        .mapInArrow(
             _part, schema=f"query_id long, {id_col} long, adc_dist_sq float"
         )
     )
@@ -854,25 +845,11 @@ def residual_encode(
     bnorm = (books * books).sum(2)  # (m, k)
 
     def _enc(batches):
-        # mapInArrow: the vector column's values buffer is ONE
-        # contiguous float64 array (ListArray), so the (n, dim) input
-        # matrix is a zero-copy reshape instead of an np.stack over n
-        # per-row objects (measured 110 ms -> 0.06 ms per 10k x 128
-        # batch), and the codes go back out as one flat int16 buffer
-        # + offsets. Same GEMMs on the same f64 values -> identical
-        # cells and codes.
-        import pyarrow as pa
-
         for rb in batches:
             n = rb.num_rows
             if not n:
                 continue
-            ids = rb.column(rb.schema.get_field_index(id_col))
-            vcol = rb.column(rb.schema.get_field_index(vec_col))
-            flat = vcol.flatten().to_numpy(zero_copy_only=False)
-            mat = np.ascontiguousarray(
-                flat.reshape(n, -1), dtype=np.float64
-            )
+            mat = matrix(rb[vec_col], name=vec_col)
             d = (
                 (mat * mat).sum(1)[:, None]
                 + cnorm[None, :]
@@ -885,17 +862,11 @@ def residual_encode(
                 x = resid[:, m * dsub : (m + 1) * dsub]
                 dm = bnorm[m][None, :] - 2.0 * (x @ books[m].T)  # +‖x‖² const
                 out[:, m] = dm.argmin(1).astype(np.int16)
-            codes = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * m_sub, m_sub, dtype=np.int32)
-                ),
-                pa.array(out.ravel(), type=pa.int16()),
-            )
             yield pa.RecordBatch.from_arrays(
                 [
-                    ids.cast(pa.int64()),
+                    rb[id_col].cast(pa.int64()),
                     pa.array(cell.astype(np.int32)),
-                    codes,
+                    list_array(out),
                 ],
                 names=[id_col, "cell_id", "code"],
             )
@@ -935,7 +906,7 @@ def ivfpq_build(
     sample = hash_sample(
         emb, sample_n, id_col=id_col, cols=(vec_col,), n_rows=n_rows
     )
-    mat = sample_matrix(sample, vec_col)
+    mat = matrix(sample[vec_col], name=vec_col)
     d = (
         (mat * mat).sum(1)[:, None]
         + (cmat * cmat).sum(1)[None, :]
@@ -1025,7 +996,7 @@ def opq_train(
     sample = hash_sample(
         emb, sample_n, id_col=id_col, cols=(vec_col,), n_rows=n_rows
     )
-    x = sample_matrix(sample, vec_col)
+    x = matrix(sample[vec_col], name=vec_col)
     dim = x.shape[1]
     if dim % m_sub:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
@@ -1062,15 +1033,15 @@ def opq_encode(
         )
     cnorm = (books * books).sum(2)
 
-    @F.pandas_udf("array<smallint>")
-    def _code(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.to_numpy()).astype(np.float64) @ r
+    @F.arrow_udf("array<smallint>")
+    def _code(vs: pa.Array) -> pa.Array:
+        mat = matrix(vs, name=vec_col) @ r
         out = np.empty((mat.shape[0], m_sub), dtype=np.int16)
         for m in range(m_sub):
             xm = mat[:, m * dsub : (m + 1) * dsub]
             d = cnorm[m][None, :] - 2.0 * (xm @ books[m].T)
             out[:, m] = d.argmin(1).astype(np.int16)
-        return pd.Series(list(out))
+        return list_array(out)
 
     return emb.select(F.col(id_col), _code(F.col(vec_col)).alias("code"))
 

@@ -37,9 +37,11 @@ import uuid
 from contextlib import contextmanager
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from zvdb_spark.operators.arrowvec import matrix
 
 DEFAULT_SHARD_TARGET = 2_000_000  # rows per segment (task state bound)
 
@@ -530,13 +532,11 @@ def exact_search_segments(
                 cache[pref] = (np.asarray(ids), mat, xn)
             return cache[pref]
 
-        for qpdf in batches:
+        for batch in batches:
             if not kk:
                 continue
-            qids_all = qpdf[query_id].to_numpy()
-            qm_all = np.ascontiguousarray(
-                np.stack(qpdf[query_vec].to_numpy()).astype(np_dtype)
-            )
+            qids_all = batch[query_id].to_numpy().astype(np.int64)
+            qm_all = matrix(batch[query_vec], np_dtype, name=query_vec)
             qn_all = (
                 qm_all.astype(np.float64) ** 2
             ).sum(axis=1).astype(np_dtype)
@@ -584,7 +584,7 @@ def exact_search_segments(
                 sel = np.lexsort((cand_i, cand_d, row))
                 sel = sel.reshape(nq_c, width)[:, :kk]
                 cand_i, cand_d = cand_i[sel], cand_d[sel]
-                yield pd.DataFrame(
+                yield pa.record_batch(
                     {
                         "query_id": np.repeat(qids, kk),
                         "neighbor_id": cand_i.ravel(),
@@ -601,7 +601,7 @@ def exact_search_segments(
     return (
         queries.select(query_id, query_vec)
         .repartition(n_tasks)
-        .mapInPandas(_task, _SEARCH_SCHEMA + ", rn int")
+        .mapInArrow(_task, _SEARCH_SCHEMA + ", rn int")
     )
 
 
@@ -640,19 +640,20 @@ class SegmentCorpus:
         d = seg_dir(self.index_dir)
         token = uuid.uuid4().hex[:12]
 
-        def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("vec_id", ignore_index=True)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat = np.ascontiguousarray(
-                np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            )
-            pid = int(pdf["pid"].iloc[0])
+        def _pack(key, shard):
+            pid = key[0].as_py()
+            ids = shard["vec_id"].to_numpy()
+            order = np.argsort(ids, kind="stable")
+            ids = ids[order]
+            mat = matrix(shard["emb"], name=vec_col)[order]
             prefix = os.path.join(d, f"xseg_{token}_{pid}")
             write_vectors(prefix, ids, mat)
-            return pd.DataFrame(
-                [(pid, prefix, len(ids), mat.shape[1])],
-                columns=["pid", "prefix", "n", "dim"],
-            )
+            return pa.table({
+                "pid": pa.array([pid], pa.int32()),
+                "prefix": [prefix],
+                "n": pa.array([len(ids)], pa.int64()),
+                "dim": pa.array([mat.shape[1]], pa.int32()),
+            })
 
         with no_aqe_coalesce(emb.sparkSession):
             rows = (
@@ -664,7 +665,7 @@ class SegmentCorpus:
                     .alias("pid"),
                 )
                 .groupBy("pid")
-                .applyInPandas(_pack, "pid int, prefix string, n long, dim int")
+                .applyInArrow(_pack, "pid int, prefix string, n long, dim int")
                 .collect()
             )
         retire_prefixes(p for _, p, _, _ in self.meta)

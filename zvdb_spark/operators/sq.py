@@ -30,7 +30,7 @@ Distributed shape (all stages cluster-side):
   the P partials. Driver memory is O(P x dim), independent of corpus
   size; no shuffle, no sample, the range is EXACT (so the error bound
   is a theorem, not an estimate).
-- **encode**: one Arrow-batched mapInPandas, no shuffle; output is a
+- **encode**: one Arrow-batched mapInArrow, no shuffle; output is a
   ``binary`` column of exactly ``dim`` bytes — the honest memory
   claim, not an array<int> that costs 4x the story.
 - **search (asymmetric)**: mapInPandas over code partitions; each
@@ -55,10 +55,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from zvdb_spark.operators.arrowvec import list_array, matrix
 from zvdb_spark.operators.artifacts import (
     load_npz_manifest,
     save_npz_manifest,
@@ -83,24 +85,26 @@ def sq8_train(
     def _part(batches):
         lo = None
         hi = None
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            v = matrix(batch[vec_col], name=vec_col)
             plo = v.min(axis=0)
             phi = v.max(axis=0)
             lo = plo if lo is None else np.minimum(lo, plo)
             hi = phi if hi is None else np.maximum(hi, phi)
         if lo is not None:
-            yield pd.DataFrame({"lo": [lo.tolist()], "hi": [hi.tolist()]})
+            yield pa.record_batch(
+                {"lo": list_array(lo[None, :]), "hi": list_array(hi[None, :])}
+            )
 
-    parts = emb.select(vec_col).mapInPandas(
+    parts = emb.select(vec_col).mapInArrow(
         _part, schema="lo array<double>, hi array<double>"
-    ).collect()
-    if not parts:
+    ).toArrow()
+    if not parts.num_rows:
         raise ValueError("sq8_train: empty corpus")
-    lo = np.min(np.stack([np.asarray(r["lo"]) for r in parts]), axis=0)
-    hi = np.max(np.stack([np.asarray(r["hi"]) for r in parts]), axis=0)
+    lo = matrix(parts["lo"], name="lo").min(axis=0)
+    hi = matrix(parts["hi"], name="hi").max(axis=0)
     return lo, hi
 
 
@@ -127,21 +131,21 @@ def sq8_encode(
     scale = _sq8_scale(lo_c, np.ascontiguousarray(hi, dtype=np.float64))
 
     def _enc(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            v = matrix(batch[vec_col], name=vec_col)
             c = np.clip(np.rint((v - lo_c) / scale), 0, 255).astype(
                 np.uint8
             )
-            yield pd.DataFrame(
+            yield pa.record_batch(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    id_col: batch[id_col].cast(pa.int64()),
                     "code": [row.tobytes() for row in c],
                 }
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select(id_col, vec_col).mapInArrow(
         _enc, schema=f"{id_col} long, code binary"
     )
 

@@ -595,9 +595,10 @@ def _pair_cosine_q99(e: DataFrame, n_rows: int) -> float:
     separate τ-pairs from everything else."""
     import numpy as np
 
+    from zvdb_spark.operators.arrowvec import matrix
+
     k = int(min(n_rows, LSH_STRUCT_SAMPLE))
-    pdf = e.orderBy("vec_id").limit(k).toPandas()
-    m = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+    m = matrix(e.orderBy("vec_id").limit(k).toArrow()["emb"], name="emb")
     mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
     c = (mn @ mn.T)[np.triu_indices(len(m), 1)]
     return float(np.quantile(c, 0.99)) if len(c) else 1.0
@@ -664,7 +665,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale posture: assignment is one broadcast-centroid Arrow-batch
     argmin (no shuffle); the greedy pass is one shuffle on cell_id
-    into an ``applyInPandas`` whose per-group work is
+    into an ``applyInArrow`` whose per-group work is
     O(cell_size × kept) — bounded by choosing k ~ N / target cell
     size exactly as the paper does (11k clusters at 100M docs), never
     corpus-quadratic. Within-cell greedy order is ascending vec_id,
@@ -710,8 +711,9 @@ def semantic_dedup_with_centroids(
     point for bit-stable cross-session dedup — fit once, persist via
     kmeans.save_centroids, load_centroids here every run."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
+    from zvdb_spark.operators.arrowvec import matrix
     from zvdb_spark.operators.kmeans import assign_cells
 
     e = load(spark, sf_dir, "embeddings").select(
@@ -720,14 +722,16 @@ def semantic_dedup_with_centroids(
     assigned = assign_cells(e, cents)
     tau = SEM_TAU
 
-    def _greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", ignore_index=True)
-        x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+    def _greedy(key, cell):
+        ids = cell["vec_id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        x = matrix(cell["emb"], name="emb")[order]
         x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-30)
         kept_rows: list[int] = []
-        kept = np.zeros(len(pdf), dtype=bool)
-        drop_cos = np.full(len(pdf), np.nan)
-        for i in range(len(pdf)):
+        kept = np.zeros(len(ids), dtype=bool)
+        drop_cos = np.full(len(ids), np.nan)
+        for i in range(len(ids)):
             if kept_rows:
                 sims = x[kept_rows] @ x[i]
                 j = int(np.argmax(sims))
@@ -736,23 +740,23 @@ def semantic_dedup_with_centroids(
                     continue
             kept[i] = True
             kept_rows.append(i)
-        ids = pdf["vec_id"].to_numpy()
-        return pd.DataFrame(
+        return pa.table(
             {
-                "cell_id": pdf["cell_id"].iloc[:1],
-                "n_vecs": [len(pdf)],
-                "n_kept": [int(kept.sum())],
-                "n_dropped": [int((~kept).sum())],
-                "kept_id_sum": [int(ids[kept].sum())],
-                "max_drop_cos": [
-                    float(np.round(np.nanmax(drop_cos), 4))
-                    if (~kept).any()
-                    else float("nan")
-                ],
+                "cell_id": pa.array([key[0].as_py()], pa.int32()),
+                "n_vecs": pa.array([len(ids)], pa.int64()),
+                "n_kept": pa.array([int(kept.sum())], pa.int64()),
+                "n_dropped": pa.array([int((~kept).sum())], pa.int64()),
+                "kept_id_sum": pa.array([int(ids[kept].sum())], pa.int64()),
+                # NULL when the cell dropped nothing
+                "max_drop_cos": pa.array(
+                    [float(np.round(np.nanmax(drop_cos), 4))
+                     if (~kept).any() else None],
+                    pa.float64(),
+                ),
             }
         )
 
-    return assigned.groupBy("cell_id").applyInPandas(
+    return assigned.groupBy("cell_id").applyInArrow(
         _greedy,
         schema=(
             "cell_id int, n_vecs long, n_kept long, n_dropped long, "

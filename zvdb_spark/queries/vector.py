@@ -28,11 +28,12 @@ exact); the sub-quadratic path for big N is the LSH/blocking family in
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zvdb_spark.functions.vector import as_double_array, cosine_sim, dist_sq, dot, l2_norm
+from zvdb_spark.operators.arrowvec import matrix
 from zvdb_spark.queries.registry import register
 from zvdb_spark.sources.tables import load
 
@@ -120,7 +121,7 @@ def q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/knn.py:exact_search_blocked). At fixture sizes the
     probe side is under the broadcast gate: its matrix is collected
     once and broadcast, the corpus crosses one hash exchange into
-    mapInPandas tasks that each compute one GEMM top-k, and the global
+    mapInArrow tasks that each compute one GEMM top-k, and the global
     merge carries only k candidates per task per query. Probe sides
     over the gate take the blocked cogroup grid instead, with no
     driver-side collect and task memory bounded at any size. This is
@@ -162,8 +163,8 @@ FROM d ORDER BY d, vec_id LIMIT {KNN_K}
     tags=("vector", "udf"),
 )
 def q_udf_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same contract as q_knn_exact, but the distance kernel is an
-    Arrow-batched numpy Pandas UDF — the vectorized twin of the
+    """Same contract as q_knn_exact, but the distance kernel is a
+    numpy ``arrow_udf`` over Arrow batches — the vectorized twin of the
     reference's scalar loop (``src/hnsw.zig:187-190``). Must
     hash-match the native HOF result exactly (rounded at 4dp).
 
@@ -175,11 +176,10 @@ def q_udf_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         _probe(spark, sf_dir).head()[0], dtype=np.float64
     )
 
-    @F.pandas_udf("double")
-    def udf_dist_sq(embs: pd.Series) -> pd.Series:
-        mat = np.stack(embs.to_numpy())  # (batch, dim) float64
-        d = mat - qvec
-        return pd.Series(np.einsum("ij,ij->i", d, d))
+    @F.arrow_udf("double")
+    def udf_dist_sq(embs: pa.Array) -> pa.Array:
+        d = matrix(embs, name="emb") - qvec
+        return pa.array(np.einsum("ij,ij->i", d, d))
 
     emb = _emb(spark, sf_dir)
     return (

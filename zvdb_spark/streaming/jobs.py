@@ -153,8 +153,9 @@ def run_streaming_session_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_join_summary(pairs: DataFrame) -> DataFrame:
     """Shared per-view-hour rollup of (view, purchase) attribution
-    pairs — used by both the streaming demo and its batch twin so the
-    pytest equality check compares the JOIN, not two aggregations."""
+    pairs — used by both the streaming demo and its batch twin (in
+    tests/test_streaming_state.py) so the equality check compares the
+    JOIN, not two aggregations."""
     return pairs.groupBy(
         F.date_format(F.date_trunc("hour", "v_ts"), "yyyy-MM-dd HH:mm:ss")
         .alias("view_hour")
@@ -214,17 +215,6 @@ def run_stream_stream_join_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_join_summary(sunk).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return out
-
-
-def batch_stream_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream-stream join demo: identical sides,
-    identical interval condition, over the batch events table."""
-    from zvdb_spark.sources.tables import load
-
-    views, buys = _attribution_sides(load(spark, sf_dir, "events"))
-    return stream_join_summary(
-        views.join(buys, F.expr(_ATTRIBUTION_COND), "inner")
-    )
 
 
 def run_foreachbatch_ingest_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -493,9 +483,8 @@ def run_pq_ingest_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    import numpy as np
-
     from zvdb_spark.functions.vector import as_double_array
+    from zvdb_spark.operators.arrowvec import matrix
     from zvdb_spark.operators.pq import pq_encode, pq_search, pq_train
     from zvdb_spark.sources.tables import load
 
@@ -551,11 +540,9 @@ def run_pq_ingest_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         # must serve identical ADC rankings regardless of how (or in
         # how many batches) they arrived — parity in its strongest
         # form, result-set equality, not a sampled recall estimate.
-        probes = np.stack(
-            [
-                np.asarray(r.emb, dtype=np.float64)
-                for r in e.orderBy("vec_id").limit(5).collect()
-            ]
+        probes = matrix(
+            e.orderBy("vec_id").limit(5).select("emb").toArrow()["emb"],
+            name="emb",
         )
         key = ["query_id", "rn"]
         s_top = (
