@@ -14,12 +14,16 @@ both end-to-end metrics, each side's median and quartiles (inclusive
 method), the parent's IQR/median, the change's median gap and the
 number of pairs the change won (higher ``items_per_s``, lower
 ``setup_s``). With ``--trace 1`` each run prints its per-layer
-metrics as one JSON object instead, and no summary follows.
+metrics as one JSON object instead, and no summary follows. A
+``pipeline_queries`` A/B ends, in either mode, with each side's median
+cold wall per query position (the runs' ``[perfbench] op_s`` lines),
+so a claim can name which queries moved.
 """
 
 from __future__ import annotations
 
 import argparse
+import ast
 import json
 import os
 import subprocess
@@ -27,6 +31,7 @@ import sys
 from statistics import quantiles
 
 METRICS = (("items_per_s", "higher", "{:.4g}"), ("setup_s", "lower", "{:.3g}"))
+OP_S = "[perfbench] op_s "  # stderr: each timed operation's wall, in order
 
 
 def seeds_arg(text: str) -> list[int]:
@@ -47,7 +52,13 @@ def run_once(checkout: str, args, seed: int) -> dict:
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     for line in reversed(p.stdout.splitlines()):
         if line.startswith("{"):
-            return json.loads(line)
+            r = json.loads(line)
+            r["op_s"] = [
+                float(v)
+                for err in p.stderr.splitlines() if err.startswith(OP_S)
+                for v in err[len(OP_S):].split()
+            ]
+            return r
     raise RuntimeError(
         f"{checkout} seed {seed}: no result line (exit {p.returncode})\n"
         + p.stderr[-2000:]
@@ -73,6 +84,40 @@ def summary(name: str, better: str, fmt: str, runs: dict) -> None:
         f" gap {f(cm - pm)} ({100 * (cm - pm) / pm:+.1f}%);"
         f" change better in {won}/{len(p)} pairs ({better} is better)"
     )
+
+
+def pipeline_query_names(checkout: str) -> list[str]:
+    """The cold pass's query order: ``PIPELINE_QUERIES`` in the
+    checkout's ``perfbench/workloads.py``."""
+    with open(os.path.join(checkout, "perfbench", "workloads.py")) as fh:
+        tree = ast.parse(fh.read())
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "PIPELINE_QUERIES" for t in node.targets
+        ):
+            return list(ast.literal_eval(node.value).values())
+    raise RuntimeError(f"no PIPELINE_QUERIES in {checkout}/perfbench/workloads.py")
+
+
+def cold_walls(names: list[str], runs: dict) -> None:
+    """Each side's median cold wall per query position. A run with a
+    failed query has fewer walls than positions and is left out."""
+    full = {
+        side: [runs[s][side]["op_s"] for s in runs
+               if len(runs[s][side]["op_s"]) == len(names)]
+        for side in "pc"
+    }
+    print(
+        f"cold wall per query, median s (parent {len(full['p'])} runs,"
+        f" change {len(full['c'])} runs):"
+    )
+    if not (full["p"] and full["c"]):
+        return
+    for i, name in enumerate(names):
+        pm = quartiles([w[i] for w in full["p"]])[1]
+        cm = quartiles([w[i] for w in full["c"]])[1]
+        print(f"{i + 1:3d} {name:28s} {pm:7.3f} -> {cm:7.3f}"
+              f" ({100 * (cm - pm) / pm:+.1f}%)")
 
 
 def main() -> None:
@@ -107,6 +152,8 @@ def main() -> None:
     if not args.trace:
         for name, better, fmt in METRICS:
             summary(name, better, fmt, runs)
+    if args.workload == "pipeline_queries":
+        cold_walls(pipeline_query_names(sides["c"]), runs)
 
 
 if __name__ == "__main__":

@@ -186,6 +186,44 @@ def _count_jobs(spark, name, run):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_second_planning_infers_no_table_schema(spark, sf_dir):
+    """Planning a query again in the same session runs no parquet
+    schema inference job (``parquet at ...``): each table load passes
+    back the schema Spark inferred the first time. One HEADLINE query
+    per registry module, the first listed, each planned twice. Export
+    is left out: its plan writes its output directory and reads those
+    new files back, and those jobs carry the same ``parquet at`` call
+    site."""
+    import bench
+
+    queries = all_queries()
+    per_module: dict[str, str] = {}
+    for name in bench.HEADLINE:
+        per_module.setdefault(queries[name].fn.__module__, name)
+    per_module.pop("zvdb_spark.queries.export")
+    for name in per_module.values():
+        queries[name].fn(spark, sf_dir)
+    st = spark.sparkContext.statusTracker()
+    inferring = {}
+    for name in per_module.values():
+        group = f"test-replan-{name}"
+        spark.sparkContext.setJobGroup(group, name, False)
+        try:
+            queries[name].fn(spark, sf_dir)
+        finally:
+            spark.sparkContext._jsc.clearJobGroup()
+        stages = [
+            st.getStageInfo(s)
+            for j in st.getJobIdsForGroup(group)
+            for s in st.getJobInfo(j).stageIds
+        ]
+        n = sum(s is not None and s.name.startswith("parquet at") for s in stages)
+        if n:
+            inferring[name] = n
+    assert len(per_module) == 17
+    assert inferring == {}, inferring
+
+
 def test_vector_searches_run_two_jobs(spark, sf_dir):
     """With n_queries supplied and the index state built, each search
     collects in exactly 2 Spark jobs: the query-block exchange and the

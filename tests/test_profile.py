@@ -1,5 +1,5 @@
 """Table-statistics query (queries/profile.py): DuckDB parity on
-every cell, the one-scan plan shape, and generic-frame behavior
+every cell, the two-aggregate plan shape, and generic-frame behavior
 (all-null and empty inputs)."""
 
 from __future__ import annotations
@@ -33,12 +33,17 @@ def test_duckdb_parity(spark, sf_dir):
         assert got[c].fillna("").tolist() == want[c].fillna("").tolist(), c
 
 
-def test_single_scan_plan(spark, sf_dir):
-    """The whole ANALYZE is one aggregate over one scan: exactly one
-    parquet scan node in the physical plan (k countDistincts compile
-    to an expand, not k scans)."""
+def test_two_aggregate_plan(spark, sf_dir):
+    """The ANALYZE is two aggregates, one scan each: the k
+    countDistincts compile to one expand (not k scans), and the plain
+    stats stay out of it. Exactly two parquet scan nodes and one
+    Expand, which carries only the distinct columns."""
     plan = q_table_stats(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 1, plan
+    assert plan.count("Scan parquet") == 2, plan
+    assert plan.count("Expand [") == 1, plan
+    expand = plan[plan.index("Expand ["):].split("\n", 1)[0]
+    assert "o_totalprice" in expand, expand
+    assert "length(" not in expand and "isnull(" not in expand, expand
 
 
 def test_all_null_and_empty(spark):

@@ -1,6 +1,7 @@
-"""The Python worker runtime of an engine session: workers run the
-installed pyspark through ``zvdb_spark._daemon``, not ``$SPARK_HOME``'s
-archives, and still show up as ``pyspark.daemon`` processes."""
+"""The runtime of an engine session: workers run the installed pyspark
+through ``zvdb_spark._daemon``, not ``$SPARK_HOME``'s archives, and
+still show up as ``pyspark.daemon`` processes; Column calls capture
+no call site, and analysis errors still name what failed."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import subprocess
 import sys
 
 import pyspark
+import pytest
 
 from zvdb_spark._daemon import worker_path
 
@@ -174,3 +176,13 @@ def test_import_is_pyspark_free():
         cwd=REPO, capture_output=True, text=True, timeout=120,
     )
     assert r.returncode == 0, r.stderr[-3000:]
+
+
+def test_call_site_capture_is_off_and_errors_keep_their_class(spark):
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException) as err:
+        spark.range(3).select("no_such_col").schema
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN"), err.value
+    assert "no_such_col" in str(err.value)

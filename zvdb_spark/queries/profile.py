@@ -1,5 +1,5 @@
 """Table-statistics collection (ANALYZE): per-column row/null/
-distinct counts, numeric ranges, and string length stats in ONE scan.
+distinct counts, numeric ranges, and string length stats per column.
 
 Every mature engine ships this as a first-class command (ANSI/Spark
 ``ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS``, DuckDB/Postgres
@@ -9,11 +9,15 @@ drop. The reference has no statistics surface at all (its only
 metadata is the vector count, ``src/hnsw.zig:52-71``); this module
 provides the engine-level equivalent over any table.
 
-Shape: one ``agg`` computes every column's stats in a single pass —
-counts and min/max are plain partial aggregates (map-side combined,
-one tiny shuffle), and the per-column exact ``countDistinct`` set
-compiles to ONE expand-based aggregate (k-fold row expansion, still
-one shuffle), not k separate jobs. The wide 1-row result is then
+Shape: two aggregates over the table, joined 1x1. The per-column
+exact ``countDistinct`` set is one aggregate, which compiles to ONE
+expand-based aggregate (k-fold row expansion, one shuffle), not k
+separate jobs. Counts and min/max are the other, plain partial
+aggregates (map-side combined, one tiny shuffle). Mixed into one
+``agg``, the distinct rewrite carries every non-distinct input
+through the Expand as well. Split, the query ran 1.40-1.77 s warm
+against 3.79-5.61 s at sf0.1 on a 4-core host (0.86-1.15 s against
+1.24-1.84 s at sf0.01), with equal output. The wide 1-row result is then
 unpivoted driver-free via ``stack()`` into the long (one row per
 column) form ANALYZE outputs. At 100 TB the drop-in change is
 ``approx_count_distinct`` for the distinct column — HLL sketches
@@ -84,15 +88,16 @@ TABLE_STATS_ORACLE = (
 
 
 def table_stats(df: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
-    """ANALYZE over ``df``: one single-pass agg (all columns' stats
-    as one wide row), unpivoted to long form with ``stack``. Works on
-    any DataFrame — the declared query below binds it to orders."""
-    aggs = []
+    """ANALYZE over ``df``: the distinct counts and the other stats as
+    two aggregates joined into one wide row, unpivoted to long form
+    with ``stack``. Works on any DataFrame — the declared query below
+    binds it to orders."""
+    dist, aggs = [], []
     for c, kind in cols:
+        dist.append(F.countDistinct(c).alias(f"{c}__dist"))
         aggs += [
             F.count(F.lit(1)).alias(f"{c}__n"),
             F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__null"),
-            F.countDistinct(c).alias(f"{c}__dist"),
         ]
         if kind == "num":
             aggs += [
@@ -112,7 +117,8 @@ def table_stats(df: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
                 F.max(c).alias(f"{c}__maxs"),
                 F.round(F.avg(F.length(c)), 4).alias(f"{c}__avglen"),
             ]
-    wide = df.agg(*aggs)
+    # separate aggregates: see the module docstring for why
+    wide = df.agg(*aggs).crossJoin(df.agg(*dist))
     # stack(): one struct row per column, typed nulls where a stat
     # doesn't apply — the unpivot happens inside the same job
     parts = []
@@ -146,10 +152,11 @@ def table_stats(df: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
 def q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style per-column statistics over orders: row count,
     null count, exact distinct count, numeric/date range (dates as
-    epoch days), and avg string length — one row per column from ONE
-    scan (single agg + stack unpivot; the k countDistincts compile
-    to one expand aggregate, not k jobs). See module docstring for
-    the 100 TB posture (swap exact distinct for HLL)."""
+    epoch days), and avg string length — one row per column (a
+    distinct and a non-distinct aggregate, joined, then a stack
+    unpivot; the k countDistincts compile to one expand aggregate,
+    not k jobs). See module docstring for the 100 TB posture (swap
+    exact distinct for HLL)."""
     return table_stats(
         load(spark, sf_dir, "orders"), list(_ORDERS_COLS)
     )

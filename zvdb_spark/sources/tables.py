@@ -10,6 +10,9 @@ month) and the same ``spark.read.parquet`` call prunes partitions.
 
 from __future__ import annotations
 
+import os
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -126,16 +129,63 @@ def _check_schema(name: str, df: DataFrame) -> None:
             )
 
 
-def read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the TIMESTAMP(NANOS) retry: Spark's
-    reader rejects nanos outright (PARQUET_TYPE_ILLEGAL) unless
-    ``spark.sql.legacy.parquet.nanosAsLong`` is set, in which case the
-    column comes back as raw long ns for the caller to normalize.
+# Session settings that parquet schema inference reads: a cached
+# schema holds only while the session's values of these are unchanged.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
 
-    Shared by the batch loader AND the streaming schema read
-    (streaming/jobs.py) — the stream previously did a plain
-    ``spark.read.parquet`` for its schema, so on a nanos fixture it
-    raised before its own bigint branch could ever run.
+# Per session: (files key, inference settings) -> the StructType Spark
+# inferred for that path. Weakly keyed, so a stopped session's entries
+# go with it.
+_INFERRED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _files_key(path: str) -> tuple | None:
+    """``(path, size, mtime_ns)`` of every file under ``path`` (one
+    entry for a single-file table), sorted; ``None`` when ``path`` is
+    not on the local file system, which leaves the read uncached."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((path, st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            st = os.stat(p)
+            out.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _inference_key(spark: SparkSession, files: tuple) -> tuple:
+    return files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+
+
+def read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
+    """The one parquet read for table loads: ``spark.read.parquet``,
+    with the inferred schema reused within a session and the
+    TIMESTAMP(NANOS) retry.
+
+    Schema reuse: Spark infers a parquet schema with one job per read
+    (0.10-0.14 s each, most of a cold query's planning). The first
+    read of a path in a session keeps the StructType Spark inferred;
+    later reads pass it back through ``spark.read.schema(s)``, which
+    runs no job. The cache key is every file's (path, size, mtime_ns)
+    under ``path`` plus the session's values of ``_INFERENCE_CONFS``,
+    so a rewritten file, an added part file or a flipped setting
+    infers again.
+
+    NANOS retry: Spark's reader rejects TIMESTAMP(NANOS) outright
+    (PARQUET_TYPE_ILLEGAL) unless ``spark.sql.legacy.parquet.nanosAsLong``
+    is set, in which case the column comes back as raw long ns for the
+    caller to normalize. Shared by the batch loader AND the streaming
+    schema read (streaming/jobs.py), so on a nanos fixture the stream's
+    own bigint branch runs instead of the read raising.
 
     SESSION-WIDE SIDE EFFECT, by design: the conf stays set after the
     fallback fires, because the returned DataFrame is lazy — its scan
@@ -146,14 +196,23 @@ def read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
     engine loader normalizes via dtype branching (never assumes), so
     inside this package that is handled, and EXPECTED_SCHEMAS still
     catches drift by name."""
+    files = _files_key(path)
+    cache = _INFERRED.setdefault(spark, {})
+    schema = None if files is None else cache.get(_inference_key(spark, files))
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     try:
-        return spark.read.parquet(path)
+        df = spark.read.parquet(path)
     except Exception as exc:  # nanos fixture: retry with nanosAsLong
         msg = str(exc)
         if "NANOS" not in msg.upper() and "ILLEGAL" not in msg.upper():
             raise
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(path)
+        df = spark.read.parquet(path)
+    if files is not None:
+        # keyed after the read: the retry above changes a setting
+        cache[_inference_key(spark, files)] = df.schema
+    return df
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
@@ -200,10 +259,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        df = _read_events(spark, f"{sf_dir}/{name}.parquet")
+        df = _read_events(spark, path)
     else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet_nanos_safe(spark, path)
     _check_schema(name, df)
     return df
 
@@ -215,8 +275,6 @@ def table_row_count(sf_dir: str, name: str) -> int:
     ``df.count()``, which at 100 TB is a full extra scan per call. On a
     cluster the same metadata read is what the parquet footer cache /
     catalog statistics serve."""
-    import os
-
     import pyarrow.parquet as pq
 
     if name not in TABLES:
