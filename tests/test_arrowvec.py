@@ -1,6 +1,6 @@
-"""The one vector-column boundary (operators/arrowvec.py): ``matrix``
-and ``list_array`` without Spark, plus a source scan that keeps every
-other module off the per-row decode idiom they replaced."""
+"""The one vector-column boundary (operators/arrowvec.py): ``matrix``,
+``list_array`` and ``codes`` without Spark, plus a source scan that
+keeps every other module off the per-row decode idiom they replaced."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from zvdb_spark.operators.arrowvec import list_array, matrix
+from zvdb_spark.operators.arrowvec import codes, list_array, matrix
 
 _ENGINE = pathlib.Path(__file__).resolve().parent.parent / "zvdb_spark"
 
@@ -86,6 +86,45 @@ def test_malformed_vectors_raise_naming_the_column(rows, what):
         matrix(pa.array(rows, pa.list_(pa.float64())), name="emb")
 
 
+def _code_column(rows):
+    return pa.array([None if r is None else bytes(r) for r in rows],
+                    pa.binary())
+
+
+def test_codes_round_trip_is_a_view():
+    c = np.arange(15, dtype=np.uint8).reshape(5, 3)
+    col = _code_column(c)
+    got = codes(col, 3)
+    assert got.dtype == np.uint8 and got.shape == (5, 3)
+    assert np.array_equal(got, c)
+    assert not got.flags.writeable  # a view of the Arrow data buffer
+    assert np.array_equal(codes(pa.chunked_array([col[:2], col[2:]]), 3), c)
+    assert codes(_code_column([]), 3).shape == (0, 3)
+
+
+def test_codes_sliced_array_honours_its_offset():
+    c = np.arange(24, dtype=np.uint8).reshape(6, 4)
+    sl = _code_column(c).slice(2, 3)
+    assert sl.offset == 2
+    assert np.array_equal(codes(sl, 4), c[2:5])
+
+
+@pytest.mark.parametrize(
+    "rows, what",
+    [
+        ([b"abcd", None, b"efgh"], "null"),
+        ([b"abcd", b"efg"], "3 to 4 bytes"),
+        ([b"abcd", b"efghi"], "4 to 5 bytes"),
+        # 3 + 5 bytes: a flat reshape would re-cut these into two
+        # 4-byte codes
+        ([b"abc", b"defgh"], "3 to 5 bytes"),
+    ],
+)
+def test_malformed_codes_raise_naming_the_column(rows, what):
+    with pytest.raises(ValueError, match=f"code: .*{what}"):
+        codes(_code_column(rows), 4, name="code")
+
+
 def _list_of_rows_emits(tree):
     """Line numbers of ``pd.DataFrame(...)`` / ``pd.Series(...)`` calls
     that hold a ``list(<name>)`` — a matrix emitted as per-row arrays."""
@@ -112,6 +151,7 @@ def test_no_module_decodes_vectors_outside_the_boundary():
         ),
         "knn._decode": re.compile(r"\bdef _decode\("),
         "pq.sample_matrix": re.compile(r"\bsample_matrix\b"),
+        "a joined code buffer": re.compile(r'b""\.join\('),
     }
     hits = []
     for path in sorted(_ENGINE.rglob("*.py")):

@@ -78,7 +78,8 @@ def _beam_reference(
         # form loses ~1e-16 to cancellation — a self-match must be
         # 0.0, not 6.7e-16) and re-sort by the exact (dist, id).
         mat_arr = np.asarray(mat)
-        d = _pair_scores(qm, mat_arr, "l2_sq")
+        d = _pair_scores(qm, mat_arr, (mat_arr * mat_arr).sum(axis=1),
+                         "l2_sq")
         kk = min(k, n)
         part = _topk_reference(d, ids, kk)
         sel = mat_arr[part]  # (nb, kk, dim) gather

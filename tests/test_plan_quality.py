@@ -173,6 +173,50 @@ def test_graph_index_vector_plans_hold_no_pandas_node(spark, sf_dir):
     idx.retire()
 
 
+def test_compressed_searches_run_one_arrow_kernel(spark, sf_dir):
+    """PQ, IVF-PQ and SQ8 search score their codes in one Arrow map
+    (knn.scan_topk's kernel, or IVF's per-cell routing over the same
+    decode) feeding one per-query window: each plan holds exactly one
+    MapInArrow, one Window and no ``InPandas`` node (the codes are
+    checkpointed, so no encode step shows in the plan)."""
+    from zvdb_spark.functions.vector import as_double_array
+    from zvdb_spark.operators.arrowvec import matrix
+    from zvdb_spark.operators.pq import (
+        ivfpq_build,
+        pq_encode,
+        pq_search,
+        pq_search_ivf,
+        pq_train,
+    )
+    from zvdb_spark.operators.sq import sq8_encode, sq8_search, sq8_train
+    from zvdb_spark.plans.audit import explain_str
+    from zvdb_spark.sources.tables import load
+
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double_array("embedding").alias("emb")
+    )
+    x = matrix(emb.select("emb").limit(8).toArrow()["emb"])
+    books = pq_train(emb, m_sub=16, k_codes=16, n_iter=2, sample_n=500)
+    ibooks, icodes = ivfpq_build(emb, x[:4], m_sub=16, k_codes=16,
+                                 n_iter=2, sample_n=500)
+    lo, hi = sq8_train(emb)
+    pcodes, icodes, scodes = (
+        c.localCheckpoint(eager=True)
+        for c in (pq_encode(emb, books), icodes, sq8_encode(emb, lo, hi))
+    )
+    plans = {
+        "pq_search": pq_search(pcodes, books, x, k=3),
+        "pq_search_ivf": pq_search_ivf(icodes, ibooks, x[:4], x, k=3,
+                                       nprobe=2, residual=True),
+        "sq8_search": sq8_search(scodes, lo, hi, x, k=3),
+    }
+    for name, df in plans.items():
+        simple = explain_str(df, "simple")
+        assert simple.count("MapInArrow") == 1, (name, simple)
+        assert simple.count("Window [") == 1, (name, simple)
+        assert "InPandas" not in simple, (name, simple)
+
+
 def _count_jobs(spark, name, run):
     """Run ``run()`` under its own job group; return (its result, the
     number of Spark jobs it ran)."""

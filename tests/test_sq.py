@@ -121,6 +121,51 @@ def test_rerank_recall_exact(spark, emb, lohi, ground_truth):
         assert want == have, f"query {qi}: {want ^ have}"
 
 
+def test_search_equals_f32_reference_topk(emb, lohi, ground_truth):
+    """sq8_search keeps each query's k best (f32 distance, id) pairs
+    over the reconstruction: its (query_id, vec_id, rn) rows equal a
+    numpy f32 top-k. Fifty code rows are duplicated under larger ids,
+    so exact distance ties exist and must resolve by id; all rows sit
+    in one partition, so twins meet in one GEMM (across GEMMs of other
+    shapes, equal rows can score an ULP apart)."""
+    from pyspark.sql import functions as F
+
+    from zvdb_spark.operators.arrowvec import codes as code_matrix
+
+    _, mat = ground_truth
+    lo, hi = lohi
+    codes = sq8_encode(emb, lo, hi)
+    codes = codes.union(
+        codes.filter("vec_id < 50").withColumn(
+            "vec_id", F.col("vec_id") + 100_000
+        )
+    ).coalesce(1)
+    tbl = codes.toArrow()
+    ids = tbl["vec_id"].to_numpy()
+    vhat = lo.astype(np.float32) + code_matrix(
+        tbl["code"], len(lo)
+    ).astype(np.float32) * _sq8_scale(lo, hi).astype(np.float32)
+    q = mat[:20].astype(np.float32)
+    d = (
+        (q * q).sum(1)[:, None]
+        + (vhat * vhat).sum(1)[None, :]
+        - 2.0 * (q @ vhat.T)
+    )
+    top = np.lexsort((np.broadcast_to(ids, d.shape), d))[:, :K]
+    want = [
+        (qi, int(ids[c]), r + 1)
+        for qi in range(len(q))
+        for r, c in enumerate(top[qi])
+    ]
+    got = sq8_search(codes, lo, hi, mat[:20], k=K).orderBy(
+        "query_id", "rn"
+    ).collect()
+    assert [(r.query_id, r.vec_id, r.rn) for r in got] == want
+    tied = [w for w in want if w[1] >= 100_000]
+    assert tied  # the duplicates reach the top-k, after their twins
+    assert all((w[0], w[1] - 100_000, w[2] - 1) in want for w in tied)
+
+
 def test_search_determinism_across_partitionings(emb, lohi, ground_truth):
     """Same codes, different partition layout => same top-k members
     and ranks (the window merge is keyed by (dist, id), never arrival

@@ -13,7 +13,8 @@ and ``DataFrame.toArrow``), and no kernel walks per-row objects.
 
 ``matrix`` is also where malformed vectors are refused: a null row, a
 row of another length, or a NaN/inf value raises ``ValueError`` naming
-the column, before any kernel ranks by it.
+the column, before any kernel ranks by it. ``codes`` does the same for
+a fixed-width ``binary`` code column (SQ8's one byte per dimension).
 """
 
 from __future__ import annotations
@@ -55,3 +56,32 @@ def list_array(mat: np.ndarray) -> pa.ListArray:
     n, dim = mat.shape
     offsets = np.arange(n + 1, dtype=np.int32) * dim
     return pa.ListArray.from_arrays(pa.array(offsets), pa.array(mat.reshape(-1)))
+
+
+def codes(col, width: int, name: str = "code") -> np.ndarray:
+    """Read-only ``(n, width)`` uint8 view of the data buffer of a
+    binary column (``pa.BinaryArray``, ``pa.LargeBinaryArray`` or a
+    ``pa.ChunkedArray`` of either) whose rows all hold ``width``
+    bytes, honouring slice offsets. A null row, or a row of another
+    width, raises ``ValueError`` naming the column: a flat reshape
+    would re-cut a 3-byte and a 5-byte row into two 4-byte codes."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    if col.null_count:
+        raise ValueError(f"{name}: {col.null_count} null code row(s)")
+    if not n:
+        return np.empty((0, width), dtype=np.uint8)
+    _, offsets, data = col.buffers()
+    kind = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offsets = np.frombuffer(offsets, dtype=kind)[col.offset : col.offset + n + 1]
+    lengths = np.diff(offsets)
+    if (lengths != width).any():
+        raise ValueError(
+            f"{name}: code rows of {int(lengths.min())} to "
+            f"{int(lengths.max())} bytes; every row needs {width}"
+        )
+    start = int(offsets[0])
+    view = np.frombuffer(data, dtype=np.uint8)[start : start + n * width]
+    view.flags.writeable = False
+    return view.reshape(n, width)

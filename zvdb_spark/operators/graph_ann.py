@@ -100,11 +100,14 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from zvdb_spark.operators.arrowvec import list_array, matrix
-from zvdb_spark.operators.knn import _pair_scores, _topk_by_dist_id
+from zvdb_spark.operators.knn import (
+    _pair_scores,
+    _rank_top_k,
+    _topk_by_dist_id,
+)
 from zvdb_spark.operators.segments import (
     exact_search_segments,
     no_aqe_coalesce as _no_aqe_coalesce,
@@ -368,7 +371,8 @@ def _beam_search_seeded(
         # form loses ~1e-16 to cancellation — a self-match must be
         # 0.0, not 6.7e-16) and re-sort by the exact (dist, id).
         mat_arr = np.asarray(mat)
-        d = _pair_scores(qm, mat_arr, "l2_sq")
+        d = _pair_scores(qm, mat_arr, (mat_arr * mat_arr).sum(axis=1),
+                         "l2_sq")
         kk = min(k, n)
         part = _topk_by_dist_id(d, ids, kk)
         sel = mat_arr[part]  # (nb, kk, dim) gather
@@ -838,7 +842,8 @@ class GraphIndex:
                     cor_pid = np.concatenate(cor_p)
                     q = np.ascontiguousarray(np.asarray(mat[probe]))
                     qi = np.asarray(ids)[probe]
-                    d = _pair_scores(q, cor_mat, "l2_sq")
+                    xn = (cor_mat * cor_mat).sum(axis=1)
+                    d = _pair_scores(q, cor_mat, xn, "l2_sq")
                     kk = min(m + 1, len(cor_ids))
                     part = _topk_by_dist_id(d, cor_ids, kk)
                     qq = np.repeat(qi, kk)
@@ -1526,12 +1531,7 @@ class GraphIndex:
                 break
             ef_i *= 4
         out = reduce(DataFrame.unionByName, parts)
-        w = W.partitionBy("query_id").orderBy("dist_sq", "vec_id")
-        return (
-            out.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
+        return _rank_top_k(out, k, "dist_sq", "vec_id").drop("rn")
 
     def exact_search(
         self,

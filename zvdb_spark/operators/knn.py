@@ -10,6 +10,11 @@ pairs under a threshold) are the scaled operators. Both run one pair
 producer, ``_scored_pairs``: a shard-local numpy GEMM per task whose
 kept pairs are then (top-k only) merged k rows per query — the
 partition-then-merge shape of distributed top-k.
+
+``scan_topk`` runs the same per-task kernel over any row format that
+decodes to a matrix: PQ (operators/pq.py) and SQ8 (operators/sq.py)
+search supply only a ``decode`` callback. ``_rank_top_k`` is the one
+per-query merge window behind every top-k operator.
 """
 
 from __future__ import annotations
@@ -33,13 +38,13 @@ def _score(metric: str, a: str, b: str) -> tuple[Column, bool]:
     raise ValueError(f"unknown metric {metric!r}; use 'l2_sq' or 'cosine'")
 
 
-def _rank_top_k(pairs: DataFrame, query_col: str, k: int,
-                asc: bool) -> DataFrame:
-    """Each query's k best pairs, numbered ``rn`` 1..k by score, ties
-    broken by neighbor id for determinism (src/test_hnsw.zig:275-316
-    consistency test)."""
-    score = F.col("score").asc() if asc else F.col("score").desc()
-    w = W.partitionBy(query_col).orderBy(score, F.col("neighbor_id").asc())
+def _rank_top_k(pairs: DataFrame, k: int, score_col: str = "score",
+                id_col: str = "neighbor_id", asc: bool = True) -> DataFrame:
+    """Each ``query_id``'s k best pairs, numbered ``rn`` 1..k by
+    ``score_col``, ties broken by ``id_col`` for determinism
+    (src/test_hnsw.zig:275-316 consistency test)."""
+    score = F.col(score_col).asc() if asc else F.col(score_col).desc()
+    w = W.partitionBy("query_id").orderBy(score, F.col(id_col).asc())
     return pairs.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= k
     )
@@ -65,11 +70,13 @@ def knn_join(
     """
     score, asc = _score(metric, corpus_vec, query_vec)
     pairs = queries.crossJoin(corpus).select(
-        F.col(query_id),
+        F.col(query_id).alias("query_id"),
         F.col(corpus_id).alias("neighbor_id"),
         score.alias("score"),
     )
-    return _rank_top_k(pairs, query_id, k, asc)
+    return _rank_top_k(pairs, k, asc=asc).withColumnRenamed(
+        "query_id", query_id
+    )
 
 
 def _topk_by_dist_id(d, ids, kk: int):
@@ -109,22 +116,37 @@ def _topk_by_dist_id(d, ids, kk: int):
     return c[(np.cumsum(cnt) - cnt)[:, None] + np.arange(kk)]
 
 
-def _pair_scores(qarr, mat, metric: str):
-    """Vectorized query-block x corpus-shard scores (one GEMM).
+def _topk_emit(k: int, asc: bool = True):
+    """``emit`` of a per-task top-k: each query's min(k, width) best
+    (score, id) pairs of one scored chunk, in no particular order (the
+    merge window ranks them)."""
+    def emit(qi, ids, d):
+        if k >= len(ids):  # every pair is kept: nothing to select
+            return np.repeat(qi, len(ids)), np.tile(ids, len(qi)), d.ravel()
+        part = _topk_by_dist_id(d if asc else -d, ids, k)
+        return (np.repeat(qi, k), ids[part.ravel()],
+                np.take_along_axis(d, part, axis=1).ravel())
+
+    return emit
+
+
+def _pair_scores(qarr, mat, xn, metric: str):
+    """Vectorized query-block x corpus-shard scores (one GEMM); ``xn``
+    holds the squared row norms of ``mat``.
 
     l2_sq: squared L2 (ascending-better); cosine: cosine similarity
     (descending-better), NaN where either norm is zero (matches the
     NULL semantics of functions.vector.cosine_sim).
     """
-    g = qarr @ mat.T
     if metric == "l2_sq":
         qn = (qarr * qarr).sum(axis=1)
-        xn = (mat * mat).sum(axis=1)
-        return qn[:, None] + xn[None, :] - 2.0 * g
+        # the GEMM stays an unnamed temporary, so numpy scales and
+        # subtracts it in place: one (queries x rows) buffer fewer
+        return qn[:, None] + xn[None, :] - 2.0 * (qarr @ mat.T)
     if metric == "cosine":
+        g = qarr @ mat.T
         qn = np.sqrt((qarr * qarr).sum(axis=1))
-        xn = np.sqrt((mat * mat).sum(axis=1))
-        denom = qn[:, None] * xn[None, :]
+        denom = qn[:, None] * np.sqrt(xn)[None, :]
         with np.errstate(divide="ignore", invalid="ignore"):
             return np.where(denom > 0, g / denom, np.nan)
     raise ValueError(f"unknown metric {metric!r}")
@@ -245,23 +267,78 @@ def _pair_batch(q, n, s):
     })
 
 
-def _score_chunks(qids, qarr, corpus, metric: str, emit):
-    """The per-task kernel: decode one corpus batch (``vec_id``,
-    ``emb``), score it against the probe matrix one query chunk at a
-    time, and yield the (query_id, neighbor_id, score) batch ``emit``
-    keeps from each chunk. Chunking bounds the distance matrix to
-    _CELL_CHUNK_ELEMS however big the batch is; rows are independent,
-    so it changes nothing but peak memory."""
-    if not len(corpus):
+def _decode_vectors(batch):
+    """knn's ``decode``: the (``vec_id``, ``emb``) corpus columns as
+    ids, f64 matrix and squared row norms."""
+    mat = matrix(batch["emb"], name="emb")
+    return batch["vec_id"].to_numpy(), mat, (mat * mat).sum(axis=1)
+
+
+def _score_chunks(qids, qarr, batch, decode, metric: str, emit):
+    """The per-task scan-and-score kernel: ``decode(batch)`` gives one
+    batch's (ids, matrix, squared row norms), each query chunk is
+    scored against it with one GEMM, and the (query_id, neighbor_id,
+    score) batch ``emit`` keeps from each chunk is yielded. The
+    matrix's dtype is the score dtype (``qarr`` must match it).
+    Chunking bounds the distance matrix to _CELL_CHUNK_ELEMS however
+    big the batch is; rows are independent, so it changes nothing but
+    peak memory."""
+    if not len(batch):
         return
-    ids = corpus["vec_id"].to_numpy()
-    mat = matrix(corpus["emb"], name="emb")
+    ids, mat, xn = decode(batch)
     qchunk = max(256, _CELL_CHUNK_ELEMS // len(ids))
     for lo in range(0, len(qarr), qchunk):
         yield _pair_batch(*emit(
             qids[lo : lo + qchunk], ids,
-            _pair_scores(qarr[lo : lo + qchunk], mat, metric),
+            _pair_scores(qarr[lo : lo + qchunk], mat, xn, metric),
         ))
+
+
+_F32_PAIR_SCHEMA = "query_id long, neighbor_id long, score float"
+
+
+def _merge_f32(cand: DataFrame, k: int) -> DataFrame:
+    """The global merge of f32 candidates (``_F32_PAIR_SCHEMA``): the
+    candidates cross the merge Exchange as float, and the score widens
+    to double after the ``rn <= k`` filter (an exact cast — same
+    values, half the shuffled score bytes)."""
+    return _rank_top_k(cand, k).withColumn(
+        "score", F.col("score").cast("double")
+    )
+
+
+def scan_topk(codes: DataFrame, decode, queries: np.ndarray, k: int,
+              per_part_cap: int | None = None) -> DataFrame:
+    """Each probe's k nearest rows of ``codes`` by squared L2:
+    (query_id, neighbor_id, score, rn), rn in 1..k, ``query_id`` the
+    probe's row in ``queries``.
+
+    One mapInArrow over the code partitions runs ``_score_chunks``
+    with ``decode`` (the generator's row format: a batch to ids, a
+    matrix in the score dtype of ``queries``, and its squared row
+    norms); each task keeps its top-k by (score, id) in float32, then
+    one window merges them (``_merge_f32``). The probe batch is the
+    small side by contract and rides the task closure.
+
+    ``per_part_cap`` bounds each partition's emission below k. Unset,
+    the global top-k is exact (every partition surrenders its full
+    top-k); a rerank sets it, since a candidate budget R needs only
+    ~R/P rows from each of P hash-spread partitions."""
+    kk = int(k)
+    qids = np.arange(len(queries), dtype=np.int64)
+    top = _topk_emit(kk if per_part_cap is None
+                     else min(kk, int(per_part_cap)))
+
+    def emit(qi, ids, d):
+        # f32 d ranks identically to its f64 widening
+        return top(qi, ids, d.astype(np.float32, copy=False))
+
+    def _task(batches):
+        for batch in batches:
+            yield from _score_chunks(qids, queries, batch, decode,
+                                     "l2_sq", emit)
+
+    return _merge_f32(codes.mapInArrow(_task, _F32_PAIR_SCHEMA), kk)
 
 
 def _collect_probe_matrix(probes: DataFrame, query_id: str,
@@ -403,7 +480,8 @@ def _scored_pairs(corpus: DataFrame, probes: DataFrame, metric: str, emit,
             def _task(batches):
                 qi, qa = bq.value
                 for batch in batches:
-                    yield from _score_chunks(qi, qa, batch, metric, emit)
+                    yield from _score_chunks(qi, qa, batch, _decode_vectors,
+                                             metric, emit)
 
             return _bcast_probe_map(corpus, _task, n_shards, corpus_id,
                                     corpus_vec)
@@ -416,7 +494,8 @@ def _scored_pairs(corpus: DataFrame, probes: DataFrame, metric: str, emit,
         qa = matrix(probe["qemb"], name=query_vec)
         empty = np.empty(0, np.int64)
         return pa.Table.from_batches(
-            list(_score_chunks(qi, qa, corpus, metric, emit))
+            list(_score_chunks(qi, qa, corpus, _decode_vectors, metric,
+                               emit))
             or [_pair_batch(empty, empty, np.empty(0))]
         )
 
@@ -458,18 +537,11 @@ def exact_search_blocked(
     oracled q_knn_batch hash and test_blocked_paths_match_reference.
     """
     asc = metric == "l2_sq"
-
-    def _emit_topk(qi, ids, d):
-        kk = min(k, len(ids))
-        part = _topk_by_dist_id(d if asc else -d, ids, kk)
-        return (np.repeat(qi, kk), ids[part.ravel()],
-                np.take_along_axis(d, part, axis=1).ravel())
-
     pairs = _scored_pairs(
-        corpus, probes, metric, _emit_topk, n_shards, n_blocks,
+        corpus, probes, metric, _topk_emit(k, asc), n_shards, n_blocks,
         corpus_id, corpus_vec, query_id, query_vec, n_corpus, n_probes,
     )
-    return _rank_top_k(pairs, "query_id", k, asc)
+    return _rank_top_k(pairs, k, asc=asc)
 
 
 def threshold_join_blocked(

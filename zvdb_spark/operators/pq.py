@@ -18,7 +18,8 @@ Distributed shape (all stages cluster-side):
   centroids in operators/kmeans.py.
 - **encode**: one Arrow-batched arrow_udf, argmin GEMM per subspace;
   no shuffle, output is ``array<smallint>`` codes.
-- **search (ADC)**: mapInArrow over code partitions. ADC distance to
+- **search (ADC)**: knn.scan_topk over code partitions, with the
+  codebook gather as its decode. ADC distance to
   a coded row IS the exact distance to its reconstruction (subspaces
   concatenate orthogonally: sum_m ||q_m - b_{c_m}||^2 =
   ||q - recon||^2), so each task decodes its batch's codes once
@@ -33,8 +34,8 @@ Distributed shape (all stages cluster-side):
   LUT — a materially larger dsub, or a native LUT kernel, can invert
   it, so re-run the interleaved A/B before inheriting the GEMM form
   into a different dim/m split. Per-partition top-k, then a
-  global window merge carrying only P x k rows per query — identical
-  merge contract to operators/knn.exact_search. Emitted distances are
+  global window merge carrying only P x k rows per query — the one
+  merge of every top-k operator (knn._rank_top_k). Emitted distances are
   float32 casts of the f64-exact ADC quantity (the LUT form emitted
   f32 partial sums of the same quantity — agreement to ~3e-7
   relative; candidate selection can differ only on sub-1e-6 near-ties
@@ -54,10 +55,17 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from zvdb_spark.operators.arrowvec import list_array, matrix
-from zvdb_spark.operators.knn import _topk_by_dist_id
+from zvdb_spark.operators.knn import (
+    _F32_PAIR_SCHEMA,
+    _merge_f32,
+    _pair_batch,
+    _pair_scores,
+    _rank_top_k,
+    _topk_emit,
+    scan_topk,
+)
 
 # Hash range for the deterministic pseudo-shuffle of ids used by the
 # training sample (NOT rand(): same sample on any partitioning; NOT
@@ -170,6 +178,20 @@ def _fit_codebooks(
     return books
 
 
+def _pq_codes(mat: np.ndarray, books: np.ndarray,
+              cnorm: np.ndarray) -> np.ndarray:
+    """(n, m) int16 codes: each subspace's nearest centroid by one
+    argmin GEMM (``cnorm`` = (books * books).sum(2); the row's own
+    ||x||² is constant per row and left out)."""
+    m_sub, _, dsub = books.shape
+    out = np.empty((mat.shape[0], m_sub), dtype=np.int16)
+    for m in range(m_sub):
+        x = mat[:, m * dsub : (m + 1) * dsub]
+        d = cnorm[m][None, :] - 2.0 * (x @ books[m].T)
+        out[:, m] = d.argmin(1).astype(np.int16)
+    return out
+
+
 def pq_encode(
     emb: DataFrame,
     codebooks: np.ndarray,
@@ -180,20 +202,43 @@ def pq_encode(
     One vectorized argmin GEMM per subspace per Arrow batch; no
     shuffle, codes stay co-partitioned with their source rows."""
     books = np.ascontiguousarray(codebooks)
-    m_sub, _, dsub = books.shape
     cnorm = (books * books).sum(2)  # (m, k)
 
     @F.arrow_udf("array<smallint>")
     def _code(vs: pa.Array) -> pa.Array:
-        mat = matrix(vs, name=vec_col)
-        out = np.empty((mat.shape[0], m_sub), dtype=np.int16)
-        for m in range(m_sub):
-            x = mat[:, m * dsub : (m + 1) * dsub]
-            d = cnorm[m][None, :] - 2.0 * (x @ books[m].T)  # +||x||² const
-            out[:, m] = d.argmin(1).astype(np.int16)
-        return list_array(out)
+        return list_array(_pq_codes(matrix(vs, name=vec_col), books, cnorm))
 
     return emb.select(F.col(id_col), _code(F.col(vec_col)).alias("code"))
+
+
+def _pq_decode(codebooks: np.ndarray, id_col: str):
+    """``decode`` of a PQ code batch: ids, the codes gathered into
+    their f64 reconstruction (m gathers, a batch-bounded (rows, dim)
+    matrix) and its ``einsum`` squared norms. ADC dist == exact dist
+    to the reconstruction (module docstring), so scoring is one GEMM
+    per query chunk instead of m LUT gathers per pair."""
+    books = np.ascontiguousarray(codebooks)
+    m_sub, _, dsub = books.shape
+
+    def decode(batch):
+        c = matrix(batch["code"], np.int64, name="code")  # (n, m)
+        recon = np.empty((len(c), m_sub * dsub), dtype=np.float64)
+        for m in range(m_sub):
+            recon[:, m * dsub : (m + 1) * dsub] = books[m][c[:, m]]
+        return (batch[id_col].to_numpy().astype(np.int64), recon,
+                np.einsum("ij,ij->i", recon, recon))
+
+    return decode
+
+
+def _adc_columns(ranked: DataFrame, id_col: str) -> DataFrame:
+    """(query_id, ``id_col``, adc_dist_sq, rn) of a merged top-k."""
+    return ranked.select(
+        "query_id",
+        F.col("neighbor_id").alias(id_col),
+        F.col("score").alias("adc_dist_sq"),
+        "rn",
+    )
 
 
 def pq_search(
@@ -202,17 +247,16 @@ def pq_search(
     queries: np.ndarray,
     k: int = 10,
     id_col: str = "vec_id",
-    q_block: int = 512,
     per_part_cap: int | None = None,
 ) -> DataFrame:
     """ADC top-k: (query_id, vec_id, adc_dist_sq, rn), rn in 1..k.
 
     ``queries`` is an (nq, dim) ndarray riding the task closure — the
     probe batch is the small side by contract (same posture as the
-    exact GEMM path). Per partition: decode the batch's codes once
-    (ADC dist == exact dist to the reconstruction, module docstring),
-    score each query block with one GEMM, keep the partition top-k by
-    (dist, id); the global merge moves only P x k rows per query.
+    exact GEMM path). ``knn.scan_topk`` runs the search with the
+    codebook gather as its decode: each partition decodes its codes
+    once, scores every query chunk with one GEMM, keeps its top-k by
+    (dist, id), and the global merge moves only P x k rows per query.
 
     ``per_part_cap`` bounds the PER-PARTITION emission below k. With
     it unset the global top-k is exact (each partition must surrender
@@ -222,69 +266,14 @@ def pq_search(
     top-R in each partition, so a 2R/P-ish cap keeps the merge at
     O(nq x 2R) rows instead of O(nq x P x R) while the downstream
     exact re-rank absorbs the (rare, tail-only) candidate misses."""
-    books = np.ascontiguousarray(codebooks)
-    m_sub, kc, dsub = books.shape
+    m_sub, _, dsub = np.shape(codebooks)
     q = np.ascontiguousarray(queries, dtype=np.float64)
-    nq, dim = q.shape
+    _, dim = q.shape
     if dim != m_sub * dsub:
         raise ValueError(f"query dim {dim} != codebook dim {m_sub * dsub}")
-    kk = int(k)
-    emit_k = kk if per_part_cap is None else min(kk, int(per_part_cap))
-
-    def _part(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = batch[id_col].to_numpy().astype(np.int64)
-            c = matrix(batch["code"], np.int64, name="code")  # (n, m)
-            n = len(ids)
-            # decode once per batch (batch-bounded memory): ADC dist
-            # == exact dist to the reconstruction, so scoring is one
-            # GEMM per query block instead of m LUT gathers per pair
-            # (module docstring: measured 4x, same quantity)
-            recon = np.empty((n, m_sub * dsub), dtype=np.float64)
-            for m in range(m_sub):
-                recon[:, m * dsub : (m + 1) * dsub] = books[m][c[:, m]]
-            rn2 = np.einsum("ij,ij->i", recon, recon)
-            for q0 in range(0, nq, q_block):
-                qb = q[q0 : q0 + q_block]
-                d = (
-                    (qb * qb).sum(1)[:, None]
-                    + rn2[None, :]
-                    - 2.0 * (qb @ recon.T)
-                ).astype(np.float32)
-                # f32 d ranks identically to its f64 widening — no
-                # astype(float64) copy for the top-k
-                top = _topk_by_dist_id(d, ids, emit_k)
-                rows = np.take_along_axis(d, top, axis=1)
-                out_q = np.repeat(np.arange(q0, q0 + len(qb)), top.shape[1])
-                yield pa.record_batch(
-                    {
-                        "query_id": out_q,
-                        id_col: ids[top].ravel(),
-                        "adc_dist_sq": rows.ravel(),
-                    }
-                )
-
-    # candidates cross the merge Exchange as float32 (the ADC sums
-    # accumulate in f32, so the values are f32-representable anyway);
-    # the declared double column is restored by an exact cast after
-    # the top-k filter — same values, half the shuffled dist bytes
-    cand = codes.mapInArrow(
-        _part, schema=f"query_id long, {id_col} long, adc_dist_sq float"
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_dist_sq").asc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= kk)
-        .select(
-            "query_id",
-            id_col,
-            F.col("adc_dist_sq").cast("double").alias("adc_dist_sq"),
-            "rn",
-        )
+    return _adc_columns(
+        scan_topk(codes, _pq_decode(codebooks, id_col), q, k, per_part_cap),
+        id_col,
     )
 
 
@@ -313,18 +302,28 @@ def pq_search_rerank(
     distances, approximate candidate set (recall gap only where a true
     neighbor's ADC rank fell below R — pytest pins the measured floor).
     """
+    return _adc_rerank(codes, corpus, codebooks, queries, queries, k,
+                       rerank_r, id_col, vec_col)
+
+
+def _adc_rerank(codes: DataFrame, corpus: DataFrame, codebooks: np.ndarray,
+                adc_queries: np.ndarray, exact_queries: np.ndarray, k: int,
+                rerank_r: int, id_col: str, vec_col: str) -> DataFrame:
+    """The PQ/OPQ rerank body: ADC top-R of ``adc_queries`` over the
+    codes, exact re-rank of the survivors against ``exact_queries``
+    (the same probes, in the space of the raw vectors)."""
     # R is a candidate budget, not a ranking contract: cap what each
     # partition surrenders at ~2R/P (floor 32) so the merge handles
     # O(nq x 2R) rows, not O(nq x P x R) — see pq_search docstring.
     n_parts = max(1, codes.rdd.getNumPartitions())
     cap = max(32, -(-2 * int(rerank_r) // n_parts))
     cand = pq_search(
-        codes, codebooks, queries, k=int(rerank_r), id_col=id_col,
+        codes, codebooks, adc_queries, k=int(rerank_r), id_col=id_col,
         per_part_cap=cap,
     ).select("query_id", id_col)
     return exact_rerank(
-        cand, corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-        cand_rows=len(queries) * int(rerank_r),
+        cand, corpus, exact_queries, k=k, id_col=id_col, vec_col=vec_col,
+        cand_rows=len(exact_queries) * int(rerank_r),
     )
 
 
@@ -390,13 +389,7 @@ def exact_rerank(
             _dist_sq(vec_col, "qemb").alias("dist_sq"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("dist_sq").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-    )
+    return _rank_top_k(scored, int(k), "dist_sq", id_col)
 
 
 def _spatial_cell_groups(cents: np.ndarray, n_groups: int) -> np.ndarray:
@@ -455,9 +448,10 @@ def pq_search_ivf(
     rows ~= nprobe/C of the corpus and each of them costs m table
     lookups on a 16 B code — the two axes multiply. Executed as one
     mapInArrow over the codes with cells grouped per task
-    (repartition on cell_id): per cell, LUTs are built only for the
-    queries probing that cell, per-(query, partition) top-k, global
-    window merge of P x k rows per query.
+    (repartition on cell_id): each batch is decoded as in pq_search,
+    per cell only the queries probing that cell are scored,
+    per-(query, partition) top-k, then the same global window merge
+    of P x k rows per query.
 
     At 100 TB the per-call repartition disappears: codes are WRITTEN
     once partitioned by cell_id (the IVF layout), probes become
@@ -487,31 +481,24 @@ def pq_search_ivf(
     composition-invariant.
 
     ``residual=True`` declares the codes RESIDUAL-encoded
-    (ivfpq_build): per probed cell the LUT is built for the query
-    residual q - centroid(cell), so ADC approximates
+    (ivfpq_build): per probed cell the query residual
+    q - centroid(cell) is scored, so ADC approximates
     ||(q-c) - (x-c)||^2 = the true distance — within-cell ranking
     stays informative where raw-vector codes degenerate (see
     residual_encode). Returns (query_id, vec_id, adc_dist_sq, rn);
     compose with the exact re-rank of pq_search_rerank by passing
     rerank_r as k here and window-merging downstream.
     """
-    books = np.ascontiguousarray(codebooks)
-    m_sub, kc, dsub = books.shape
+    m_sub, _, dsub = np.shape(codebooks)
     cents = np.ascontiguousarray(centroids, dtype=np.float64)
     q = np.ascontiguousarray(queries, dtype=np.float64)
-    nq, dim = q.shape
+    _, dim = q.shape
     if dim != m_sub * dsub:
         raise ValueError(f"query dim {dim} != codebook dim {m_sub * dsub}")
     kk = int(k)
-    # probe table: cell -> indices of queries probing it (driver-side
-    # argpartition over nq x C distances — centroid metadata only)
-    dq = (
-        (q * q).sum(1)[:, None]
-        + (cents * cents).sum(1)[None, :]
-        - 2.0 * (q @ cents.T)
-    )
-    npb = min(int(nprobe), len(cents))
-    probed = np.argpartition(dq, npb - 1, axis=1)[:, :npb]  # (nq, nprobe)
+    decode = _pq_decode(codebooks, id_col)
+    # probe table: cell -> indices of queries probing it
+    probed = _probes(cents, q, nprobe)
     probe_of_cell: dict[int, np.ndarray] = {}
     for c in np.unique(probed):
         probe_of_cell[int(c)] = np.nonzero((probed == c).any(axis=1))[0]
@@ -522,33 +509,26 @@ def pq_search_ivf(
     # cell materializes its full top-k per query and the task-local
     # concat grows O(nprobe x k) per query before the cap trims it
     # (measured: 6x task-frame blowup at 1M rows, 1024 cells)
-    emit_cell = min(kk, cap)
+    cell_top = _topk_emit(min(kk, cap))
 
     def _part(batches):
-        # Pure-numpy task kernel: per-cell scores accumulate as flat
-        # arrays, ONE lexsort ranks (query, dist, id), and the
-        # task-local cap keeps rank < cap per query. Scoring decodes
-        # each batch's codes once and runs one GEMM per probed cell
-        # (ADC dist == exact dist to the reconstruction — module
-        # docstring; measured ~2x over the per-cell LUT + m-gather
-        # form at the 1M/cap400 task shape, same quantity). Distances
-        # stay float32 through the shuffle; f32 casts of the
-        # f64-exact ADC value.
-        acc_q: list[np.ndarray] = []
-        acc_i: list[np.ndarray] = []
-        acc_d: list[np.ndarray] = []
+        # Per-cell routing over the flat path's decode: only the
+        # queries probing a cell score its rows (one GEMM per probed
+        # cell, residual probes shifted by the cell's centroid;
+        # measured ~2x over the per-cell LUT + m-gather form at the
+        # 1M/cap400 task shape, same quantity), the
+        # per-cell scores accumulate as flat arrays, ONE lexsort ranks
+        # (query, dist, id), and the task-local cap keeps rank < cap
+        # per query. Distances stay float32 through the shuffle; f32
+        # casts of the f64-exact ADC value.
+        acc = []  # (query, id, dist) arrays of each probed cell
         for batch in batches:
             if not batch.num_rows:
                 continue
-            ids_all = batch[id_col].to_numpy().astype(np.int64)
-            cells_all = batch["cell_id"].to_numpy()
-            c_all = matrix(batch["code"], np.int64, name="code")
             # decode once per Arrow batch — recon stays batch-bounded
             # ((rows, dim) f64) however large the task partition is
-            recon = np.empty((len(ids_all), m_sub * dsub), dtype=np.float64)
-            for m in range(m_sub):
-                recon[:, m * dsub : (m + 1) * dsub] = books[m][c_all[:, m]]
-            rn2 = np.einsum("ij,ij->i", recon, recon)
+            ids_all, recon, rn2 = decode(batch)
+            cells_all = batch["cell_id"].to_numpy()
             # group the batch's rows by cell via one stable sort
             # (replaces an O(n_rows) boolean scan per cell)
             order_c = np.argsort(cells_all, kind="stable")
@@ -568,32 +548,16 @@ def pq_search_ivf(
                     + rn2[rows][None, :]
                     - 2.0 * (qb @ rsel.T)
                 ).astype(np.float32)
-                if emit_cell < d.shape[1]:
-                    # f32 d ranks identically to its f64 widening
-                    top = _topk_by_dist_id(d, ids, emit_cell)
-                    acc_q.append(np.repeat(qidx, top.shape[1]))
-                    acc_i.append(ids[top].ravel())
-                    acc_d.append(np.take_along_axis(d, top, axis=1).ravel())
-                else:  # cell smaller than the cap: every row is a row
-                    acc_q.append(np.repeat(qidx, d.shape[1]))
-                    acc_i.append(np.tile(ids, len(qb)))
-                    acc_d.append(d.ravel())
-        if acc_q:
-            qall = np.concatenate(acc_q)
-            iall = np.concatenate(acc_i)
-            dall = np.concatenate(acc_d)
+                # f32 d ranks identically to its f64 widening
+                acc.append(cell_top(qidx, ids, d))
+        if acc:
+            qall, iall, dall = (np.concatenate(a) for a in zip(*acc))
             order = np.lexsort((iall, dall, qall))
             qs, is_, ds = qall[order], iall[order], dall[order]
             starts = np.searchsorted(qs, qs, side="left")
             rank = np.arange(len(qs)) - starts
             keep = rank < cap
-            yield pa.record_batch(
-                {
-                    "query_id": qs[keep],
-                    id_col: is_[keep],
-                    "adc_dist_sq": ds[keep],
-                }
-            )
+            yield _pair_batch(qs[keep], is_[keep], ds[keep])
 
     # Spatial task layout: adjacent cells share a task (broadcast-join
     # the driver-computed cell->group map, shuffle the 16 B/row codes
@@ -629,27 +593,9 @@ def pq_search_ivf(
     cand = (
         codes_with_cell.join(F.broadcast(gmap), "cell_id")
         .repartition(n_parts, "_grp")
-        .mapInArrow(
-            _part, schema=f"query_id long, {id_col} long, adc_dist_sq float"
-        )
+        .mapInArrow(_part, _F32_PAIR_SCHEMA)
     )
-    # merge on the narrow f32 column; cast back to double AFTER the
-    # top-k filter (values are f32-representable, so the widening is
-    # exact and the declared output schema/values are unchanged —
-    # only the bytes through the Exchange shrink)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_dist_sq").asc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= kk)
-        .select(
-            "query_id",
-            id_col,
-            F.col("adc_dist_sq").cast("double").alias("adc_dist_sq"),
-            "rn",
-        )
-    )
+    return _adc_columns(_merge_f32(cand, kk), id_col)
 
 
 def write_ivf_layout(codes_with_cell: DataFrame, path: str) -> None:
@@ -807,16 +753,20 @@ def probed_cells(
     """The union of each query's nprobe nearest cells (driver-side
     argpartition over nq x C centroid distances — metadata-sized).
     This is the partition-pruning predicate for read_ivf_cells."""
+    return sorted(int(c) for c in np.unique(_probes(centroids, queries,
+                                                     nprobe)))
+
+
+def _probes(centroids: np.ndarray, queries: np.ndarray,
+            nprobe: int) -> np.ndarray:
+    """(nq, nprobe) indices of each query's nprobe nearest cells
+    (driver-side argpartition over nq x C centroid distances —
+    metadata only)."""
     cents = np.ascontiguousarray(centroids, dtype=np.float64)
     q = np.ascontiguousarray(queries, dtype=np.float64)
-    dq = (
-        (q * q).sum(1)[:, None]
-        + (cents * cents).sum(1)[None, :]
-        - 2.0 * (q @ cents.T)
-    )
+    dq = _pair_scores(q, cents, (cents * cents).sum(1), "l2_sq")
     npb = min(int(nprobe), len(cents))
-    probed = np.argpartition(dq, npb - 1, axis=1)[:, :npb]
-    return sorted(int(c) for c in np.unique(probed))
+    return np.argpartition(dq, npb - 1, axis=1)[:, :npb]
 
 
 def residual_encode(
@@ -841,32 +791,19 @@ def residual_encode(
     cmat = np.ascontiguousarray(centroids, dtype=np.float64)
     cnorm = (cmat * cmat).sum(axis=1)
     books = np.ascontiguousarray(codebooks)
-    m_sub, _, dsub = books.shape
     bnorm = (books * books).sum(2)  # (m, k)
 
     def _enc(batches):
         for rb in batches:
-            n = rb.num_rows
-            if not n:
+            if not rb.num_rows:
                 continue
             mat = matrix(rb[vec_col], name=vec_col)
-            d = (
-                (mat * mat).sum(1)[:, None]
-                + cnorm[None, :]
-                - 2.0 * (mat @ cmat.T)
-            )
-            cell = d.argmin(1)
-            resid = mat - cmat[cell]
-            out = np.empty((n, m_sub), dtype=np.int16)
-            for m in range(m_sub):
-                x = resid[:, m * dsub : (m + 1) * dsub]
-                dm = bnorm[m][None, :] - 2.0 * (x @ books[m].T)  # +‖x‖² const
-                out[:, m] = dm.argmin(1).astype(np.int16)
+            cell = _pair_scores(mat, cmat, cnorm, "l2_sq").argmin(1)
             yield pa.RecordBatch.from_arrays(
                 [
                     rb[id_col].cast(pa.int64()),
                     pa.array(cell.astype(np.int32)),
-                    list_array(out),
+                    list_array(_pq_codes(mat - cmat[cell], books, bnorm)),
                 ],
                 names=[id_col, "cell_id", "code"],
             )
@@ -907,11 +844,7 @@ def ivfpq_build(
         emb, sample_n, id_col=id_col, cols=(vec_col,), n_rows=n_rows
     )
     mat = matrix(sample[vec_col], name=vec_col)
-    d = (
-        (mat * mat).sum(1)[:, None]
-        + (cmat * cmat).sum(1)[None, :]
-        - 2.0 * (mat @ cmat.T)
-    )
+    d = _pair_scores(mat, cmat, (cmat * cmat).sum(1), "l2_sq")
     res_mat = mat - cmat[d.argmin(1)]
     books = _fit_codebooks(
         res_mat, m_sub=m_sub, k_codes=k_codes, n_iter=n_iter
@@ -958,13 +891,8 @@ def _pq_reconstruct(xr: np.ndarray, books: np.ndarray) -> np.ndarray:
         lo, hi = span
         for m in range(m_sub):
             xm = xr[lo:hi, m * dsub : (m + 1) * dsub]
-            c = books[m]
-            d = (
-                (xm * xm).sum(1)[:, None]
-                + cnorms[m][None, :]
-                - 2.0 * (xm @ c.T)
-            )
-            out[lo:hi, m * dsub : (m + 1) * dsub] = c[d.argmin(1)]
+            d = _pair_scores(xm, books[m], cnorms[m], "l2_sq")
+            out[lo:hi, m * dsub : (m + 1) * dsub] = books[m][d.argmin(1)]
 
     chunks = [(lo, min(lo + _LLOYD_CHUNK, n)) for lo in range(0, n, _LLOYD_CHUNK)]
     n_threads = _lloyd_threads()
@@ -1035,13 +963,8 @@ def opq_encode(
 
     @F.arrow_udf("array<smallint>")
     def _code(vs: pa.Array) -> pa.Array:
-        mat = matrix(vs, name=vec_col) @ r
-        out = np.empty((mat.shape[0], m_sub), dtype=np.int16)
-        for m in range(m_sub):
-            xm = mat[:, m * dsub : (m + 1) * dsub]
-            d = cnorm[m][None, :] - 2.0 * (xm @ books[m].T)
-            out[:, m] = d.argmin(1).astype(np.int16)
-        return list_array(out)
+        return list_array(_pq_codes(matrix(vs, name=vec_col) @ r, books,
+                                    cnorm))
 
     return emb.select(F.col(id_col), _code(F.col(vec_col)).alias("code"))
 
@@ -1063,16 +986,9 @@ def opq_search_rerank(
     unrotated; R orthogonal means both spaces rank by the same true
     squared-L2, so the confirm stage needs no inverse rotation)."""
     q = np.ascontiguousarray(queries, dtype=np.float64)
-    n_parts = max(1, codes.rdd.getNumPartitions())
-    cap = max(32, -(-2 * int(rerank_r) // n_parts))
-    cand = pq_search(
-        codes, codebooks, q @ np.asarray(rot, dtype=np.float64),
-        k=int(rerank_r), id_col=id_col, per_part_cap=cap,
-    ).select("query_id", id_col)
-    return exact_rerank(
-        cand, corpus, q, k=k, id_col=id_col, vec_col=vec_col,
-        cand_rows=len(q) * int(rerank_r),
-    )
+    return _adc_rerank(codes, corpus, codebooks,
+                       q @ np.asarray(rot, dtype=np.float64), q, k,
+                       rerank_r, id_col, vec_col)
 
 
 _OPQ_FORMAT = 1

@@ -33,12 +33,13 @@ Distributed shape (all stages cluster-side):
 - **encode**: one Arrow-batched mapInArrow, no shuffle; output is a
   ``binary`` column of exactly ``dim`` bytes — the honest memory
   claim, not an array<int> that costs 4x the story.
-- **search (asymmetric)**: mapInPandas over code partitions; each
-  task reconstructs its batch (lo + code*scale, an (n, dim) f32
-  ndarray) and GEMMs against the float queries — queries stay
-  full-precision, so the only error is the corpus-side rounding.
-  Per-partition top-k then a global window merge: identical contract
-  to pq.pq_search / knn.exact_search.
+- **search (asymmetric)**: knn.scan_topk over code partitions, with
+  the reconstruction as its decode: each task views its batch's codes
+  as an (n, dim) uint8 matrix (arrowvec.codes), reconstructs it
+  (lo + code*scale, f32) and GEMMs it against the queries — queries
+  are only rounded to f32, so the error is the corpus-side rounding.
+  Per-partition top-k then the one global window merge
+  (knn._rank_top_k), the same path as pq.pq_search.
 
 Determinism: min/max is order-independent and rounding is IEEE, so
 the CODES are bit-identical on any partitioning or cluster size.
@@ -54,18 +55,17 @@ tests/test_sq.py, not hash-matched (same policy as PQ/graph).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
+from zvdb_spark.operators.arrowvec import codes as code_matrix
 from zvdb_spark.operators.arrowvec import list_array, matrix
 from zvdb_spark.operators.artifacts import (
     load_npz_manifest,
     save_npz_manifest,
 )
-from zvdb_spark.operators.knn import _topk_by_dist_id
+from zvdb_spark.operators.knn import scan_topk
 
 _SQ8_FORMAT = 1
 
@@ -157,71 +157,39 @@ def sq8_search(
     queries: np.ndarray,
     k: int = 10,
     id_col: str = "vec_id",
-    q_block: int = 512,
 ) -> DataFrame:
     """Asymmetric top-k: (query_id, vec_id, sq_dist_sq, rn), rn 1..k.
 
     Queries stay float (the small side, riding the closure — same
-    contract as pq_search); each partition reconstructs its code
-    batch once and scores every query block against it with one GEMM.
+    contract as pq_search); ``knn.scan_topk`` runs the search with the
+    reconstruction as its decode: each partition reconstructs its code
+    batch once and scores every query chunk against it with one GEMM.
     Per-partition top-k by (dist, id), global window merge moving
     only P x k rows per query."""
     lo_c = np.ascontiguousarray(lo, dtype=np.float64)
     scale = _sq8_scale(lo_c, np.ascontiguousarray(hi, dtype=np.float64))
     q = np.ascontiguousarray(queries, dtype=np.float64)
-    nq, dim = q.shape
+    _, dim = q.shape
     if dim != lo_c.shape[0]:
         raise ValueError(f"query dim {dim} != trained dim {lo_c.shape[0]}")
-    kk = int(k)
-    q_sq = (q * q).sum(axis=1)
 
     # f32 scoring, like the timed exact path (segments GEMM runs f32):
     # the reconstruction error (scale/2 per dim) dwarfs f32 rounding,
     # and f64 here measured ~2x the scan cost for no recall gain
     lo32 = lo_c.astype(np.float32)
     scale32 = scale.astype(np.float32)
-    q32 = q.astype(np.float32)
-    q_sq32 = (q32 * q32).sum(axis=1)
 
-    def _part(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            # one contiguous decode, not a per-row frombuffer loop
-            raw = np.frombuffer(
-                b"".join(pdf["code"]), dtype=np.uint8
-            ).reshape(len(ids), -1).astype(np.float32)
-            vhat = lo32 + raw * scale32  # (n, dim) reconstruction
-            v_sq = (vhat * vhat).sum(axis=1)
-            for q0 in range(0, nq, q_block):
-                qb = q32[q0 : q0 + q_block]
-                d = (
-                    q_sq32[q0 : q0 + q_block][:, None]
-                    + v_sq[None, :]
-                    - 2.0 * (qb @ vhat.T)
-                ).astype(np.float64)
-                top = _topk_by_dist_id(d, ids, kk)
-                rows = np.take_along_axis(d, top, axis=1)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(
-                            np.arange(q0, q0 + len(qb)), top.shape[1]
-                        ),
-                        id_col: ids[top].ravel(),
-                        "sq_dist_sq": rows.ravel(),
-                    }
-                )
+    def decode(batch):
+        raw = code_matrix(batch["code"], dim, name="code")
+        vhat = lo32 + raw.astype(np.float32) * scale32  # (n, dim)
+        return (batch[id_col].to_numpy().astype(np.int64, copy=False),
+                vhat, (vhat * vhat).sum(axis=1))
 
-    cand = codes.mapInPandas(
-        _part, schema=f"query_id long, {id_col} long, sq_dist_sq double"
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sq_dist_sq").asc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= kk)
+    return scan_topk(codes, decode, q.astype(np.float32), k).select(
+        "query_id",
+        F.col("neighbor_id").alias(id_col),
+        F.col("score").alias("sq_dist_sq"),
+        "rn",
     )
 
 
